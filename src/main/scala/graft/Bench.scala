@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -31,26 +30,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // the default 100-entry codegen cache thrashes on a 139-query
-      // suite (each gate compiles several WholeStageCodegen spans, so
-      // by the time rep k+1 revisits a query its classes are evicted
-      // and every rep pays full Janino recompilation): measured on the
-      // 31-gate retrieval subset, 84.0 s -> 43.9 s with the cache
-      // sized to hold the whole suite. A long-lived production session
-      // running a query mix wants the same setting for the same reason
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get()
     // dev-only subset filter (comma-separated names); the driver never
     // sets it, so driver runs always time the full suite. Unknown names
     // fail loudly — a typo timing an empty suite would read as a 0 s
@@ -66,23 +47,31 @@ object Bench {
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
+    // "<query>: <exception class>: <message>"; the first line of the
+    // message only, so a plan-bearing analysis error stays one line
+    def reason(e: Throwable): String =
+      s"${e.getClass.getName}: ${String.valueOf(e.getMessage).linesIterator
+        .nextOption().getOrElse("").take(500)}"
     if (warmup) names.foreach { n =>
-      try run(n) catch { case _: Throwable => }
+      try run(n) catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $n: ${reason(e)}")
+      }
       spark.catalog.clearCache()
     }
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    // query -> reason of its first failure
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     // fixed-work ambient-load canary: a constant-input integer-mix loop
     // (single-threaded, allocation-free, input-independent) timed once
     // per rep, so every BENCH artifact carries its own host factor —
     // the round-9 driver bench ran ~1.9x hot and only an out-of-band
     // study could prove it. Cross-round comparisons normalize by the
     // calibration ratio instead of guessing at ambient load.
-    def calibrate(): Double = {
+    def calibrate(iters: Long): Double = {
       val t0 = System.nanoTime()
       var h = 0x9E3779B97F4A7C15L
       var i = 0L
-      while (i < 400000000L) {
+      while (i < iters) {
         h = h * 6364136223846793005L + 1442695040888963407L
         h ^= h >>> 29
         i += 1
@@ -99,7 +88,7 @@ object Bench {
     // calibration_par_s/calibration_s between two artifacts separates
     // "slower cores" from "contended parallel bandwidth".
     def calibratePar(): Double = {
-      val n = cpus.toInt
+      val n = Sessions.cpus
       val t0 = System.nanoTime()
       val s = spark.sparkContext.parallelize(0 until n, n).map { p =>
         val arr = new Array[Long](1 << 20) // 8 MiB per core, cache-busting
@@ -119,25 +108,14 @@ object Bench {
     var calibPar = Vector.empty[Double]
     calibratePar() // discarded: JIT/scheduler warm-up, so the recorded
     // spread reflects ambient contention rather than first-call compile
-    // MID-REP canary: a 0.1× calibration sample every ~25 queries.
-    // Head-of-rep canaries were blind to contention that arrived
-    // MID-rep twice running (the r11/r12 driver artifacts read idle at
-    // the head while a q38–q76-sized block ran 8–28× hot) — the inline
-    // series labels any contended window inside the artifact itself,
-    // and it is emitted at the END of the JSON line so a tail-truncated
-    // capture still carries it. Cost: ~0.09 s × (queries/25) × reps.
-    def calibrateMid(): Double = {
-      val t0 = System.nanoTime()
-      var h = 0x9E3779B97F4A7C15L
-      var i = 0L
-      while (i < 40000000L) {
-        h = h * 6364136223846793005L + 1442695040888963407L
-        h ^= h >>> 29
-        i += 1
-      }
-      if (h == 42L) print("")
-      (System.nanoTime() - t0) / 1e9
-    }
+    // MID-REP canary: a 0.1× calibration sample (40M iterations) every
+    // ~25 queries. Head-of-rep canaries were blind to contention that
+    // arrived MID-rep twice running (the r11/r12 bench artifacts read
+    // idle at the head while a q38–q76-sized block ran 8–28× hot) — the
+    // inline series labels any contended window inside the artifact
+    // itself, and it is emitted at the END of the JSON line so a
+    // tail-truncated capture still carries it. Cost: ~0.09 s ×
+    // (queries/25) × reps.
     var midCanary = Vector.empty[(Int, Int, Double)] // (rep, qIdx, s)
     var repNo = 0
     var qIdx = 0
@@ -150,7 +128,7 @@ object Bench {
       // one canary sample of each kind at the head of each rep —
       // contention DURING the run shows up as calibration spread, not
       // just a hot start
-      calib = calib :+ calibrate()
+      calib = calib :+ calibrate(400000000L)
       calibPar = calibPar :+ calibratePar()
       // settle: the parallel canary just churned cpus × 8 MiB of
       // cache-busting arrays — without an untimed collection point its
@@ -164,7 +142,11 @@ object Bench {
       // a failure must not read as a speedup: record the query in
       // `failed` and report a -1 sentinel time instead of its (short)
       // time-to-throw
-      try run(name) catch { case _: Throwable => failed += name }
+      try run(name) catch { case e: Throwable =>
+        val r = reason(e)
+        System.err.println(s"[bench] $name: $r")
+        failed.getOrElseUpdate(name, r)
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // isolate queries: drop any persist() a query created so later
       // queries aren't taxed by cache eviction / GC pressure (untimed)
@@ -172,7 +154,7 @@ object Bench {
       times(name) = times(name) :+ dt
       qIdx += 1
       if (qIdx % 25 == 0) midCanary = midCanary :+
-        ((repNo, qIdx, calibrateMid()))
+        ((repNo, qIdx, calibrate(40000000L)))
     }
     def round3(v: Double): Double = math.rint(v * 1000) / 1000
     val results = names.map { name =>
@@ -187,7 +169,10 @@ object Bench {
       s"\"" + n + "\":" + r
     }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedReasons = failed
+      .map { case (n, r) => s"${Verify.jsonString(n)}:${Verify.jsonString(r)}" }
+      .mkString("{", ",", "}")
     val calibS = round3(calib.min)
     val calibSpread = round3(calib.max / calib.min)
     val calibParS = round3(calibPar.min)
@@ -201,7 +186,7 @@ object Bench {
       .mkString("[", ",", "]")
     val midSpread = if (midCanary.isEmpty) -1.0
       else round3(midCanary.map(_._3).max / midCanary.map(_._3).min)
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"reps":$reps,"failed":$failedJson,"calibration_s":$calibS,"calibration_spread":$calibSpread,"calibration_par_s":$calibParS,"calibration_par_spread":$calibParSpread,"sf":"$sfDir","canary_mid_spread":$midSpread,"canary_mid_series":$midJson}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"reps":$reps,"failed":$failedJson,"failed_reasons":$failedReasons,"calibration_s":$calibS,"calibration_spread":$calibSpread,"calibration_par_s":$calibParS,"calibration_par_spread":$calibParSpread,"sf":"$sfDir","canary_mid_spread":$midSpread,"canary_mid_series":$midJson}"""
     println(fullLine)
     // Belt-and-braces: the full artifact also lands in a FILE (the
     // driver's harness keeps only the last 2000 stdout chars — every
@@ -218,20 +203,24 @@ object Bench {
       println(s"bench: could not write $outPath: ${e.getMessage}")
     }
     // FINAL line: a self-contained ≤1800-char JSON that survives the
-    // 2000-char tail capture INTACT — same shape as the full line
-    // (metric/value/unit/queries/sf) so a tail-only parser finds one
-    // complete record. The 142 full query names alone are 2344 bytes,
-    // so the whole map can NEVER fit a 2000-char tail (r14 verdict's
-    // "2-decimal values" prescription underestimates this); the map
-    // here carries as many per-query seconds as fit, MOST EXPENSIVE
-    // FIRST (the queries whose round-over-round and core-scaling
-    // deltas matter), with the omission made explicit. `value` is
-    // still the full-suite total over all queries; the complete map is
-    // the first line above and the artifact file — nothing is removed
-    // or renamed there.
+    // 2000-char tail capture INTACT — the full line's fields
+    // (value/unit/queries/sf) under its own metric name, `total_tail`,
+    // so a tail-only parser finds one complete record and cannot take
+    // it for the full `total` line. The 142 full query names alone are
+    // 2344 bytes, so the whole map can NEVER fit a 2000-char tail (r14
+    // verdict's "2-decimal values" prescription underestimates this);
+    // the map here carries as many per-query seconds as fit, MOST
+    // EXPENSIVE FIRST (the queries whose round-over-round and
+    // core-scaling deltas matter), with the omission made explicit.
+    // `value` is still the full-suite total over all queries; the
+    // complete map is the first line above and the artifact file.
     def round2(v: Double): Double = math.rint(v * 100) / 100
     val byCost = results.sortBy { case (_, v) => -v }
-    val headerLen = 220 + sfDir.length + failedJson.length
+    def tailLine(queries: String, omitted: Int): String =
+      s"""{"metric":"total_tail","value":${round3(total)},"unit":"sec","queries":$queries,"queries_omitted":$omitted,"nqueries":${results.size},"reps":$reps,"failed":$failedJson,"calibration_s":$calibS,"calibration_par_s":$calibParS,"canary_mid_spread":$midSpread,"sf":"$sfDir"}"""
+    // everything but the map's entries; omitted can have at most as
+    // many digits as the query count
+    val headerLen = tailLine("{}", results.size).length
     // 2000-char tail minus sbt's "[info] " prefix on this line and the
     // trailing "[success] Total time: ..." line (~82 chars with its
     // newline) — keep the WHOLE final line inside the surviving window
@@ -246,7 +235,10 @@ object Bench {
     val compactQs = results.filter(p => pickedSet.contains(p._1))
       .map { case (k, v) => s"\"" + k + "\":" + round2(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${round3(total)},"unit":"sec","queries":$compactQs,"queries_omitted":${results.size - picked.size},"nqueries":${results.size},"reps":$reps,"failed":$failedJson,"calibration_s":$calibS,"calibration_par_s":$calibParS,"canary_mid_spread":$midSpread,"sf":"$sfDir"}""")
+    val tail = tailLine(compactQs, results.size - picked.size)
+    require(tail.length <= 1800,
+      s"bench: tail line is ${tail.length} chars, over the 1800 budget")
+    println(tail)
     spark.stop()
   }
 }

@@ -164,8 +164,8 @@ object Cluster {
     * same components — and each exact-canonical id is already the min
     * of its group, so the componentwise min doc is unchanged. Under
     * heavy duplication the LSH pair count drops by the square of the
-    * replication factor (measured in graft.tools.Soak: 10×-replicated
-    * corpus, 8.6 s → 4.9 s end-to-end, the remainder scan-bound on the
+    * replication factor (measured in `graft.tools.Soak dedup10x`:
+    * 10×-replicated corpus, 8.6 s → 4.9 s end-to-end, the remainder scan-bound on the
     * soak's 10-way union). The exact pass is one scan + ONE full-row
     * shuffle on the fingerprint (window-min) — intrinsic: exact dedup
     * must route rows by content key once; everything after shuffles

@@ -320,7 +320,7 @@ object Dedup {
     * (tbl, bucket); vectors rejoin by id only for the verify. The part
     * that must SCALE WITH THE CORPUS is `planesPer`: expected bucket
     * occupancy is N / 2^planesPer, and in-bucket candidate pairs grow
-    * with occupancy SQUARED — the 100× soak (graft.tools.Scale100)
+    * with occupancy SQUARED — the 100× soak (`graft.tools.Soak scale100x`)
     * measured the 4-plane gate tuning at 200k vectors producing ~5
     * billion candidate rows (16 buckets/table × ~12.5k occupancy²)
     * where 14 planes keeps occupancy O(replica-group) and finishes in

@@ -7,7 +7,7 @@ object GateInputs {
 
   /** Spread-read for gate-scale inputs: the driver's sf0.1 parquet
     * tables are ONE row group each, so every tokenization/shingle map
-    * stage would run on one core (tools/ProfileQ108: isolated postings
+    * stage would run on one core (`Soak q108`: isolated postings
     * build 1.4 s serial vs 0.22 s spread). A bare conditional
     * repartition was measured NET-NEGATIVE in round 12 — nothing
     * materialized the exchange, so each consumer branch re-ran the

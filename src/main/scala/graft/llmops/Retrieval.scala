@@ -587,7 +587,7 @@ object Retrieval {
     // candidates, never certify, and land in the existing fbQ fallback
     // — ONE exact scoring pass over the shared impacts, never a double
     // pass. ess_df < n_docs keeps every genuinely sparse query
-    // (Scale100W4's regime: ess_df ≈ 8k vs 500k docs) on the pruning
+    // (`Soak bm25-100x`: ess_df ≈ 8k vs 500k docs) on the pruning
     // path with bit-identical behavior to the pre-check-free form;
     // losslessness never depended on the routing, only costs do
     // (RetrievalSpec pins exact-probe equality in both regimes).
@@ -693,7 +693,7 @@ object Retrieval {
     // covers the corpus for every query, so the round-13 bound-
     // viability pre-check routes the whole batch straight to the
     // single exact fallback pass — the candidate machinery never runs
-    // here (it runs, and wins, in the sparse Scale100W4 regime); the
+    // here (it runs, and wins, in the sparse `Soak bm25-100x`); the
     // hash is route-independent because both paths score the same
     // pre-quantized impacts
     bm25ProbeMaxScore(queryTerms(queries), index, topN = 10,
@@ -947,7 +947,7 @@ object Retrieval {
     * aggregation carries that stream (q117 at 10×-sf0.1: 28 s vs the
     * one-shot's 2.3 s, whose gram semi-join enjoys full-BIGRAM
     * selectivity — the same documented dense-universe degenerate as
-    * q114's bound collapse). On the rare-vocab Scale100W5 soak (100k
+    * q114's bound collapse). On the rare-vocab `Soak positional100x` (100k
     * terms, the real-corpus regime) a 100-phrase batch probes 21.5M
     * held positions in ~4 s, comparable to one one-shot pass — the
     * split's wins there are ingest ([[positionalAppend]] never
@@ -1340,7 +1340,7 @@ object Retrieval {
     * df, stats, and the scoring join — the triangles/duplicatedSpans
     * rule), probe. Production holds the index and calls [[bm25Probe]]
     * directly (the build is the dominant cost at 100× — measured in
-    * Scale100W4).
+    * `Soak bm25-100x`).
     */
   def bm25Channel(queries: DataFrame, corpus: DataFrame, topN: Int,
       k1: Double = 1.2, b: Double = 0.75, maxDf: Long = 0L,
@@ -1434,7 +1434,7 @@ object Retrieval {
     * lesson), shipped as a library operator because ranked-run
     * evaluation without nDCG is incomplete for retrieval users. Spec-
     * pinned against a driver-side replication to 1e-12 instead of
-    * oracle-gated; its DriveVerify line exercises it end-to-end.
+    * oracle-gated.
     *
     * Inputs: `run` = (qid, did, rk); `rel` = (qid, did[, grade]) — a
     * missing grade column means binary relevance (gain 1.0). Output
@@ -1620,8 +1620,8 @@ object Retrieval {
     * selectivity of the FULL n-gram instead of a single token. On the
     * dense gate vocabulary that is the difference between ~1/60 of
     * all positions per phrase token ([[phraseProbe]]'s anchor stream —
-    * fine on real rare vocabularies, measured in Scale100W5) and only
-    * the exact-phrase matches (q120: 40 s → q115-class seconds at
+    * fine on real rare vocabularies, measured in `Soak positional100x`)
+    * and only the exact-phrase matches (q120: 40 s → q115-class seconds at
     * 10×-sf0.1). Persist bucketed by gram for repeated batches; the
     * token-positional [[positionalIndex]] remains the structure for
     * NEAR/w and arbitrary-length phrases.

@@ -783,7 +783,7 @@ object TextOps {
   }
 
   /** Recall-margin diagnostic for the q41 LSH prefilter (run by
-    * `graft.tools.Q41Check`, pinned by TfidfLshSpec): for each of the
+    * `graft.tools.Soak q41`, pinned by TfidfLshSpec): for each of the
     * exact top-`topN` pairs, in how many of the `TfidfLshTables` band
     * tables the two docs share a band ("table collisions"). A pair is
     * recalled iff collisions ≥ 1; the MIN over the true top pairs is

@@ -282,7 +282,7 @@ object Unigram {
     * q74 lesson, and the reason this beats any per-occurrence kernel):
     * the one corpus-sized pass is the map-side-combined word-frequency
     * aggregation; Viterbi then runs once per DISTINCT token — dict
-    * cardinality, not corpus cardinality (the Scale100W9 corpus has
+    * cardinality, not corpus cardinality (the `Soak unigram100x` corpus has
     * 215 occurrences per distinct token; segmenting occurrences paid
     * that factor in DP work — 21.3 s at 500k docs vs 1.1-1.4 s for
     * the dict-first rewrite on an idle window). Returns

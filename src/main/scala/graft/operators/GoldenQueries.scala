@@ -8,7 +8,7 @@ import graft.filters.rubin.RubinBlocks
 import graft.filters.ztf.ZtfFilters
 
 /** Reference-filter golden queries, oracle-gated over the REAL ZTF
-  * alert fixture (`/root/reference/datatest/regular`, 133 alerts) —
+  * alert fixture (`datatest/regular` under [[graft.Fixtures]]) —
   * the q79 pattern applied to the filter catalog: the DuckDB mirror in
   * [[graft.OracleSql]] re-expresses the same predicate cascade in SQL
   * over the same parquet, so the gate certifies the filter semantics
@@ -25,10 +25,10 @@ object GoldenQueries {
     * OracleSql's DuckDB mirror and the test harness derive from this,
     * so the Spark query and its oracle can never read different data.
     */
-  val FixtureDir = "/root/reference/datatest/regular"
+  val FixtureDir = s"${graft.Fixtures.Root}/datatest/regular"
 
   private def fixture(spark: SparkSession): DataFrame =
-    spark.read.parquet(FixtureDir)
+    spark.read.parquet(graft.Fixtures.checked(FixtureDir))
 
   /** q80 — the sn_candidates livestream filter
     * (`livestream/filter_sn_candidates/filter.py:86-104`): SuperNNova
@@ -146,10 +146,10 @@ object GoldenQueries {
     * as [[FixtureDir]]: the DuckDB mirrors read this exact path.
     */
   val RubinFixtureDir =
-    "/root/reference/datatest/rubin_test_data_10_0.parquet"
+    s"${graft.Fixtures.Root}/datatest/rubin_test_data_10_0.parquet"
 
   private def rubinFixture(spark: SparkSession): DataFrame =
-    spark.read.parquet(RubinFixtureDir)
+    spark.read.parquet(graft.Fixtures.checked(RubinFixtureDir))
 
   /** q83 — the Rubin quality/cross-match block vector
     * (`rubin/blocks.py:342-418` + the xmatch blocks at `blocks.py:

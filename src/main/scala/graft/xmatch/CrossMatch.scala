@@ -86,7 +86,7 @@ object Catalogs {
   import org.apache.spark.sql.SparkSession
 
   private def dataDir: String =
-    sys.env.getOrElse("FINK_FILTERS_DATA", "/root/reference/fink_filters")
+    sys.env.getOrElse("FINK_FILTERS_DATA", graft.Fixtures("fink_filters"))
 
   /** TDE list — `filter_known_tde/data/tde.parquet` (name, ra, dec),
     * fixed 5″ radius (`filter_known_tde/filter.py:36`).

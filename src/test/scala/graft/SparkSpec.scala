@@ -19,47 +19,21 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    // driver testdata events.ts is parquet TIMESTAMP(NANOS) — read as
-    // long (same config as Verify/Bench; CoreQueries.events normalizes)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // saveAsTable target for BucketingSpec (static conf — must be set
-    // at session build, and must not pollute the repo checkout)
-    .config("spark.sql.warehouse.dir", tempWarehouse)
-    // hold every spec's codegen classes at once — the default
-    // 100-entry cache forces Janino recompilation across a 400-spec
-    // run (see Bench.scala; same setting as Bench/Verify)
-    .config("spark.sql.codegen.cache.maxEntries", "10000")
-    .getOrCreate()
-
-  /** Per-JVM temp warehouse, removed on JVM exit (DROP TABLE removes
-    * table data, not the directory; aborted runs would otherwise
-    * accumulate bucketed copies of the fixtures under /tmp).
-    */
-  private lazy val tempWarehouse: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile): Unit))
-    dir.toString
-  }
+  lazy val session: SparkSession = Sessions.get()
 
   /** ZTF alert fixture (133 alerts in this checkout — see
     * tools/dev_goldens.py for how expected counts were derived).
     */
   lazy val ztfRegular: DataFrame = {
-    val df = session.read.parquet(graft.operators.GoldenQueries.FixtureDir)
+    val df = session.read.parquet(
+      Fixtures.checked(graft.operators.GoldenQueries.FixtureDir))
     df.cache()
     df
   }
 
   lazy val rubinFixture: DataFrame = {
-    val df = session.read
-      .parquet("/root/reference/datatest/rubin_test_data_10_0.parquet")
+    val df = session.read.parquet(
+      Fixtures.checked(graft.operators.GoldenQueries.RubinFixtureDir))
     df.cache()
     df
   }

@@ -67,7 +67,7 @@ class DereddeningSpec extends SparkSpec {
   }
 
   test("injected ebv column overrides the cosecant model in TDE features") {
-    val tde = spark.read.parquet("/root/reference/datatest/tde")
+    val tde = spark.read.parquet(graft.Fixtures("datatest/tde"))
     val pre = tde.filter(
       graft.filters.ztf.ZtfPhotometryFilters.earlyTdePrefilter.mask(tde))
     def temps(df: org.apache.spark.sql.DataFrame) =
@@ -85,7 +85,7 @@ class DereddeningSpec extends SparkSpec {
   }
 
   test("TDE features: dereddening raises temperature, leaves SNRs/chi2/t0") {
-    val tde = spark.read.parquet("/root/reference/datatest/tde")
+    val tde = spark.read.parquet(graft.Fixtures("datatest/tde"))
     val pre = tde.filter(
       graft.filters.ztf.ZtfPhotometryFilters.earlyTdePrefilter.mask(tde))
     def feats(deredden: Boolean) =

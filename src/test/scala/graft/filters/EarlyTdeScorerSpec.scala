@@ -123,7 +123,7 @@ class EarlyTdeScorerSpec extends SparkSpec {
   }
 
   test("full pipeline on the tde fixture: survivors of prefilter, cuts, score") {
-    val df = spark.read.parquet("/root/reference/datatest/tde")
+    val df = spark.read.parquet(graft.Fixtures("datatest/tde"))
     val pre = FilterRegistry.applyFilter(df, "ztf.early_tde_prefilter").count()
     val out = EarlyTdeScorer.earlyTdeCandidates(df)
     val n = out.count()
@@ -147,7 +147,7 @@ class EarlyTdeScorerSpec extends SparkSpec {
 
   test("trained GBT scorer separates the tde fixture from regular controls") {
     import graft.filters.ztf.TrainedTdeScorer
-    val tde = spark.read.parquet("/root/reference/datatest/tde")
+    val tde = spark.read.parquet(graft.Fixtures("datatest/tde"))
     val regular = SparkSpec.ztfRegular
     val scorer = TrainedTdeScorer.train(tde, regular)
 
@@ -177,7 +177,7 @@ class EarlyTdeScorerSpec extends SparkSpec {
     import org.apache.spark.ml.feature.VectorAssembler
     import org.apache.spark.ml.linalg.Vector
     import graft.filters.ztf.TrainedTdeScorer
-    val tde = spark.read.parquet("/root/reference/datatest/tde")
+    val tde = spark.read.parquet(graft.Fixtures("datatest/tde"))
     val regular = SparkSpec.ztfRegular
     val scorer = TrainedTdeScorer.train(tde, regular)
 
@@ -210,7 +210,7 @@ class EarlyTdeScorerSpec extends SparkSpec {
 
   test("portable JSON artifact round-trips the trained scorer exactly") {
     import graft.filters.ztf.TrainedTdeScorer
-    val tde = spark.read.parquet("/root/reference/datatest/tde")
+    val tde = spark.read.parquet(graft.Fixtures("datatest/tde"))
     val scorer = TrainedTdeScorer.train(tde, SparkSpec.ztfRegular)
 
     val path = java.nio.file.Files

@@ -18,7 +18,7 @@ class HistoryAndMmSpec extends SparkSpec {
 
   test("yso_spicy_candidates keeps 6 of the spicy_yso fixture") {
     val df = spark.read
-      .parquet("/root/reference/datatest/spicy_yso/test_yso_cut.parquet")
+      .parquet(graft.Fixtures("datatest/spicy_yso/test_yso_cut.parquet"))
     assert(df.count() === 26L)
     assert(FilterRegistry.applyFilter(df,
       "ztf.livestream.yso_spicy_candidates").count() === 6L)
@@ -26,7 +26,7 @@ class HistoryAndMmSpec extends SparkSpec {
 
   test("mm module: grb bronze/silver/gold = 4/2/1, gw bronze = 0") {
     val df = spark.read
-      .parquet("/root/reference/datatest/grb/grb_test_data.parquet")
+      .parquet(graft.Fixtures("datatest/grb/grb_test_data.parquet"))
     assert(df.count() === 18L)
     assert(FilterRegistry.applyFilter(df, "ztf.mm.grb_bronze").count() === 4L)
     assert(FilterRegistry.applyFilter(df, "ztf.mm.grb_silver").count() === 2L)

@@ -12,7 +12,7 @@ import graft.SparkSpec
 class PhotometrySpec extends SparkSpec {
 
   test("early_tde_prefilter keeps 4 of the tde fixture") {
-    val df = spark.read.parquet("/root/reference/datatest/tde")
+    val df = spark.read.parquet(graft.Fixtures("datatest/tde"))
     assert(FilterRegistry.applyFilter(df, "ztf.early_tde_prefilter")
       .count() === 4L)
   }

@@ -12,11 +12,11 @@ class RegistryPropertiesSpec extends SparkSpec {
 
   private def fixtureFor(name: String): Option[String] =
     if (name.startsWith("rubin."))
-      Some("/root/reference/datatest/rubin_test_data_10_0.parquet")
+      Some(graft.Fixtures("datatest/rubin_test_data_10_0.parquet"))
     else if (name.startsWith("ztf.mm."))
-      Some("/root/reference/datatest/grb/grb_test_data.parquet")
+      Some(graft.Fixtures("datatest/grb/grb_test_data.parquet"))
     else if (name.startsWith("ztf."))
-      Some("/root/reference/datatest/regular")
+      Some(graft.Fixtures("datatest/regular"))
     else None
 
   test("every bindable filter is deterministic and idempotent on its fixture") {

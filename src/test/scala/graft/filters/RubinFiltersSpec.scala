@@ -38,6 +38,16 @@ class RubinFiltersSpec extends SparkSpec {
   }
   test("b_good_quality == 7") {
     assert(blockCount(B.goodQuality) === 7)
+    // the q83/q84 gate vectors agree: one row per alert, good_quality
+    // sums to the block count, most_likely_sn to the doctest's 0
+    import org.apache.spark.sql.functions.sum
+    val q83 = graft.operators.GoldenQueries.q83RubinBlocks(spark, "")
+    assert(q83.count() === 27L)
+    assert(q83.agg(sum("f_good_quality")).head().getAs[Number](0)
+      .longValue === 7L)
+    assert(graft.operators.GoldenQueries.q84RubinMostLikelySn(spark, "")
+      .agg(sum("f_most_likely_sn")).head().getAs[Number](0)
+      .longValue === 0L)
   }
   test("b_is_rising == 1, b_is_fading == 0") {
     assert(blockCount(B.isRising) === 1)

@@ -4,8 +4,8 @@ import graft.SparkSpec
 import graft.filters.ztf.ZtfFilters
 
 /** Golden-count tests for the ZTF filter catalog against the reference
-  * fixture at /root/reference/datatest/regular (133 alerts in this
-  * checkout).
+  * fixture `datatest/regular` under [[graft.Fixtures]] (133 alerts in
+  * this checkout).
   *
   * The reference doctests quote counts for an older ~330-alert fixture, so
   * the numbers here were re-derived by replicating each filter's pandas

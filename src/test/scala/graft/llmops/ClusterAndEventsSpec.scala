@@ -489,6 +489,9 @@ class ClusterAndEventsSpec extends SparkSpec {
     assert(cover8 <= cover4, s"k=8 radius $cover8 > k=4 $cover4")
     // every point is assigned to exactly one of the k centers
     assert(k8.map(_._3).sum === e.count())
+    // greedy picks spread: k distinct centers, each its own cluster
+    val k6 = run(e, 6)
+    assert(k6.length === 6 && k6.map(_._2).distinct.length === 6, k6)
     intercept[IllegalArgumentException] {
       Cluster.kcenterStats(e.limit(0), 2)
     }

@@ -374,5 +374,10 @@ class CurationSpec extends SparkSpec {
       Curation.dsirSelect(df, col("lang") === "en", k = 20, buckets = 256)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(run(d) === run(d.repartition(7)))
+    // the q140 gate's en-target selection is en-enriched (the
+    // selection-quality sanity its hash gate cannot express)
+    val gate = Curation.qDsirSelect(spark, dir).collect()
+    val nEn = gate.count(_.getString(1) == "en")
+    assert(nEn * 2 > gate.length, s"$nEn en of ${gate.length}")
   }
 }

@@ -267,9 +267,10 @@ class DedupSpec extends SparkSpec {
     // though their ids are smaller than nothing landed — landed always
     // wins), 10 fresh vectors (survive), and replicas of those fresh
     // vectors at higher ids (must drop within-batch, original id wins)
-    val base = spark.read
+    val all = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .filter(col("vec_id") < 50).select("vec_id", "embedding")
+      .select("vec_id", "embedding")
+    val base = all.filter(col("vec_id") < 50)
     val landed = base.filter(col("vec_id") < 40)
     val fresh = base.filter(col("vec_id") >= 40)
       .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
@@ -284,6 +285,12 @@ class DedupSpec extends SparkSpec {
       .select("vec_id").collect().map(_.getLong(0)).sorted
     assert(kept.toSeq === (10040L to 10049L),
       s"kept ${kept.toSeq} — expected exactly the 10 fresh originals")
+    // re-id'd replicas of 20 landed vectors drop; vectors 100..109,
+    // never landed, survive
+    val batch2 = all.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 5000L).as("vec_id"), col("embedding"))
+      .unionByName(all.filter(col("vec_id").between(100, 109)))
+    assert(Dedup.semanticDedupIncrement(batch2, base, 0.9).count() === 10L)
     spark.catalog.clearCache()
   }
 

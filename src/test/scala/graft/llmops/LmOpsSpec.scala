@@ -204,6 +204,11 @@ class LmOpsSpec extends SparkSpec {
     val floored = TextOps.collocations(corpus, minCount = 2L, topK = 10)
       .select("tok_a", "tok_b").as[(String, String)].collect()
     assert(floored.toSeq === Seq(("a", "b")))
+    // the gate corpus: every reported lift is positive
+    val gate = TextOps.collocations(
+      spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text"),
+      minCount = 5L, topK = 20).collect()
+    assert(gate.forall(_.getLong(5) > 0L), "non-positive lift")
   }
 
   test("sequence packing: two-level prefix sum == hand-computed naive " +
@@ -235,6 +240,17 @@ class LmOpsSpec extends SparkSpec {
         bucketWidth = 3L)
       .orderBy("doc_id").select("start_tok").as[Long].collect()
     assert(noSep.toSeq === Seq(0L, 3L, 5L, 6L, 10L))
+    // the gate corpus: starts strictly increase in doc_id order and
+    // every offset sits inside the context window
+    val gate = TextOps.concatAndChunk(
+        spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text"),
+        ctxLen = 512)
+      .orderBy("doc_id").select("start_tok", "seq_offset")
+      .as[(Long, Long)].collect()
+    assert(gate.zip(gate.tail).forall { case (a, b) => a._1 < b._1 },
+      "start_tok must strictly increase")
+    assert(gate.forall { case (_, off) => off >= 0L && off < 512L },
+      "offset outside ctx")
   }
 
   test("collocation counts split: merged landed+batch counts reproduce " +

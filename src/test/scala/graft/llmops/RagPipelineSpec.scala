@@ -119,6 +119,16 @@ class RagPipelineSpec extends SparkSpec {
       "term_run", "vec_run", "fused", "contexts"))
     assert(audit.values.forall(_ > 0L), audit.toString)
     assert(audit("passages") === 12L) // 3 + 9 single-chunk docs
+    // the gate tables: at most k = 3 contexts per query, and some
+    val dir = "/root/testdata/sf0.001"
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
+    val qs = docs.filter(isQuery).select(col("doc_id").as("qid"), col("text"))
+    val gate = RagPipeline.prepare(
+      docs.filter(!isQuery).select("doc_id", "text"), qs,
+      spark.read.parquet(s"$dir/embeddings.parquet"), topC = 12, k = 3)
+    val nCtx = gate.contexts.count()
+    assert(nCtx > 0L && nCtx <= qs.count() * 3, s"$nCtx contexts")
     spark.catalog.clearCache() // release the caller-held passage index
   }
 }

@@ -1029,6 +1029,11 @@ class RetrievalSpec extends SparkSpec {
     assert(pruned.join(impacts,
       Seq("tok", "did", "df", "impact_micro"), "left_anti").isEmpty)
     assert(rows(Retrieval.impactProbe(qTok, pruned, topN = 10)) !== exact)
+    // pruning narrows postings, never the set of answered queries
+    def answered(idx: org.apache.spark.sql.DataFrame): Long =
+      Retrieval.impactProbe(qTok, idx, topN = 5).select("qid").distinct()
+        .count()
+    assert(answered(pruned) === answered(impacts))
     // kept dids per token == driver-side top-K by (impact desc, did)
     val byTok = impacts.select("tok", "did", "impact_micro").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -1100,6 +1105,8 @@ class RetrievalSpec extends SparkSpec {
         r.getLong(3), r.getInt(4))).toSeq.sortBy(_.toString)
     assert(got === expected)
     assert(got.nonEmpty)
+    assert(got.forall(r => BigInt(r._3) > 0),
+      "non-positive QL score on a matching candidate set")
     // unseen-in-collection term: cf = 0 and tf = 0 give a zero factor,
     // so the whole product zeroes — the LM contract (smoothing charges
     // absent-but-seen terms; truly unseen terms annihilate)

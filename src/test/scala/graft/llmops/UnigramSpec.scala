@@ -197,6 +197,8 @@ class UnigramSpec extends SparkSpec {
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val (pieces, _) = Unigram.train(docs, vocabSize = 200,
       seedSize = 800, emRounds = 1)
+    assert(pieces.filter(length(col("piece")) > 1).count() > 0L,
+      "unigram EM learned no multi-char pieces")
     val stats = Unigram.segmentStats(docs, pieces)
     val pieceChars = stats
       .select(sum(length(col("piece")) * col("n"))).head().getLong(0)

@@ -73,6 +73,8 @@ class WordPieceSpec extends SparkSpec {
     val (merges, pieces, _) = WordPiece.train(docs, nMerges = 6)
     assert((top.getString(0), top.getString(1)) === merges.head,
       s"gate top ${top.getString(0)}+${top.getString(1)} vs train ${merges.head}")
+    assert(pieces.exists(_.stripPrefix("##").length > 1),
+      "wordpiece learned no multi-char pieces")
     // application over the training corpus never hits [UNK] (chars
     // are always available) and covers every piece family
     val stats = WordPiece.segmentStats(docs, pieces).collect()

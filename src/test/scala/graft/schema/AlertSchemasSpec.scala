@@ -10,10 +10,10 @@ import graft.filters.FilterRegistry
 class AlertSchemasSpec extends SparkSpec {
 
   private lazy val ztfSchema =
-    AlertSchemas.fromSample(spark, "/root/reference/datatest/regular")
+    AlertSchemas.fromSample(spark, graft.Fixtures("datatest/regular"))
   private lazy val rubinSchema =
     AlertSchemas.fromSample(spark,
-      "/root/reference/datatest/rubin_test_data_10_0.parquet")
+      graft.Fixtures("datatest/rubin_test_data_10_0.parquet"))
 
   test("dotted-path resolution descends structs and struct arrays") {
     assert(AlertSchemas.resolvable(ztfSchema, "candid"))
@@ -43,7 +43,7 @@ class AlertSchemasSpec extends SparkSpec {
   // the multi-messenger filters run on the GRB-joined stream (alerts
   // joined with GCN notices — its own fixture and schema)
   private lazy val grbSchema = AlertSchemas.fromSample(spark,
-    "/root/reference/datatest/grb/grb_test_data.parquet")
+    graft.Fixtures("datatest/grb/grb_test_data.parquet"))
 
   // science-module output columns that POSTDATE the regular fixture
   // (upstream modules add them to the production stream; the filter
@@ -85,7 +85,7 @@ class AlertSchemasSpec extends SparkSpec {
   }
 
   test("validate fails fast with the missing columns named") {
-    val thin = spark.read.parquet("/root/reference/datatest/regular")
+    val thin = spark.read.parquet(graft.Fixtures("datatest/regular"))
       .select("objectId", "candid")
     val e = intercept[IllegalArgumentException] {
       AlertSchemas.validate(thin, "ztf.livestream.sn_candidates")

@@ -18,7 +18,7 @@ class StreamAndPipelineSpec extends SparkSpec {
   test("streaming filters match batch golden counts") {
     val batch = SparkSpec.ztfRegular
     val stream = StreamPipeline.readParquetStream(
-      spark, "/root/reference/datatest/regular", batch.schema)
+      spark, graft.Fixtures("datatest/regular"), batch.schema)
     val notifier = new StreamPipeline.CountingNotifier
     val filters = Seq("ztf.quality_cuts", "ztf.livestream.sn_candidates",
       "ztf.livestream.kn_candidates")
@@ -34,7 +34,7 @@ class StreamAndPipelineSpec extends SparkSpec {
   test("parquet topic fan-out: passing alerts land per topic directory") {
     val batch = SparkSpec.ztfRegular
     val stream = StreamPipeline.readParquetStream(
-      spark, "/root/reference/datatest/regular", batch.schema)
+      spark, graft.Fixtures("datatest/regular"), batch.schema)
     val base = Files.createTempDirectory("graft-topics").toString
     val notifier = new StreamPipeline.ParquetTopicNotifier(
       base, selectColumns = Seq("objectId", "candid"))
@@ -78,7 +78,7 @@ class StreamAndPipelineSpec extends SparkSpec {
       "ztf.livestream.new_hostless" -> 1L)
     val batch = SparkSpec.ztfRegular
     val stream = StreamPipeline.readParquetStream(
-      spark, "/root/reference/datatest/regular", batch.schema)
+      spark, graft.Fixtures("datatest/regular"), batch.schema)
     val base = Files.createTempDirectory("graft-catalog").toString
     val notifier = new StreamPipeline.ParquetTopicNotifier(
       base, selectColumns = Seq("objectId", "candid"))
@@ -100,7 +100,7 @@ class StreamAndPipelineSpec extends SparkSpec {
 
   test("anomaly pipeline: distributed top-k with per-object dedup") {
     val df = spark.read.option("mergeSchema", "true")
-      .parquet("/root/reference/datatest/regular")
+      .parquet(graft.Fixtures("datatest/regular"))
     val (top, median) = AnomalyPipeline.select(df, threshold = 5)
     val rows = top.select("objectId", "anomaly_score").collect()
     // the fixture has 9 scored alerts over exactly 4 distinct objects

@@ -5,14 +5,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.llmops.Retrieval
 
-/** DEV-ONLY single-JVM interleaved A/B harness for optimization
-  * round 14: ambient host noise on this sandbox swamps any sub-second
-  * cross-JVM bench delta (measured calibration_par spreads of 1.2-1.5
-  * between back-to-back sbt runs), so variants are compared INSIDE one
-  * session — both plans built over the same warm caches, timed
-  * alternately A,B,A,B,... and reported as min/median over rounds.
-  * The OLD variant bodies are copied verbatim from commit dcefe81
-  * (the pre-change HEAD) so the comparison is code-exact.
+/** DEV-ONLY single-JVM interleaved A/B harness: ambient host noise
+  * swamps any sub-second cross-JVM bench delta (measured
+  * calibration_par spreads of 1.2-1.5 between back-to-back sbt runs),
+  * so variants are compared INSIDE one session — both plans built over
+  * the same warm caches, timed alternately A,B,A,B,... and reported as
+  * min/median over rounds. Each OLD body is copied verbatim from the
+  * commit named at it, so the comparison is code-exact. Only pairs
+  * whose old side still differs from shipped code are kept; the
+  * rejected r15 treatments (q108/q111/q114/q123/q128/q130/q135, whose
+  * old side IS the shipped code) are recorded in OPTIMIZATION_r15.md.
   *
   * Run: sbt 'Test/runMain graft.tools.AbVariants q134 12'
   */
@@ -166,76 +168,6 @@ object AbVariants {
       .orderBy("qid", "rk")
   }
 
-  // ---- old (f8f7724) MaxScore probe: full-index df0 + impacts ----
-  private def bm25ProbeMaxScoreOld(qTok: DataFrame, postings: DataFrame,
-      topN: Int, k1: Double = 1.2, b: Double = 0.75,
-      essential: Int = 2): DataFrame = {
-    val (df0, stats) = Retrieval.postingsInvariants(postings)
-    val dfD = col("df").cast("double")
-    val idf = (col("n_docs") - dfD + lit(0.5)) / (dfD + lit(0.5))
-    val qTerms = broadcast(broadcast(qTok).join(df0, "tok")
-      .crossJoin(broadcast(stats))
-      .select(col("qid"), col("tok"), col("df"),
-        (floor(idf * lit(k1 + 1.0) * lit(1000000.0)) + lit(1L))
-          .cast("long").as("ub_micro"),
-        col("n_docs"))
-      .localCheckpoint(false))
-    val wT = Window.partitionBy("qid")
-      .orderBy(col("ub_micro").desc, col("tok"))
-    val rankedTerms = qTerms.withColumn("trm_rank",
-      row_number().over(wT))
-    val viableQ = rankedTerms.filter(col("trm_rank") <= essential)
-      .groupBy("qid").agg(sum(col("df")).as("ess_df"),
-        first(col("n_docs")).as("n_docs"))
-      .filter(col("ess_df") < col("n_docs"))
-      .select("qid")
-      .localCheckpoint(false)
-    val impacts = Retrieval.impactIndexWith(postings, df0, stats, k1, b)
-      .localCheckpoint(false)
-    if (viableQ.isEmpty)
-      return Retrieval.impactProbe(qTok, impacts, topN)
-        .select("qid", "did", "bm25_micro", "n_match", "rk")
-    val ess = rankedTerms.filter(col("trm_rank") <= essential)
-      .join(broadcast(viableQ), "qid")
-      .select("qid", "tok")
-    val bq = rankedTerms.groupBy("qid")
-      .agg(sum(when(col("trm_rank") > essential, col("ub_micro"))
-        .otherwise(lit(0L))).as("b_micro"))
-    val cand = broadcast(ess).join(postings, "tok")
-      .select("qid", "did").distinct()
-      .localCheckpoint(false)
-    val wS = Window.partitionBy("qid")
-      .orderBy(col("bm25_micro").desc, col("did"))
-    val candDids = broadcast(cand.select("did").distinct())
-    val candImp = impacts.join(candDids, "did")
-    val candRanked = candImp.join(cand, "did")
-      .join(qTerms.select("qid", "tok"), Seq("qid", "tok"))
-      .groupBy("qid", "did")
-      .agg(sum(col("impact_micro")).as("bm25_micro"),
-        count(lit(1)).as("n_match"))
-      .withColumn("rk", row_number().over(wS))
-      .filter(col("rk") <= topN)
-      .localCheckpoint(false)
-    val tq = candRanked.filter(col("rk") === topN)
-      .select(col("qid"), col("bm25_micro").as("t_micro"))
-    val okQ = bq.join(tq, "qid")
-      .filter(col("b_micro") < col("t_micro")).select("qid")
-      .localCheckpoint(false)
-    val pruned = candRanked
-      .join(broadcast(okQ), "qid")
-      .select("qid", "did", "bm25_micro", "n_match", "rk")
-    val fbQ = qTok.select("qid").distinct()
-      .join(okQ, Seq("qid"), "left_anti")
-      .localCheckpoint(false)
-    if (fbQ.isEmpty) pruned
-    else {
-      val fallback = Retrieval.impactProbe(
-        qTok.join(broadcast(fbQ), "qid"), impacts, topN)
-        .select("qid", "did", "bm25_micro", "n_match", "rk")
-      pruned.unionByName(fallback)
-    }
-  }
-
   // ---- old (0f98767) pageRankInt: per-iteration degree join, three
   // setup checkpoints, unpartitioned checkpoint relations ----
   private def pageRankIntOld(edges: DataFrame, iters: Int,
@@ -283,139 +215,11 @@ object AbVariants {
       .select(col("node").as("part_key"), col("pr").as("rank_scaled"))
   }
 
-  private def gateSplit(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val d = graft.llmops.GateInputs.spread(
-      spark.read.parquet(s"$dir/documents.parquet"))
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    (d.filter(isQuery).select(col("doc_id").as("qid"), col("text")),
-      d.filter(!isQuery).select(col("doc_id").as("did"), col("text")))
-  }
-
-  // ---- old (0f98767) prfExpand: ONE shared full-vocabulary df ----
-  private def prfExpandOld(queries: DataFrame, postings: DataFrame,
-      fbDocs: Int, fbTerms: Int, topN: Int): DataFrame = {
-    val qTok = Retrieval.queryTerms(queries)
-    val (df0p, statsP) = Retrieval.postingsInvariants(postings)
-    val df0 = df0p.localCheckpoint(false)
-    val stats = statsP.localCheckpoint(false)
-    val run1 = Retrieval.bm25ScoreTerms(qTok, postings, df0, stats,
-        fbDocs)
-      .select("qid", "did")
-    val mined = broadcast(run1).join(postings, "did")
-      .join(qTok.withColumnRenamed("qid", "q2")
-          .withColumnRenamed("tok", "t2"),
-        col("qid") === col("q2") && col("tok") === col("t2"),
-        "left_anti")
-      .groupBy("qid", "tok")
-      .agg(sum(col("tf")).as("mass"))
-    val wE = Window.partitionBy("qid")
-      .orderBy(col("mass").desc, col("tok"))
-    val expansion = mined.withColumn("erk", row_number().over(wE))
-      .filter(col("erk") <= fbTerms)
-      .select("qid", "tok")
-    Retrieval.bm25ScoreTerms(qTok.unionByName(expansion).distinct(),
-      postings, df0, stats, topN)
-  }
-
-  private def qPrfExpansionOld(spark: SparkSession, dir: String): DataFrame = {
-    val (queries, corpus) = gateSplit(spark, dir)
-    val index = Retrieval.postingsIndex(corpus).persist()
-    prfExpandOld(queries, index, fbDocs = 5, fbTerms = 3, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
-      .orderBy("qid", "rk")
-  }
-
-  // ---- old (0f98767) q123/q128/q135: full-vocabulary impact
-  // quantization (and champion pruning) before the query-term probe ----
-  private def qBm25ImpactOld(spark: SparkSession, dir: String): DataFrame = {
-    val (queries, corpus) = gateSplit(spark, dir)
-    val landed = Retrieval.postingsIndex(
-      corpus.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val postings = Retrieval.postingsAppend(
-      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
-    val impacts = Retrieval.impactIndex(postings).persist()
-    Retrieval.impactProbe(Retrieval.queryTerms(queries), impacts, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
-      .orderBy("qid", "rk")
-  }
-
-  private def qBm25PrunedOld(spark: SparkSession, dir: String): DataFrame = {
-    val (queries, corpus) = gateSplit(spark, dir)
-    val pruned = Retrieval.prunedImpactIndex(
-      Retrieval.impactIndex(Retrieval.postingsIndex(corpus)),
-      keepTop = 24).persist()
-    Retrieval.impactProbe(Retrieval.queryTerms(queries), pruned, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
-      .orderBy("qid", "rk")
-  }
-
-  private def qBm25TieredOld(spark: SparkSession, dir: String): DataFrame = {
-    val (queries, corpus) = gateSplit(spark, dir)
-    val impacts = Retrieval.impactIndex(
-      Retrieval.postingsIndex(corpus)).persist()
-    val pruned = Retrieval.prunedImpactIndex(impacts, keepTop = 24).persist()
-    Retrieval.tieredImpactProbe(Retrieval.queryTerms(queries), impacts,
-        pruned, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"), col("tier"))
-      .orderBy("qid", "rk")
-  }
-
-  // ---- old (b38542e^) bm25ProbeTerms: qTok derived once per consumer
-  // (the df semi filter and the scoring broadcast each re-run the
-  // query tokenization) ----
-  private def bm25ProbeTermsOld(qTok: DataFrame, postings: DataFrame,
-      topN: Int): DataFrame = {
-    val (_, stats) = Retrieval.postingsInvariants(postings)
-    val dfQ = postings
-      .join(broadcast(qTok.select("tok")), Seq("tok"), "left_semi")
-      .groupBy("tok").agg(count(lit(1)).as("df"))
-    Retrieval.bm25ScoreTerms(qTok, postings, dfQ, stats, topN)
-  }
-
-  private def qBm25Old(spark: SparkSession, dir: String): DataFrame = {
-    val (queries, corpus) = gateSplit(spark, dir)
-    bm25ProbeTermsOld(Retrieval.queryTerms(queries),
-        Retrieval.postingsIndex(corpus).persist(), topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
-      .orderBy("qid", "rk")
-  }
-
-  private def qBm25UpsertedOld(spark: SparkSession, dir: String): DataFrame = {
-    val d = graft.llmops.GateInputs.spread(
-      spark.read.parquet(s"$dir/documents.parquet"))
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"), col("source"))
-    val full = Retrieval.postingsIndex(corpus.select("did", "text"))
-    val updated = corpus.filter(pmod(col("did"), lit(10L)) === 3L)
-      .select(col("did"),
-        concat(col("text"), lit(" "), col("source")).as("text"))
-    val index = Retrieval.indexUpsert(updated, full).persist()
-    bm25ProbeTermsOld(Retrieval.queryTerms(queries), index, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
-      .orderBy("qid", "rk")
-  }
-
   def main(args: Array[String]): Unit = {
     val which = args.headOption.getOrElse("q134")
     val rounds = if (args.length > 1) args(1).toInt else 12
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.get()
     val variants: Seq[(String, () => DataFrame)] = which match {
       case "q134" => Seq(
         "old" -> (() => qMinMaxFusionOld(spark, sf)),
@@ -445,23 +249,13 @@ object AbVariants {
       case "q133" => Seq(
         "old" -> (() => qBm25ShardedOld(spark, sf)),
         "new" -> (() => graft.SparkEntry.queries("q133_bm25_sharded")(spark, sf)))
-      // 100×-scale sharded probe: the Scale100W8 corpus (500k docs,
-      // 100k-term rare vocabulary + stopword pool) — the regime where
-      // the full-vocabulary df roll-up actually shows. Postings are
-      // persisted ONCE outside the timed region (the W8 protocol: the
-      // probe is the operator under test, the index is held state).
+      // 100×-scale sharded probe: the `Soak maintain100x` corpus (500k
+      // docs, 100k-term rare vocabulary + stopword pool) — the regime
+      // where the full-vocabulary df roll-up actually shows. Postings
+      // are persisted ONCE outside the timed region (the probe is the
+      // operator under test, the index is held state).
       case "q133x" =>
-        val rare = transform(sequence(lit(0), lit(39)),
-          i => concat(lit("t"), substring(md5(
-            (((col("doc_id") / 50).cast("long") * 40 + i) % 100000)
-              .cast("string")), 1, 8)))
-        val stop = transform(sequence(lit(0), lit(2)),
-          i => concat(lit("the"), pmod(col("doc_id") + i, lit(10))
-            .cast("string")))
-        val corpus = spark.range(500000L).toDF("doc_id")
-          .select(col("doc_id").as("did"),
-            concat_ws(" ", concat(rare, stop)).as("text"))
-          .localCheckpoint()
+        val corpus = Soak.rareCorpus()
         val queries = corpus.filter(col("did") % 5000 === 0)
           .select(col("did").as("qid"), col("text")).localCheckpoint()
         val postings = Retrieval.postingsIndex(corpus).persist()
@@ -472,182 +266,18 @@ object AbVariants {
           "old" -> (() => bm25ShardedProbeOld(queries, shards, topN = 10)),
           "new" -> (() => Retrieval.bm25ShardedProbe(queries, shards,
             topN = 10)))
-      // q114 at gate scale (dense tiny vocab: every query routes to
-      // the exact fallback — measures the df/impacts pruning on the
-      // fallback path)
-      case "q114" =>
-        val d = spark.read.parquet(s"$sf/documents.parquet")
-        val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-        val queries = d.filter(isQuery)
-          .select(col("doc_id").as("qid"), col("text"))
-        val corpus = d.filter(!isQuery)
-          .select(col("doc_id").as("did"), col("text"))
-        Seq(
-          "old" -> (() => {
-            val index = Retrieval.postingsIndex(corpus).persist()
-            bm25ProbeMaxScoreOld(Retrieval.queryTerms(queries), index,
-              topN = 10, essential = 40).orderBy("qid", "rk")
-          }),
-          "new" -> (() => {
-            val index = Retrieval.postingsIndex(corpus).persist()
-            Retrieval.bm25ProbeMaxScore(Retrieval.queryTerms(queries),
-              index, topN = 10, essential = 40).orderBy("qid", "rk")
-          }))
-      // q114 at 100× (Scale100W4 sparse regime: certificate holds,
-      // candidate machinery runs — measures the pruning where MaxScore
-      // actually wins)
-      case "q114x" =>
-        val rare = transform(sequence(lit(0), lit(39)),
-          i => concat(lit("t"), substring(md5(
-            (((col("doc_id") / 50).cast("long") * 40 + i) % 100000)
-              .cast("string")), 1, 8)))
-        val stop = transform(sequence(lit(0), lit(2)),
-          i => concat(lit("the"), pmod(col("doc_id") + i, lit(10))
-            .cast("string")))
-        val corpus = spark.range(500000L).toDF("doc_id")
-          .select(col("doc_id").as("did"),
-            concat_ws(" ", concat(rare, stop)).as("text"))
-          .localCheckpoint()
-        val queries = corpus.filter(col("did") % 5000 === 0)
-          .select(col("did").as("qid"), col("text")).localCheckpoint()
-        val postings = Retrieval.postingsIndex(corpus).persist()
-        println(s"postings rows: ${postings.count()}")
-        val qTok = Retrieval.queryTerms(queries).localCheckpoint()
-        Seq(
-          "old" -> (() => bm25ProbeMaxScoreOld(qTok, postings,
-            topN = 20, essential = 40)),
-          "new" -> (() => Retrieval.bm25ProbeMaxScore(qTok, postings,
-            topN = 20, essential = 40)))
-      // q111 at 100× (the Scale100W4 sparse regime: 500k docs, 100k-term
-      // vocabulary + stopword pool) — the scale the df pruning targets.
-      // Postings persisted outside the timed region (the W8 protocol).
-      case "q111x" =>
-        val rare = transform(sequence(lit(0), lit(39)),
-          i => concat(lit("t"), substring(md5(
-            (((col("doc_id") / 50).cast("long") * 40 + i) % 100000)
-              .cast("string")), 1, 8)))
-        val stop = transform(sequence(lit(0), lit(2)),
-          i => concat(lit("the"), pmod(col("doc_id") + i, lit(10))
-            .cast("string")))
-        val corpus = spark.range(500000L).toDF("doc_id")
-          .select(col("doc_id").as("did"),
-            concat_ws(" ", concat(rare, stop)).as("text"))
-          .localCheckpoint()
-        val queries = corpus.filter(col("did") % 5000 === 0)
-          .select(col("did").as("qid"), col("text")).localCheckpoint()
-        val postings = Retrieval.postingsIndex(corpus).persist()
-        println(s"postings rows: ${postings.count()}")
-        Seq(
-          "old" -> (() => prfExpandOld(queries, postings,
-            fbDocs = 5, fbTerms = 3, topN = 10)),
-          "new" -> (() => Retrieval.prfExpand(queries, postings,
-            fbDocs = 5, fbTerms = 3, topN = 10)))
-      // q123/q128-family pruning at 100×: full-vocabulary impact
-      // quantization + champion-list window vs the query-term-pruned
-      // build (impacts materialized via eager localCheckpoint in BOTH
-      // variants so each round's relation is GC-reclaimable; postings
-      // held persisted per the W8 protocol).
-      case "q128x" =>
-        val rare = transform(sequence(lit(0), lit(39)),
-          i => concat(lit("t"), substring(md5(
-            (((col("doc_id") / 50).cast("long") * 40 + i) % 100000)
-              .cast("string")), 1, 8)))
-        val stop = transform(sequence(lit(0), lit(2)),
-          i => concat(lit("the"), pmod(col("doc_id") + i, lit(10))
-            .cast("string")))
-        val corpus = spark.range(500000L).toDF("doc_id")
-          .select(col("doc_id").as("did"),
-            concat_ws(" ", concat(rare, stop)).as("text"))
-          .localCheckpoint()
-        val queries = corpus.filter(col("did") % 5000 === 0)
-          .select(col("did").as("qid"), col("text")).localCheckpoint()
-        val postings = Retrieval.postingsIndex(corpus).persist()
-        println(s"postings rows: ${postings.count()}")
-        val qTok = Retrieval.queryTerms(queries).localCheckpoint()
-        Seq(
-          "old" -> (() => {
-            val pruned = Retrieval.prunedImpactIndex(
-              Retrieval.impactIndex(postings), keepTop = 24)
-              .localCheckpoint()
-            Retrieval.impactProbe(qTok, pruned, topN = 10)
-          }),
-          "new" -> (() => {
-            val qPost = postings.join(broadcast(qTok.select("tok")),
-              Seq("tok"), "left_semi")
-            val df0 = qPost.groupBy("tok").agg(count(lit(1)).as("df"))
-            val stats = Retrieval.postingsInvariants(postings)._2
-            val pruned = Retrieval.prunedImpactIndex(
-              Retrieval.impactIndexWith(qPost, df0, stats), keepTop = 24)
-              .localCheckpoint()
-            Retrieval.impactProbe(qTok, pruned, topN = 10)
-          }))
-      // q123's shape at 100×: the FULL impact relation materializes in
-      // the old variant (localCheckpoint here, persist in the gate —
-      // same 21.5M-row fill) vs the query-term-pruned build.
-      case "q123x" =>
-        val rare = transform(sequence(lit(0), lit(39)),
-          i => concat(lit("t"), substring(md5(
-            (((col("doc_id") / 50).cast("long") * 40 + i) % 100000)
-              .cast("string")), 1, 8)))
-        val stop = transform(sequence(lit(0), lit(2)),
-          i => concat(lit("the"), pmod(col("doc_id") + i, lit(10))
-            .cast("string")))
-        val corpus = spark.range(500000L).toDF("doc_id")
-          .select(col("doc_id").as("did"),
-            concat_ws(" ", concat(rare, stop)).as("text"))
-          .localCheckpoint()
-        val queries = corpus.filter(col("did") % 5000 === 0)
-          .select(col("did").as("qid"), col("text")).localCheckpoint()
-        val postings = Retrieval.postingsIndex(corpus).persist()
-        println(s"postings rows: ${postings.count()}")
-        val qTok = Retrieval.queryTerms(queries).localCheckpoint()
-        Seq(
-          "old" -> (() => {
-            val impacts = Retrieval.impactIndex(postings).localCheckpoint()
-            Retrieval.impactProbe(qTok, impacts, topN = 10)
-          }),
-          "new" -> (() => {
-            val qPost = postings.join(broadcast(qTok.select("tok")),
-              Seq("tok"), "left_semi")
-              .localCheckpoint(false) // the shipped q123 shape
-            val df0 = qPost.groupBy("tok").agg(count(lit(1)).as("df"))
-            val stats = Retrieval.postingsInvariants(postings)._2
-            val impacts = Retrieval.impactIndexWith(qPost, df0, stats)
-              .localCheckpoint()
-            Retrieval.impactProbe(qTok, impacts, topN = 10)
-          }))
-      case "q108" => Seq(
-        "old" -> (() => qBm25Old(spark, sf)),
-        "new" -> (() => graft.SparkEntry.queries("q108_bm25")(spark, sf)))
-      case "q130" => Seq(
-        "old" -> (() => qBm25UpsertedOld(spark, sf)),
-        "new" -> (() => graft.SparkEntry.queries("q130_index_upsert")(spark, sf)))
       case "q96" => Seq(
         "old" -> (() => q96PageRankOld(spark, sf)),
         "new" -> (() => graft.SparkEntry.queries("q96_pagerank")(spark, sf)))
-      case "q111" => Seq(
-        "old" -> (() => qPrfExpansionOld(spark, sf)),
-        "new" -> (() => graft.SparkEntry.queries("q111_prf_expansion")(spark, sf)))
-      case "q123" => Seq(
-        "old" -> (() => qBm25ImpactOld(spark, sf)),
-        "new" -> (() => graft.SparkEntry.queries("q123_bm25_impact")(spark, sf)))
-      case "q128" => Seq(
-        "old" -> (() => qBm25PrunedOld(spark, sf)),
-        "new" -> (() => graft.SparkEntry.queries("q128_bm25_pruned")(spark, sf)))
-      case "q135" => Seq(
-        "old" -> (() => qBm25TieredOld(spark, sf)),
-        "new" -> (() => graft.SparkEntry.queries("q135_bm25_tiered")(spark, sf)))
       case other => sys.error(s"unknown variant set: $other")
     }
     def time(f: () => DataFrame): Double = {
       val t0 = System.nanoTime()
       f().write.mode("overwrite").format("noop").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      // the 100× cases hold their postings index persisted across
-      // rounds (the W8 protocol: the index is held state, the probe
-      // is timed)
-      if (!Set("q133x", "q114x", "q111x", "q128x", "q123x").contains(which))
-        spark.catalog.clearCache()
+      // the 100× case holds its postings index persisted across
+      // rounds (the index is held state, the probe is timed)
+      if (which != "q133x") spark.catalog.clearCache()
       dt
     }
     // warm both

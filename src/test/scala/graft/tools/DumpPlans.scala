@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: write `.explain("formatted")` of every (or a subset of)
   * SparkEntry query to plans/<tag>/<name>_<suffix>.txt — the committed
@@ -15,12 +14,7 @@ object DumpPlans {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.get()
     val dir = Paths.get(s"plans/$tag")
     Files.createDirectories(dir)
     graft.SparkEntry.queries.toSeq.sortBy(_._1)

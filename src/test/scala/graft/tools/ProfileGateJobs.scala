@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: per-JOB cost breakdown of one gate query at sf0.1 —
   * where the fixed per-gate overhead (the r12→r13 bench-ratio driver)
@@ -25,12 +24,7 @@ object ProfileGateJobs {
     // (saves a JVM+session start per gate when surveying a family)
     val names = args.headOption.getOrElse("q108_bm25").split(",").toSeq
     val sf = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.get()
     val starts = scala.collection.concurrent.TrieMap[Int, Long]()
     val jobs = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     val stageOfJob = scala.collection.concurrent.TrieMap[Int, Int]()

@@ -13,7 +13,7 @@ import graft.filters.ztf.ZtfXmatchFilters
 class CrossMatchSpec extends SparkSpec {
 
   test("known_tde: 1 of 21 fixture alerts matches AT 2020mot") {
-    val df = spark.read.parquet("/root/reference/datatest/tde")
+    val df = spark.read.parquet(graft.Fixtures("datatest/tde"))
     val out = ZtfXmatchFilters.knownTde(Catalogs.knownTde(spark))(df)
     val names = out.select("tde").collect().map(_.getString(0))
     assert(names.length === 1)
@@ -22,14 +22,14 @@ class CrossMatchSpec extends SparkSpec {
   }
 
   test("symbiotic: 19 of 20 fixture alerts match") {
-    val df = spark.read.parquet("/root/reference/datatest/symbiotic")
+    val df = spark.read.parquet(graft.Fixtures("datatest/symbiotic"))
     val enriched = ZtfXmatchFilters.withSymbiotic(df, Catalogs.symbiotic(spark))
     assert(enriched.count() === 20)
     assert(enriched.filter(col("symbiotic") =!= "Unknown").count() === 19)
   }
 
   test("dwarf_agn: 1 of 1 fixture alert matches") {
-    val df = spark.read.parquet("/root/reference/datatest/dwarf_agn")
+    val df = spark.read.parquet(graft.Fixtures("datatest/dwarf_agn"))
     val out = ZtfXmatchFilters.dwarfAgn(Catalogs.dwarfAgn(spark))(df)
     assert(out.count() === 1)
   }
