@@ -45,7 +45,7 @@ object CorpusPipeline {
       .withColumn("__reason", TextOps.qualityReason(col("n_tokens"),
         col("mwl"), col("digit_ratio"), col("sw_hits")))
       .drop("n_tokens", "mwl", "digit_ratio", "sw_hits")
-    val keep = docs.columns.map(col)
+    val keep = docs.columns.toIndexedSeq.map(col)
     val qualityDropped = gated.filter(col("__reason") =!= "ok")
       .select(col("doc_id"), lit("quality").as("stage"),
         col("__reason").as("reason"))

@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -23,6 +26,13 @@ object StreamPipeline {
   /** Where passing alerts go. Implementations must be serializable
     * driver-side objects (foreachBatch runs on the driver; the DataFrame
     * it hands over is distributed).
+    *
+    * Concurrency contract: [[run]] calls `notify` exactly once per
+    * (micro-batch, filter), but the calls for different filters of the
+    * SAME micro-batch may overlap, each on its own driver thread, so an
+    * implementation must be safe to call concurrently (distinct filters
+    * write distinct topics). Micro-batches stay sequential: no call of
+    * batch n+1 starts before every call of batch n has returned.
     */
   trait Notifier extends Serializable {
     /** Called once per (micro-batch, filter) with the PASSING alerts. */
@@ -71,33 +81,83 @@ object StreamPipeline {
     * distribution loop. Returns the started query (AvailableNow by
     * default: drain what exists, then stop — tests and nightly replays;
     * pass `Trigger.ProcessingTime(..)` for a live stream).
+    *
+    * Each micro-batch is persisted once and its (batch, filter) notify
+    * calls run side by side on a pool made for that batch, at most
+    * `2 × defaultParallelism` threads (a topic write is one small job,
+    * so the scheduler needs more of them in flight than it has cores to
+    * stay busy). The batch waits for every call, unpersists, and then
+    * fails with the first failure, the others attached as suppressed.
     */
   def run(
       stream: DataFrame,
       filterNames: Seq[String],
       notifier: Notifier,
       trigger: Trigger = Trigger.AvailableNow(),
-      checkpointDir: Option[String] = None,
-      validateBinding: Boolean = true): StreamingQuery = {
+      checkpointDir: Option[String] = None): StreamingQuery = {
     // pre-flight: every requested filter must bind against this
     // stream's schema (the §3.1 name-binding step, checked BEFORE the
     // query starts — a misconfigured filter list fails here with the
     // missing columns named, not per micro-batch)
-    if (validateBinding) filterNames.foreach { n =>
+    filterNames.foreach { n =>
       val missing = graft.schema.AlertSchemas.missingColumns(stream.schema, n)
       require(missing.isEmpty,
         s"filter '$n' cannot bind against this stream: missing " +
           missing.mkString(", "))
     }
+    val threads = math.max(1, math.min(
+      2 * stream.sparkSession.sparkContext.defaultParallelism,
+      filterNames.size))
     var w = stream.writeStream.trigger(trigger)
     checkpointDir.foreach(d => w = w.option("checkpointLocation", d))
     w.foreachBatch { (batch: DataFrame, batchId: Long) =>
       // one pass per filter over the SAME cached micro-batch: scan once
       val cached = batch.persist()
-      try filterNames.foreach { name =>
-        notifier.notify(name, batchId,
+      try fanOut(s"graft-fanout-$batchId", threads, filterNames.map { name =>
+        () => notifier.notify(name, batchId,
           FilterRegistry.applyFilter(cached, name))
-      } finally { cached.unpersist(); () }
+      }) finally { cached.unpersist(); () }
     }.start()
+  }
+
+  /** Runs `calls` on a pool of `threads` daemon threads named
+    * `<name>-<n>` and waits for all of them; then rethrows the first
+    * failure (in call order) with the other failures suppressed on it.
+    *
+    * The pool is created here, on the calling thread, so its threads
+    * inherit that thread's Spark local properties (each gets a clone):
+    * the streaming query's job group, so `StreamingQuery.stop()` still
+    * cancels their jobs, the SQL execution id and the active session.
+    * If the caller is interrupted (a stopping query) the calls still
+    * running are interrupted, and the pool's threads have ended before
+    * this returns.
+    */
+  private def fanOut(name: String, threads: Int,
+      calls: Seq[() => Unit]): Unit = {
+    val made = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(threads,
+      { (r: Runnable) =>
+        val t = new Thread(r, s"$name-${made.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    try {
+      val futures = calls.map(c => pool.submit((() => c()): Runnable))
+      val failures = futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdownNow()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(1, TimeUnit.SECONDS)
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
   }
 }

@@ -65,7 +65,7 @@ class AstroPropertiesSpec extends SparkSpec {
       // galactic centre (Sgr A*, J2000 266.405, -28.936) lies in the plane
       Astro.galacticLatDeg(lit(266.405), lit(-28.936)).as("gc"),
       // north ecliptic pole: (270, 66.5607)
-      Astro.eclipticLatDeg(lit(270.0), lit(66.5607083)).as("nep")).head
+      Astro.eclipticLatDeg(lit(270.0), lit(66.5607083)).as("nep")).head()
     assert(math.abs(anchors.getDouble(0) - 90.0) < 1e-6)
     assert(math.abs(anchors.getDouble(1)) < 0.1)
     assert(math.abs(anchors.getDouble(2) - 90.0) < 1e-3)
@@ -118,7 +118,7 @@ class AstroPropertiesSpec extends SparkSpec {
     }
     // known anchor: z=0.0233, H0=70, Om=0.3 -> dl ~ 101.3 Mpc -> mu ~ 35.03
     val mu = spark.range(1)
-      .select(Astro.distanceModulus(lit(0.0233))).head.getDouble(0)
+      .select(Astro.distanceModulus(lit(0.0233))).head().getDouble(0)
     assert(math.abs(mu - 35.0) < 0.1, mu)
   }
 }

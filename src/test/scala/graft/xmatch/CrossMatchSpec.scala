@@ -44,7 +44,7 @@ class CrossMatchSpec extends SparkSpec {
     val r = spark.range(1).select(
       graft.astro.Astro.hmsToDeg(lit("00 20 33.590")).as("ra"),
       graft.astro.Astro.dmsToDeg(lit("+59 18 45.900")).as("dec"),
-      graft.astro.Astro.dmsToDeg(lit("-27 45")).as("dec2")).head
+      graft.astro.Astro.dmsToDeg(lit("-27 45")).as("dec2")).head()
     assert(math.abs(r.getDouble(0) - 5.139958333) < 1e-6)
     assert(math.abs(r.getDouble(1) - 59.31275) < 1e-6)
     assert(math.abs(r.getDouble(2) - (-27.75)) < 1e-9)
