@@ -251,8 +251,8 @@ object SparkEntry {
     "q115_phrase_search" -> (Retrieval.qPhraseSearch _),
     // NEAR/w proximity search over positional postings
     "q116_proximity_search" -> (Retrieval.qProximitySearch _),
-    // positional-index certificates: landed + positionalAppend probed
-    // by phraseProbe/proximityProbe; oracles ARE the q115/q116
+    // positional-index certificates: landed + DocIndex.Positional.append
+    // probed by phraseProbe/proximityProbe; oracles ARE the q115/q116
     // statements verbatim (append ≡ rebuild AND probe ≡ one-shot)
     "q117_phrase_indexed" -> (Retrieval.qPhraseIndexed _),
     "q118_proximity_indexed" -> (Retrieval.qProximityIndexed _),
@@ -262,8 +262,8 @@ object SparkEntry {
     // KWIC snippets over the positional index: occurrence count, first
     // anchor, and the context window as a hash-gated snippet string
     "q120_phrase_snippets" -> (Retrieval.qPhraseSnippets _),
-    // gram-index certificates: landed + gramAppend probed by
-    // gramProbe/snippetProbe; oracles ARE the q115/q120 statements
+    // gram-index certificates: landed + DocIndex.Gram.append probed
+    // by gramProbe/snippetProbe; oracles ARE the q115/q120 statements
     // verbatim (append ≡ rebuild AND probe ≡ one-shot, fixed-n)
     "q121_gram_indexed" -> (Retrieval.qPhraseGramIndexed _),
     "q122_snippets_indexed" -> (Retrieval.qSnippetsGramIndexed _),

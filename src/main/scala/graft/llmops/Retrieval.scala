@@ -359,7 +359,7 @@ object Retrieval {
     * probe consumes, and the ONE-OFF tokenization cost of the corpus.
     * Per-doc independent by construction, which is what makes the
     * ingest form trivial-and-exactly-right: appending a batch is
-    * [[postingsAppend]] (landed documents are never re-tokenized), and
+    * [[DocIndex.append]] (landed documents are never re-tokenized), and
     * q110 certifies append ≡ full rebuild through the probe hash.
     * Persist it partitioned/bucketed by `tok` at corpus scale and the
     * probe join is Exchange-free.
@@ -370,14 +370,6 @@ object Retrieval {
       explode(graft.expressions.ElementCounts.elementCounts(toks))
         .as(Seq("tok", "tf")))
   }
-
-  /** Ingest form: the index of (landed ∪ batch) without touching
-    * landed rows — postings are per-doc, so the delta IS the batch's
-    * own index. The df/stats relations are derived from the index at
-    * probe time, so they need no separate maintenance.
-    */
-  def postingsAppend(batch: DataFrame, landed: DataFrame): DataFrame =
-    landed.unionByName(postingsIndex(batch))
 
   /** BM25 probe over a prebuilt [[postingsIndex]] — the recurring cost
     * of the build/probe split (the q98 kNN pattern): df and the corpus
@@ -854,10 +846,10 @@ object Retrieval {
     * corpus and shuffling the handful that can ever match (PlanSpec
     * "q115" pins the semi-join below the aggregate; the probe itself
     * is the shared [[gramProbe]]). For REPEATED phrase workloads, skip
-    * the one-shot entirely: [[gramIndex]] + [[gramProbe]] is the
+    * the one-shot entirely: [[gramPositions]] + [[gramProbe]] is the
     * fixed-n build/probe split (q121 certifies it against this
     * operator's statement — the oracle IS the q115 SQL, verbatim) and
-    * [[positionalIndex]] + [[phraseProbe]] the arbitrary-length one
+    * [[tokenPositions]] + [[phraseProbe]] the arbitrary-length one
     * (q117, same oracle).
     */
   def phraseSearch(phrases: DataFrame, corpus: DataFrame, n: Int,
@@ -888,42 +880,26 @@ object Retrieval {
       .orderBy("qid", "rk")
   }
 
-  /** Positional token relation (did, pos, tok) — the positional
-    * postings every proximity-class operator consumes. At corpus scale
-    * this persists keyed by tok (one more column on the q110 postings
-    * index), so term-position lookups are index probes.
+  /** The POSITIONAL INDEX of a corpus ([[DocIndex.Positional]], the
+    * q110 postings-index sibling): one (did, pos, tok) row per token
+    * occurrence, per-doc independent by construction — the positional
+    * postings every proximity-class operator consumes. Build once, hold
+    * it (persist here; written bucketed by `tok` in production —
+    * [[graft.operators.Bucketing]] — so [[phraseProbe]]/
+    * [[proximityProbe]] term lookups are Exchange-free on the corpus
+    * side), and every phrase/NEAR-w batch is a probe instead of a
+    * corpus re-tokenization — the one-shot
+    * [[phraseSearch]]/[[proximitySearch]] forms re-tokenize per call,
+    * which at 100 TB is the dominant cost of a repeated workload.
+    * q117/q118 certify the grown index through the probes against the
+    * one-shot statements.
     */
   def tokenPositions(corpus: DataFrame): DataFrame =
     corpus.select(col("did"),
       posexplode(Dedup.tokens(col("text"))).as(Seq("pos", "tok")))
 
-  /** The POSITIONAL INDEX of a corpus — [[tokenPositions]] under the
-    * index contract (the q110 postings-index sibling): one (did, pos,
-    * tok) row per token occurrence, per-doc independent by
-    * construction. Build once, hold it (persist here; written
-    * bucketed by `tok` in production — [[graft.operators.Bucketing]] —
-    * so [[phraseProbe]]/[[proximityProbe]] term lookups are
-    * Exchange-free on the corpus side), and every phrase/NEAR-w batch
-    * is a probe instead of a corpus re-tokenization — the one-shot
-    * [[phraseSearch]]/[[proximitySearch]] forms re-tokenize per call,
-    * which at 100 TB is the dominant cost of a repeated workload.
-    * Ingest is [[positionalAppend]]; q117/q118 certify the grown
-    * index through the probes against the one-shot statements, and
-    * [[graft.streaming.StreamOps.positionalIndexSink]] is the
-    * streaming face.
-    */
-  def positionalIndex(corpus: DataFrame): DataFrame =
-    tokenPositions(corpus)
-
-  /** Ingest form: positions are per-doc, so the delta IS the batch's
-    * own index — landed documents are never re-tokenized (the
-    * [[postingsAppend]] contract, positionally).
-    */
-  def positionalAppend(batch: DataFrame, landed: DataFrame): DataFrame =
-    landed.unionByName(positionalIndex(batch))
-
   /** Exact phrase occurrence counting over a prebuilt
-    * [[positionalIndex]] — the probe form of [[phraseSearch]]. The
+    * [[tokenPositions]] — the probe form of [[phraseSearch]]. The
     * phrase's tokens are posexploded to (qid, j, ptok) and the index
     * is probed with ONE broadcast equi-join on the token; each matched
     * occurrence votes for the anchor position `pos − j`, and an anchor
@@ -950,7 +926,7 @@ object Retrieval {
     * q114's bound collapse). On the rare-vocab `Soak positional100x` (100k
     * terms, the real-corpus regime) a 100-phrase batch probes 21.5M
     * held positions in ~4 s, comparable to one one-shot pass — the
-    * split's wins there are ingest ([[positionalAppend]] never
+    * split's wins there are ingest ([[DocIndex.append]] never
     * re-tokenizes landed documents) and serving phrase + NEAR/w +
     * arbitrary-m batches from ONE held (bucketed-by-tok) relation.
     */
@@ -975,7 +951,7 @@ object Retrieval {
       .select("qid", "did", "n_occ", "rk")
   }
 
-  /** NEAR/w proximity counting over a prebuilt [[positionalIndex]] —
+  /** NEAR/w proximity counting over a prebuilt [[tokenPositions]] —
     * the probe form of [[proximitySearch]]. Both term-position fetches
     * are broadcast probes of the positional postings; the pair count
     * joins two query-bounded relations on (qid, did) — per-pair volume
@@ -1009,7 +985,7 @@ object Retrieval {
   }
 
   /** Ordered sloppy-phrase counting over a prebuilt
-    * [[positionalIndex]] — the Lucene `"a b"~slop` query for the
+    * [[tokenPositions]] — the Lucene `"a b"~slop` query for the
     * two-term case: tok_a must PRECEDE tok_b with at most `slop`
     * intervening tokens, i.e. 1 ≤ pos_b − pos_a ≤ slop + 1 (compare
     * [[proximityProbe]]'s symmetric |Δ| ≤ w, which is order-blind).
@@ -1050,7 +1026,7 @@ object Retrieval {
     * so it is localCheckpoint-materialized per the file's
     * materialization rule (operator-internal multi-consumer) — without
     * it the corpus is tokenized and posexploded twice per call.
-    * Repeated workloads hold a [[positionalIndex]] and call
+    * Repeated workloads hold a [[tokenPositions]] and call
     * [[proximityProbe]] directly (q118 certifies the equivalence).
     */
   def proximitySearch(pairs: DataFrame, corpus: DataFrame, window: Int,
@@ -1076,7 +1052,7 @@ object Retrieval {
   }
 
   /** q117 — the positional-index certificate, phrase side: the index
-    * is built as landed (did ≢ 7 mod 10) + [[positionalAppend]] of the
+    * is built as landed (did ≢ 7 mod 10) + [[DocIndex.append]] of the
     * late batch (did ≡ 7 mod 10), then probed by [[phraseProbe]] with
     * the q115 phrases. The oracle IS the q115 statement VERBATIM (the
     * q110 certificate pattern), so the hash match certifies BOTH
@@ -1091,9 +1067,9 @@ object Retrieval {
           .shingles(col("text"), 2), 1).as("phrase"))
     val corpus = d.filter(!isQuery)
       .select(col("doc_id").as("did"), col("text"))
-    val landed = positionalIndex(
+    val landed = tokenPositions(
       corpus.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val index = positionalAppend(
+    val index = DocIndex.Positional.append(
       corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
       .persist()
     phraseProbe(phrases, index, topN = 10).orderBy("qid", "rk")
@@ -1113,9 +1089,9 @@ object Retrieval {
         element_at(toks, size(toks)).as("tok_b"))
     val corpus = d.filter(!isQuery)
       .select(col("doc_id").as("did"), col("text"))
-    val landed = positionalIndex(
+    val landed = tokenPositions(
       corpus.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val index = positionalAppend(
+    val index = DocIndex.Positional.append(
       corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
       .persist()
     proximityProbe(pairs, index, window = 3, topN = 10)
@@ -1349,7 +1325,7 @@ object Retrieval {
       topN, k1, b, maxDf, idfLn)
 
   /** q110 — the ingest certificate: the corpus index is built as
-    * landed (90%) + [[postingsAppend]] of a late batch (doc_id ≡ 7
+    * landed (90%) + [[DocIndex.append]] of a late batch (doc_id ≡ 7
     * mod 10), then probed. The oracle is the q108 statement VERBATIM
     * (full single-pass rebuild), so the hash match certifies
     * append ≡ rebuild — the q101 IVF-append pattern for the term
@@ -1363,8 +1339,8 @@ object Retrieval {
     val corpus = d.filter(!isQuery)
       .select(col("doc_id").as("did"), col("text"))
     val landed = postingsIndex(corpus.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val index = postingsAppend(corpus.filter(pmod(col("did"), lit(10L)) === 7L),
-      landed).persist()
+    val index = DocIndex.Postings.append(
+      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed).persist()
     bm25Probe(queries, index, topN = 10)
       .select(col("qid"), col("did"), col("bm25_micro"),
         col("n_match"), col("rk"))
@@ -1613,17 +1589,23 @@ object Retrieval {
       .orderBy("qid", "fused_rank")
   }
 
-  /** Positional n-GRAM relation (did, pos, gram) — the nextword-index
-    * idea (Williams, Zobel & Bahle 2004, "Fast phrase querying with
-    * combined indexes"): for FIXED-length phrase workloads, index the
-    * n-gram with its position and a phrase lookup carries the
-    * selectivity of the FULL n-gram instead of a single token. On the
-    * dense gate vocabulary that is the difference between ~1/60 of
-    * all positions per phrase token ([[phraseProbe]]'s anchor stream —
-    * fine on real rare vocabularies, measured in `Soak positional100x`)
-    * and only the exact-phrase matches (q120: 40 s → q115-class seconds at
-    * 10×-sf0.1). Persist bucketed by gram for repeated batches; the
-    * token-positional [[positionalIndex]] remains the structure for
+  /** The GRAM INDEX of a corpus ([[DocIndex.Gram]]): one (did, pos,
+    * gram) row per n-gram occurrence, per-doc independent by
+    * construction — the nextword-index idea (Williams, Zobel & Bahle
+    * 2004, "Fast phrase querying with combined indexes"): for
+    * FIXED-length phrase workloads, index the n-gram with its position
+    * and a phrase lookup carries the selectivity of the FULL n-gram
+    * instead of a single token. On the dense gate vocabulary that is
+    * the difference between ~1/60 of all positions per phrase token
+    * ([[phraseProbe]]'s anchor stream — fine on real rare vocabularies,
+    * measured in `Soak positional100x`) and only the exact-phrase
+    * matches (q120: 40 s → q115-class seconds at 10×-sf0.1). Build once
+    * for a FIXED n, hold it (persist here; written bucketed by `gram`
+    * in production — [[graft.operators.Bucketing]] — so probes are
+    * Exchange-free on the corpus side). q121/q122 certify the grown
+    * index through [[gramProbe]] / [[snippetProbe]] against the
+    * one-shot statements (oracle = the q115 / q120 SQL, verbatim); the
+    * token-positional [[tokenPositions]] remains the structure for
     * NEAR/w and arbitrary-length phrases.
     */
   def gramPositions(corpus: DataFrame, n: Int): DataFrame =
@@ -1631,36 +1613,9 @@ object Retrieval {
       posexplode(graft.expressions.WordShingles.shingles(col("text"), n))
         .as(Seq("pos", "gram")))
 
-  /** The GRAM INDEX of a corpus — [[gramPositions]] under the index
-    * contract (the [[positionalIndex]] sibling, keyed by the full
-    * n-gram): one (did, pos, gram) row per n-gram occurrence, per-doc
-    * independent by construction. Build once for a FIXED n, hold it
-    * (persist here; written bucketed by `gram` in production —
-    * [[graft.operators.Bucketing]] — so probes are Exchange-free on
-    * the corpus side), and every phrase-count or snippet batch is a
-    * probe carrying full-n-gram selectivity instead of a corpus
-    * re-shingling — on dense vocabularies that selectivity is the
-    * whole game (the q117-vs-q115 gap). Ingest is [[gramAppend]];
-    * q121/q122 certify the grown index through [[gramProbe]] /
-    * [[snippetProbe]] against the one-shot statements (oracle = the
-    * q115 / q120 SQL, verbatim), and
-    * [[graft.streaming.StreamOps.gramIndexSink]] is the streaming
-    * face.
-    */
-  def gramIndex(corpus: DataFrame, n: Int): DataFrame =
-    gramPositions(corpus, n)
-
-  /** Ingest form: grams are per-doc, so the delta IS the batch's own
-    * index — landed documents are never re-shingled (the
-    * [[postingsAppend]] contract, gram-keyed). `n` must match the
-    * landed index's build (the fixed-n contract).
-    */
-  def gramAppend(batch: DataFrame, landed: DataFrame, n: Int): DataFrame =
-    landed.unionByName(gramIndex(batch, n))
-
   /** Phrase-occurrence counting over a gram relation with (did, gram)
     * rows — the shared probe of [[phraseSearch]] (one-shot gram
-    * stream) and q121 (a held [[gramIndex]]). The relation is
+    * stream) and q121 (a held [[gramPositions]]). The relation is
     * SEMI-JOINED against the broadcast phrase set BEFORE the
     * per-(doc, gram) occurrence aggregation — the count is
     * per-(did, gram) and the final join is inner on the phrase, so
@@ -1687,7 +1642,7 @@ object Retrieval {
   }
 
   /** q121 — the gram-index certificate, count side: the index is
-    * built as landed (did ≢ 7 mod 10) + [[gramAppend]] of the late
+    * built as landed (did ≢ 7 mod 10) + [[DocIndex.append]] of the late
     * batch (did ≡ 7 mod 10), then probed by [[gramProbe]] with the
     * q115 phrases. The oracle IS the q115 statement VERBATIM (the
     * q110/q117 certificate pattern), so one hash certifies BOTH
@@ -1702,10 +1657,10 @@ object Retrieval {
           .shingles(col("text"), 2), 1).as("phrase"))
     val corpus = d.filter(!isQuery)
       .select(col("doc_id").as("did"), col("text"))
-    val landed = gramIndex(
+    val landed = gramPositions(
       corpus.filter(pmod(col("did"), lit(10L)) =!= 7L), n = 2)
-    val index = gramAppend(
-      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed, n = 2)
+    val index = DocIndex.Gram(2).append(
+      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
       .persist()
     gramProbe(phrases, index, topN = 10).orderBy("qid", "rk")
   }
@@ -1736,7 +1691,7 @@ object Retrieval {
 
   /** KWIC probe over a positional gram relation (did, pos, gram) —
     * the [[phraseSnippets]] anchor/slice stages against a held
-    * [[gramIndex]] (q122 certifies the grown-index path against the
+    * [[gramPositions]] (q122 certifies the grown-index path against the
     * one-shot's q120 statement, verbatim). `corpus` supplies text for
     * the RANKED documents only — the slice stage joins it against a
     * broadcast of the ≤ queries × topN hit ids.
@@ -1793,7 +1748,7 @@ object Retrieval {
   }
 
   /** q122 — the gram-index certificate, snippet side: the SAME grown
-    * index shape as q121 (landed + [[gramAppend]]) serving
+    * index shape as q121 (landed + [[DocIndex.append]]) serving
     * [[snippetProbe]] with the q120 parameters; the oracle IS the
     * q120 statement VERBATIM, so one hash certifies that a held gram
     * index serves the KWIC surface — counts, first positions, AND
@@ -1808,10 +1763,10 @@ object Retrieval {
           .shingles(col("text"), 2), 1).as("phrase"))
     val corpus = d.filter(!isQuery)
       .select(col("doc_id").as("did"), col("text"))
-    val landed = gramIndex(
+    val landed = gramPositions(
       corpus.filter(pmod(col("did"), lit(10L)) =!= 7L), n = 2)
-    val index = gramAppend(
-      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed, n = 2)
+    val index = DocIndex.Gram(2).append(
+      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
       .persist()
     snippetProbe(phrases, index, corpus, n = 2, topN = 5, ctx = 3)
       .orderBy("qid", "rk")
@@ -1830,7 +1785,7 @@ object Retrieval {
     *
     * Epoch contract (the real-world impact-index tradeoff): df, avgdl
     * and n_docs are GLOBAL, so appending documents invalidates landed
-    * impacts — ingest appends at the POSTINGS level ([[postingsAppend]],
+    * impacts — ingest appends at the POSTINGS level ([[DocIndex.append]],
     * which stays incremental) and re-quantizes impacts per epoch over
     * the grown postings. q123 certifies exactly that composition
     * (postings landed + append → quantize → probe) against direct
@@ -1887,7 +1842,7 @@ object Retrieval {
   }
 
   /** q123 — the impact-index certificate: postings built as landed
-    * (did ≢ 7 mod 10) + [[postingsAppend]] of the late batch, impacts
+    * (did ≢ 7 mod 10) + [[DocIndex.append]] of the late batch, impacts
     * quantized over the GROWN postings (the epoch contract), then
     * probed by [[impactProbe]]. The oracle IS the q108 statement
     * VERBATIM, so one hash certifies append → re-quantize → probe ≡
@@ -1902,7 +1857,7 @@ object Retrieval {
       .select(col("doc_id").as("did"), col("text"))
     val landed = postingsIndex(
       corpus.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val postings = postingsAppend(
+    val postings = DocIndex.Postings.append(
       corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
     // A/B-REJECTED (r15): semi-filtering the quantization to the
     // query's token set (the qPost treatment) — measured in THREE
@@ -2063,9 +2018,7 @@ object Retrieval {
   /** Document DELETION from any of the per-doc indexes — the
     * maintenance operator every long-lived 100 TB index needs (data
     * takedowns, re-ingest of updated documents = delete + append).
-    * All three index shapes key their rows by `did`
-    * ([[postingsIndex]] (did, dl, tok, tf); [[positionalIndex]]
-    * (did, pos, tok); [[gramIndex]] (did, pos, gram)), so ONE slim
+    * Every [[DocIndex]] kind keys its rows by `did`, so ONE slim
     * anti-join removes a document completely from any of them — and
     * because the probe-time invariants ([[postingsInvariants]]' df and
     * avgdl/n_docs) are derived FROM the index, deletion is
@@ -2085,35 +2038,52 @@ object Retrieval {
   def indexDelete(docIds: DataFrame, landed: DataFrame): DataFrame =
     landed.join(docIds.select("did").distinct(), Seq("did"), "left_anti")
 
-  /** Document UPSERT into any of the per-doc indexes — re-ingest of
-    * UPDATED documents, the third index lifecycle operation next to
-    * append (q110/q117/q121) and delete (q125). Because every index
-    * shape keys its rows by `did` and derives its probe-time
-    * invariants from the index itself (the [[indexDelete]] contract),
-    * upsert is exactly delete + append: drop the batch's ids with one
-    * slim anti-join, union the batch's freshly built rows. Landed
-    * UNCHANGED documents are never re-tokenized — the
-    * [[postingsAppend]] property, preserved under updates. `build` is
-    * the index constructor matching the landed shape
-    * ([[postingsIndex]] default; pass [[positionalIndex]] /
-    * `gramIndex(_, n)` for the other two — RetrievalSpec pins upsert ≡
-    * rebuild for both). Pre-quantized [[impactIndex]] state stays an
-    * epoch operation (upsert the postings, re-quantize), as with
-    * deletes. q130 certifies upsert-then-probe ≡ rebuild over the
-    * updated corpus through the q108 scoring statement.
+  /** A per-doc index kind: how a (did, text) corpus is indexed
+    * (`build`), the columns it builds, and the subdirectory a streamed
+    * copy lands in ([[graft.streaming.StreamOps.indexSink]]). Every kind
+    * keys its rows by `did` and derives its probe-time invariants from
+    * the index itself, so the lifecycle is shared: [[append]] (q110,
+    * q117, q121), [[indexDelete]] (q125) and [[upsert]] (q130).
     */
-  def indexUpsert(batch: DataFrame, landed: DataFrame,
-      build: DataFrame => DataFrame = postingsIndex): DataFrame =
-    indexDelete(batch.select("did"), landed).unionByName(build(batch))
+  final case class DocIndex(dir: String, columns: Seq[String],
+      build: DataFrame => DataFrame) {
+    /** Ingest form: the index of (landed ∪ batch) without touching
+      * landed rows — the index is per-doc, so the delta IS the batch's
+      * own index (landed documents are never re-tokenized).
+      */
+    def append(batch: DataFrame, landed: DataFrame): DataFrame =
+      landed.unionByName(build(batch))
+
+    /** Re-ingest of UPDATED documents: exactly delete + append — drop
+      * the batch's ids with one slim anti-join, union the batch's
+      * freshly built rows; landed UNCHANGED documents are never
+      * re-tokenized. Pre-quantized [[impactIndex]] state stays an epoch
+      * operation (upsert the postings, re-quantize), as with deletes.
+      */
+    def upsert(batch: DataFrame, landed: DataFrame): DataFrame =
+      indexDelete(batch.select("did"), landed).unionByName(build(batch))
+  }
+
+  object DocIndex {
+    val Postings = DocIndex("postings", Seq("did", "dl", "tok", "tf"),
+      postingsIndex)
+    val Positional = DocIndex("positions", Seq("did", "pos", "tok"),
+      tokenPositions)
+    /** `n` must match the landed index's build (the fixed-n contract). */
+    def Gram(n: Int): DocIndex = DocIndex("gram_index",
+      Seq("did", "pos", "gram"), gramPositions(_, n))
+    def Fielded(titleLen: Int): DocIndex = DocIndex("fielded",
+      Seq("did", "tok", "tf_t", "tf_b", "tl", "bl"), bm25fIndex(_, titleLen))
+  }
 
   /** q130 — the index-upsert certificate: the full corpus index is
     * built, then the did ≡ 3 (mod 10) documents arrive UPDATED (one
-    * trailing token appended — their `source` tag) and are
-    * [[indexUpsert]]ed; the grown index is probed. The oracle is the
-    * q108 statement REBUILT over the post-update corpus (a CASE WHEN
-    * in the corpus CTE), so the hash match certifies upsert ≡ rebuild:
-    * stale postings gone, new postings in, df/avgdl/n_docs all
-    * reflecting the update with no separate maintenance.
+    * trailing token appended — their `source` tag) and are upserted
+    * ([[DocIndex.upsert]]); the grown index is probed. The oracle is
+    * the q108 statement REBUILT over the post-update corpus (a CASE
+    * WHEN in the corpus CTE), so the hash match certifies upsert ≡
+    * rebuild: stale postings gone, new postings in, df/avgdl/n_docs
+    * all reflecting the update with no separate maintenance.
     */
   def qBm25Upserted(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
@@ -2126,7 +2096,7 @@ object Retrieval {
     val updated = corpus.filter(pmod(col("did"), lit(10L)) === 3L)
       .select(col("did"),
         concat(col("text"), lit(" "), col("source")).as("text"))
-    val index = indexUpsert(updated, full).persist()
+    val index = DocIndex.Postings.upsert(updated, full).persist()
     bm25Probe(queries, index, topN = 10)
       .select(col("qid"), col("did"), col("bm25_micro"),
         col("n_match"), col("rk"))
@@ -2423,9 +2393,9 @@ object Retrieval {
     * `titleLen` tokens, body = the rest — because the corpus has one
     * text column; a real deployment passes genuinely separate columns
     * through the same shape. Per-doc independent by construction, so
-    * the whole index lifecycle composes for free: [[postingsAppend]]'s
-    * property (landed docs never re-tokenized), [[indexDelete]],
-    * [[indexUpsert]] all apply verbatim to this relation.
+    * the whole index lifecycle composes for free: [[DocIndex.Fielded]]
+    * appends (landed docs never re-tokenized), [[indexDelete]] and
+    * upserts apply verbatim to this relation.
     *
     * Scale shape: the whole build is ONE MAP STAGE — both field
     * slices, both ElementCounts kernels, and the two-field pivot run

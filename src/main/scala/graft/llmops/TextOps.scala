@@ -351,7 +351,7 @@ object TextOps {
     * build/probe split for corpus stats: counts are ADDITIVE, so a
     * landed pair of count relations ingests a document batch with
     * [[mergeCounts]] (landed documents are never re-tokenized — the
-    * postingsAppend property for statistics), and any number of
+    * DocIndex.append property for statistics), and any number of
     * (minCount, topK) reports re-score the held counts without
     * touching the corpus. Callers hold/persist these (the INDEX rule);
     * the one-shot [[collocations]] localCheckpoints them internally.
@@ -490,7 +490,7 @@ object TextOps {
     * REPORT (this operator's own output carries n_tokens, and a slot
     * is n_tokens + sepTokens, so the offset is one slim aggregate over
     * it — landed documents are never re-tokenized, the
-    * [[Retrieval.postingsAppend]] property in layout space). The
+    * [[Retrieval.DocIndex.append]] property in layout space). The
     * doc_id precondition is enforced ROW-LEVEL: an interleaved id
     * would silently shift every later landed document's placement, so
     * it fails loudly instead (the packPassageId precedent — the

@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 
-import graft.llmops.TextOps
+import graft.llmops.{Retrieval, Similarity, TextOps}
 
 /** Stateful Structured Streaming operators.
   *
@@ -62,6 +65,37 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("__sig")
       .drop("__sig")
 
+  /** The file-state contract of every `foreachBatch` sink below.
+    * `foreachBatch` is at-least-once: a crash between a batch's writes
+    * and its checkpoint commit replays the batch. So micro-batch `id`
+    * only ever OVERWRITES its own `<dir>/batch_id=<id>` whole
+    * ([[BatchState.overwrite]]) and reads only state landed by earlier
+    * batches ([[BatchState.landed]]): a replay rewrites the same rows
+    * instead of appending a second copy, and reads what its first
+    * attempt read. StreamReplaySpec replays a batch through it.
+    */
+  private def perBatch(df: DataFrame)(body: (DataFrame, BatchState) => Unit)
+      : DataStreamWriter[Row] =
+    df.writeStream.outputMode("append").foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        body(batch, BatchState(batch.sparkSession, batchId))
+    }
+
+  private final case class BatchState(spark: SparkSession, id: Long) {
+    def overwrite(w: DataFrameWriter[Row], dir: String): Unit =
+      w.mode("overwrite").parquet(s"$dir/batch_id=$id")
+
+    /** `dir`'s rows landed by batches below this one; None before the
+      * first write (an existence probe, not read-and-catch: Spark logs
+      * a missing path at ERROR before throwing). */
+    def landed(dir: String): Option[DataFrame] = {
+      val p = new Path(dir)
+      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+        None
+      else Some(spark.read.parquet(p.toString).filter(col("batch_id") < id))
+    }
+  }
+
   /** Streaming SEMANTIC dedup over an embedding stream — the ingest
     * sink of [[graft.llmops.Dedup.semanticDedup]]: per micro-batch,
     * assign the batch's vectors against a FIXED coarse quantizer, drop
@@ -79,68 +113,50 @@ object StreamOps {
     *    one broadcast-seeds assignment of the BATCH plus one cell-key
     *    equi-join probe of the landed state — landed embeddings are
     *    read but never re-assigned or shuffled;
-    *  - state is per-batch-atomic parquet dirs (the rollup-sink
-    *    pattern): a retried batch reads only `batch_id < current` and
-    *    overwrites its own dir, so replays are idempotent.
+    *  - state is per-batch-atomic parquet dirs ([[perBatch]]), so
+    *    replays are idempotent.
     *
     * Read the deduplicated corpus back with [[readDeduped]].
     */
   def semanticDedupSink(vectors: DataFrame, statePath: String,
-      threshold: Double = 0.9)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    import graft.llmops.Similarity
-    vectors.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val b = batch.select(col("vec_id"), col("embedding"))
-            .withColumn("nrm", Similarity.norm(col("embedding")))
-          val hc = spark.sparkContext.hadoopConfiguration
-          val fs = new org.apache.hadoop.fs.Path(statePath)
-            .getFileSystem(hc)
-          val seeds = stableSeeds(b, statePath)
-          // ivfAssign returns (vec_id, embedding, nrm, seed_id)
-          val ba = Similarity.ivfAssign(b, seeds)
-          def shape(df: DataFrame) = df.select(col("seed_id"),
-            col("vec_id").as("oid"), col("embedding").as("e2"),
-            col("nrm").as("n2"))
-          def qualifying(side: DataFrame, pred: org.apache.spark.sql.Column) =
-            ba.join(side, Seq("seed_id"))
-              .filter(pred)
-              .filter(round(Similarity.cosineWithNorms(col("embedding"),
-                col("e2"), col("nrm"), col("n2")), 6) >= threshold)
-              .select("vec_id").distinct()
-          val landedPath = new org.apache.hadoop.fs.Path(
-            s"$statePath/landed")
-          val dropVsLanded =
-            if (fs.exists(landedPath)) {
-              // nrm travels with the state: landed vectors are read,
-              // never re-normalized or re-assigned
-              val landed = spark.read.parquet(landedPath.toString)
-                .filter(col("batch_id") < batchId)
-              qualifying(shape(landed), lit(true))
-            } else spark.range(0).select(col("id").as("vec_id"))
-          val dropInBatch = qualifying(shape(ba),
-            col("oid") < col("vec_id"))
-          val survivors = ba
-            .join(dropVsLanded.unionByName(dropInBatch).distinct(),
-              Seq("vec_id"), "left_anti")
-            .select("vec_id", "embedding", "nrm", "seed_id")
-          survivors.write.mode("overwrite")
-            .partitionBy("seed_id")
-            .parquet(s"$statePath/landed/batch_id=$batchId")
-        }
-        ()
+      threshold: Double = 0.9): DataStreamWriter[Row] =
+    perBatch(vectors) { (batch, state) =>
+      if (!batch.isEmpty) {
+        val b = batch.select(col("vec_id"), col("embedding"))
+          .withColumn("nrm", Similarity.norm(col("embedding")))
+        // ivfAssign returns (vec_id, embedding, nrm, seed_id)
+        val ba = Similarity.ivfAssign(b, stableSeeds(b, statePath))
+        def shape(df: DataFrame) = df.select(col("seed_id"),
+          col("vec_id").as("oid"), col("embedding").as("e2"),
+          col("nrm").as("n2"))
+        def qualifying(side: DataFrame, pred: org.apache.spark.sql.Column) =
+          ba.join(side, Seq("seed_id"))
+            .filter(pred)
+            .filter(round(Similarity.cosineWithNorms(col("embedding"),
+              col("e2"), col("nrm"), col("n2")), 6) >= threshold)
+            .select("vec_id").distinct()
+        // nrm travels with the state: landed vectors are read, never
+        // re-normalized or re-assigned
+        val dropVsLanded = state.landed(s"$statePath/landed")
+          .map(landed => qualifying(shape(landed), lit(true)))
+          .getOrElse(batch.sparkSession.range(0)
+            .select(col("id").as("vec_id")))
+        val dropInBatch = qualifying(shape(ba),
+          col("oid") < col("vec_id"))
+        val survivors = ba
+          .join(dropVsLanded.unionByName(dropInBatch).distinct(),
+            Seq("vec_id"), "left_anti")
+          .select("vec_id", "embedding", "nrm", "seed_id")
+        state.overwrite(survivors.write.partitionBy("seed_id"),
+          s"$statePath/landed")
+      }
     }
-  }
 
   /** The deduplicated corpus accumulated by [[semanticDedupSink]]:
     * (vec_id, embedding, seed_id) — cell-partitioned survivors across
     * all landed batches.
     */
-  def readDeduped(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame =
+  def readDeduped(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(s"$statePath/landed")
       .select(col("vec_id"), col("embedding"),
         // partition-dir inference narrows the type; restore long
@@ -155,7 +171,7 @@ object StreamOps {
   private def stableSeeds(b: DataFrame, statePath: String): DataFrame = {
     val spark = b.sparkSession
     val hc = spark.sparkContext.hadoopConfiguration
-    val seedsPath = new org.apache.hadoop.fs.Path(s"$statePath/seeds")
+    val seedsPath = new Path(s"$statePath/seeds")
     val fs = seedsPath.getFileSystem(hc)
     if (fs.exists(seedsPath)) spark.read.parquet(seedsPath.toString)
     else {
@@ -176,8 +192,7 @@ object StreamOps {
     * by seed_id; landed assignment rows are never read, re-scored, or
     * re-shuffled — the index grows append-only, the retrieval-side
     * sibling of [[semanticDedupSink]]'s state shape (every vector
-    * lands; no dedup). Replay idempotence is the shared file-state
-    * contract: a retried batch overwrites its own dir whole.
+    * lands; no dedup).
     *
     * [[readIvfIndex]] hands the grown assignment + persisted seeds
     * straight to [[graft.llmops.Similarity.knnJoinIndexed]], so a
@@ -186,186 +201,57 @@ object StreamOps {
     * pins the equivalence across a multi-batch replay).
     */
   def ivfIndexSink(vectors: DataFrame, statePath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    import graft.llmops.Similarity
-    vectors.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val b = batch.select(col("vec_id"), col("embedding"))
-            .withColumn("nrm", Similarity.norm(col("embedding")))
-          Similarity.ivfAssign(b, stableSeeds(b, statePath))
-            .write.mode("overwrite")
-            .partitionBy("seed_id")
-            .parquet(s"$statePath/index/batch_id=$batchId")
-        }
-        ()
+      : DataStreamWriter[Row] =
+    perBatch(vectors) { (batch, state) =>
+      if (!batch.isEmpty) {
+        val b = batch.select(col("vec_id"), col("embedding"))
+          .withColumn("nrm", Similarity.norm(col("embedding")))
+        state.overwrite(Similarity.ivfAssign(b, stableSeeds(b, statePath))
+          .write.partitionBy("seed_id"), s"$statePath/index")
+      }
     }
-  }
-
-  /** Streaming postings-index maintenance — the streaming face of
-    * [[graft.llmops.Retrieval.postingsAppend]]: each micro-batch of
-    * (doc_id, text) tokenizes ONLY itself (postings are per-doc
-    * independent, so no landed state is even read — the cheapest
-    * ingest contract any sink here has) and lands as an
-    * overwrite-whole per-batch parquet dir, the shared
-    * replay-idempotent file-state pattern. [[readPostingsIndex]]
-    * hands the grown index straight to
-    * [[graft.llmops.Retrieval.bm25Probe]]; StreamOpsSpec pins
-    * probe-equality with a fresh full [[graft.llmops.Retrieval
-    * .postingsIndex]] build across a multi-batch replay.
-    */
-  def postingsIndexSink(docs: DataFrame, statePath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.llmops.Retrieval.postingsIndex(
-              batch.select(col("doc_id").as("did"), col("text")))
-            .write.mode("overwrite")
-            .parquet(s"$statePath/postings/batch_id=$batchId")
-        }
-        ()
-    }
-  }
-
-  /** The grown postings index, shaped for
-    * [[graft.llmops.Retrieval.bm25Probe]]. */
-  def readPostingsIndex(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame =
-    spark.read.parquet(s"$statePath/postings")
-      .select("did", "dl", "tok", "tf")
-
-  /** Streaming POSITIONAL-index maintenance — the streaming face of
-    * [[graft.llmops.Retrieval.positionalAppend]]: each micro-batch of
-    * (doc_id, text) tokenizes ONLY itself (positions are per-doc
-    * independent — the [[postingsIndexSink]] contract, positionally)
-    * and lands as an overwrite-whole per-batch parquet dir, the shared
-    * replay-idempotent file-state pattern. [[readPositionalIndex]]
-    * hands the grown index straight to
-    * [[graft.llmops.Retrieval.phraseProbe]] /
-    * [[graft.llmops.Retrieval.proximityProbe]]; StreamOpsSpec pins
-    * probe-equality with a fresh full [[graft.llmops.Retrieval
-    * .positionalIndex]] build across a multi-batch replay (the q117/
-    * q118 certificate, streamed).
-    */
-  def positionalIndexSink(docs: DataFrame, statePath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.llmops.Retrieval.positionalIndex(
-              batch.select(col("doc_id").as("did"), col("text")))
-            .write.mode("overwrite")
-            .parquet(s"$statePath/positions/batch_id=$batchId")
-        }
-        ()
-    }
-  }
-
-  /** The grown positional index, shaped for
-    * [[graft.llmops.Retrieval.phraseProbe]] /
-    * [[graft.llmops.Retrieval.proximityProbe]]. */
-  def readPositionalIndex(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame =
-    spark.read.parquet(s"$statePath/positions")
-      .select("did", "pos", "tok")
-
-  /** Streaming GRAM-index maintenance — the streaming face of
-    * [[graft.llmops.Retrieval.gramAppend]]: each micro-batch of
-    * (doc_id, text) shingles ONLY itself (grams are per-doc
-    * independent — the [[positionalIndexSink]] contract, gram-keyed)
-    * and lands as an overwrite-whole per-batch parquet dir, the shared
-    * replay-idempotent file-state pattern. `n` is the index's fixed
-    * gram length. [[readGramPositions]] hands the grown index straight
-    * to [[graft.llmops.Retrieval.gramProbe]] /
-    * [[graft.llmops.Retrieval.snippetProbe]]; StreamOpsSpec pins
-    * probe-equality with a fresh full
-    * [[graft.llmops.Retrieval.gramIndex]] build across a multi-batch
-    * replay (the q121/q122 certificate, streamed).
-    */
-  def gramIndexSink(docs: DataFrame, statePath: String, n: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.llmops.Retrieval.gramIndex(
-              batch.select(col("doc_id").as("did"), col("text")), n)
-            .write.mode("overwrite")
-            .parquet(s"$statePath/gram_index/batch_id=$batchId")
-        }
-        ()
-    }
-  }
-
-  /** The grown positional gram index, shaped for
-    * [[graft.llmops.Retrieval.gramProbe]] /
-    * [[graft.llmops.Retrieval.snippetProbe]] (distinct from
-    * [[readGramIndex]], the [[duplicatedSpansSink]] digest state). */
-  def readGramPositions(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame =
-    spark.read.parquet(s"$statePath/gram_index")
-      .select("did", "pos", "gram")
-
-  /** Streaming FIELDED-index maintenance — the streaming face of the
-    * BM25F lifecycle (q131): fielded rows are per-doc independent (the
-    * [[postingsIndexSink]] contract, field-split), so each micro-batch
-    * of (doc_id, text) indexes ONLY itself and lands as an
-    * overwrite-whole per-batch parquet dir — the shared
-    * replay-idempotent file-state pattern. `titleLen` is the index's
-    * fixed field split. [[readFieldedIndex]] hands the grown index
-    * straight to [[graft.llmops.Retrieval.bm25fProbe]], whose
-    * invariants (df and BOTH field averages) derive from the index and
-    * therefore self-correct as batches land; StreamOpsSpec pins
-    * probe-equality with a fresh full
-    * [[graft.llmops.Retrieval.bm25fIndex]] build across a multi-batch
-    * replay (the q131 path, streamed).
-    *
-    * APPEND-ONLY / NO-REDELIVERY CONTRACT (same as every index sink in
-    * this file): each doc_id must arrive in exactly one batch. A
-    * doc_id re-delivered (updated) in a LATER batch lands in its own
-    * batch dir, so [[readFieldedIndex]] would return duplicate did
-    * rows — silently inflating df and both field-length averages at
-    * probe time. Point document updates at
-    * [[graft.llmops.Retrieval.indexUpsert]] over the read index
-    * instead (the q130 path); replay of the SAME batch is idempotent
-    * (overwrite-whole per-batch dir).
-    */
-  def fieldedIndexSink(docs: DataFrame, statePath: String,
-      titleLen: Int = 6)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.llmops.Retrieval.bm25fIndex(
-              batch.select(col("doc_id").as("did"), col("text")),
-              titleLen)
-            .write.mode("overwrite")
-            .parquet(s"$statePath/fielded/batch_id=$batchId")
-        }
-        ()
-    }
-  }
-
-  /** The grown fielded index, shaped for
-    * [[graft.llmops.Retrieval.bm25fProbe]]. */
-  def readFieldedIndex(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame =
-    spark.read.parquet(s"$statePath/fielded")
-      .select("did", "tok", "tf_t", "tf_b", "tl", "bl")
 
   /** The grown IVF assignment and its quantizer, shaped for
     * [[graft.llmops.Similarity.knnJoinIndexed]]. */
-  def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
+  def readIvfIndex(spark: SparkSession,
       statePath: String): (DataFrame, DataFrame) =
     (spark.read.parquet(s"$statePath/index")
        .select(col("vec_id"), col("embedding"), col("nrm"),
          col("seed_id").cast("long").as("seed_id")),
      spark.read.parquet(s"$statePath/seeds"))
+
+  /** Streaming per-doc index maintenance — the streaming face of
+    * [[graft.llmops.Retrieval.DocIndex.append]] for any index kind:
+    * each micro-batch of (doc_id, text) indexes ONLY itself (the index
+    * is per-doc independent, so no landed state is even read — the
+    * cheapest ingest contract any sink here has) and lands under
+    * `statePath/<index.dir>`. [[readIndex]] hands the grown index to
+    * the kind's probes, whose invariants (df, length and field
+    * averages) derive from the index and so self-correct as batches
+    * land. StreamOpsSpec pins probe-equality with a fresh full build
+    * for every kind; StreamReplaySpec pins it across a replayed batch.
+    *
+    * APPEND-ONLY / NO-REDELIVERY CONTRACT: each doc_id must arrive in
+    * exactly one batch. A doc_id re-delivered (updated) in a LATER
+    * batch lands in its own batch dir, so [[readIndex]] would return
+    * duplicate did rows — silently inflating df and the length
+    * averages at probe time. Point document updates at
+    * [[graft.llmops.Retrieval.DocIndex.upsert]] over the read index
+    * instead (the q130 path).
+    */
+  def indexSink(docs: DataFrame, statePath: String,
+      index: Retrieval.DocIndex): DataStreamWriter[Row] =
+    perBatch(docs) { (batch, state) =>
+      if (!batch.isEmpty)
+        state.overwrite(index.build(batch.select(col("doc_id").as("did"),
+          col("text"))).write, s"$statePath/${index.dir}")
+    }
+
+  /** The index grown by [[indexSink]], shaped for the kind's probes. */
+  def readIndex(spark: SparkSession, statePath: String,
+      index: Retrieval.DocIndex): DataFrame =
+    spark.read.parquet(s"$statePath/${index.dir}")
+      .select(index.columns.map(col): _*)
 
   /** Streaming SPAN dedup — the streaming face of
     * [[graft.llmops.TextOps.spanDedupIncrement]] (the C4 shape as an
@@ -374,51 +260,34 @@ object StreamOps {
     * (landed wins — temporal precedence), first-occurrence dedup runs
     * within the batch, and two per-batch-atomic parquet dirs land: the
     * per-doc cleaned report and the batch's NEW span digests (the
-    * index delta). Replay idempotence is the file-state contract every
-    * sink here shares: a retried batch reads only `batch_id <
-    * current`, and its own directories are overwritten whole. State
-    * never re-chunks landed text — per-batch cost is the digest
-    * anti-join plus the in-batch window.
+    * index delta), both replay-idempotent ([[perBatch]]). State never
+    * re-chunks landed text — per-batch cost is the digest anti-join
+    * plus the in-batch window.
     */
   def spanDedupSink(docs: DataFrame, statePath: String, k: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val hc = spark.sparkContext.hadoopConfiguration
-          val idxPath = new org.apache.hadoop.fs.Path(s"$statePath/index")
-          val fs = idxPath.getFileSystem(hc)
-          val landedIdx =
-            if (fs.exists(idxPath))
-              spark.read.parquet(idxPath.toString)
-                .filter(col("batch_id") < batchId)
-                .select("span_md5")
-            else
-              spark.range(0).select(lit("").as("span_md5"))
-          val (report, delta) = graft.llmops.TextOps
-            .spanDedupIncrement(batch, landedIdx, k)
-          report.write.mode("overwrite")
-            .parquet(s"$statePath/reports/batch_id=$batchId")
-          delta.write.mode("overwrite")
-            .parquet(s"$statePath/index/batch_id=$batchId")
-        }
-        ()
+      : DataStreamWriter[Row] =
+    perBatch(docs) { (batch, state) =>
+      if (!batch.isEmpty) {
+        val landedIdx = state.landed(s"$statePath/index")
+          .map(_.select("span_md5"))
+          .getOrElse(batch.sparkSession.range(0)
+            .select(lit("").as("span_md5")))
+        val (report, delta) =
+          TextOps.spanDedupIncrement(batch, landedIdx, k)
+        state.overwrite(report.write, s"$statePath/reports")
+        state.overwrite(delta.write, s"$statePath/index")
+      }
     }
-  }
 
   /** Per-doc cleaned reports accumulated by [[spanDedupSink]]:
     * (doc_id, n_spans, n_kept, clean_sig, n_chars_kept, batch_id).
     */
-  def readSpanReports(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame =
+  def readSpanReports(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(s"$statePath/reports")
       .withColumn("batch_id", col("batch_id").cast("long"))
 
   /** The landed span-digest index accumulated by [[spanDedupSink]]. */
-  def readSpanIndex(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame =
+  def readSpanIndex(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(s"$statePath/index").select("span_md5")
 
   /** Streaming ARBITRARY-OFFSET duplicated-span detection — the
@@ -426,51 +295,34 @@ object StreamOps {
     * each micro-batch's stride-1 l-gram digests are checked against
     * the landed gram index plus the batch itself, maximal per-doc
     * regions land as the batch's report, and the batch's new digests
-    * append to the index. Same per-batch-atomic parquet contract as
-    * the sibling sinks (a retried batch reads only `batch_id <
-    * current` and overwrites its own dirs). The detection analog of
-    * [[spanDedupSink]]'s removal: landed text is never re-chunked,
+    * append to the index ([[perBatch]] state). The detection analog
+    * of [[spanDedupSink]]'s removal: landed text is never re-chunked,
     * and an incoming near-copy is flagged at ANY offset.
     */
   def duplicatedSpansSink(docs: DataFrame, statePath: String, l: Int = 8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val hc = spark.sparkContext.hadoopConfiguration
-          val idxPath = new org.apache.hadoop.fs.Path(s"$statePath/grams")
-          val fs = idxPath.getFileSystem(hc)
-          val landed =
-            if (fs.exists(idxPath))
-              spark.read.parquet(idxPath.toString)
-                .filter(col("batch_id") < batchId)
-                .select("gram_md5")
-            else
-              spark.range(0).select(lit("").as("gram_md5"))
-          val (report, delta) = graft.llmops.TextOps
-            .duplicatedSpansIncrement(batch, landed, l)
-          report.write.mode("overwrite")
-            .parquet(s"$statePath/reports/batch_id=$batchId")
-          delta.write.mode("overwrite")
-            .parquet(s"$statePath/grams/batch_id=$batchId")
-        }
-        ()
+      : DataStreamWriter[Row] =
+    perBatch(docs) { (batch, state) =>
+      if (!batch.isEmpty) {
+        val landed = state.landed(s"$statePath/grams")
+          .map(_.select("gram_md5"))
+          .getOrElse(batch.sparkSession.range(0)
+            .select(lit("").as("gram_md5")))
+        val (report, delta) =
+          TextOps.duplicatedSpansIncrement(batch, landed, l)
+        state.overwrite(report.write, s"$statePath/reports")
+        state.overwrite(delta.write, s"$statePath/grams")
+      }
     }
-  }
 
   /** Per-doc duplicated-region reports accumulated by
     * [[duplicatedSpansSink]]. */
-  def readDupSpanReports(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame =
+  def readDupSpanReports(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(s"$statePath/reports")
       .withColumn("batch_id", col("batch_id").cast("long"))
 
   /** The landed gram-digest index accumulated by
     * [[duplicatedSpansSink]]. */
-  def readGramIndex(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): DataFrame =
+  def readGramIndex(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(s"$statePath/grams").select("gram_md5")
 
   /** Hourly per-type counts/sums with late-data tolerance. */
@@ -597,28 +449,21 @@ object StreamOps {
     * associative, so many small partial rows and few compacted ones
     * read identically).
     *
-    * Restart safety: `foreachBatch` is AT-LEAST-ONCE (a crash between
-    * the write and the checkpoint commit replays the batch), so each
-    * batch writes by OVERWRITING its own `batch_id=<id>` partition
-    * directory — a replay rewrites the same rows instead of appending
-    * a double-counted second copy. That per-batch overwrite is the
-    * standard exactly-once recipe for idempotent file sinks.
+    * Restart safety: each batch's partials are one [[perBatch]]
+    * directory, so a replay rewrites the same rows instead of appending
+    * a double-counted second copy.
     */
   def rollupMaintenanceSink(events: DataFrame, partialsPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    events.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        batch
-          .filter(col("ts").isNotNull)
-          .select(col("event_type"), to_date(col("ts")).as("d"),
-            col("value").cast("decimal(18,2)").as("v"))
-          .groupBy("event_type", "d")
-          .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-            min(col("v")).as("mn"), max(col("v")).as("mx"))
-          .write.mode("overwrite")
-          .parquet(s"$partialsPath/batch_id=$batchId")
-        ()
+      : DataStreamWriter[Row] =
+    perBatch(events) { (batch, state) =>
+      state.overwrite(batch
+        .filter(col("ts").isNotNull)
+        .select(col("event_type"), to_date(col("ts")).as("d"),
+          col("value").cast("decimal(18,2)").as("v"))
+        .groupBy("event_type", "d")
+        .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
+          min(col("v")).as("mn"), max(col("v")).as("mx"))
+        .write, partialsPath)
     }
 
   /** The current report from the stored partials: one re-aggregation
@@ -627,8 +472,7 @@ object StreamOps {
     * distinct non-null days, because the same day may appear in many
     * batches' partials).
     */
-  def readRollup(spark: org.apache.spark.sql.SparkSession,
-      partialsPath: String): DataFrame =
+  def readRollup(spark: SparkSession, partialsPath: String): DataFrame =
     spark.read.parquet(partialsPath)
       .groupBy("event_type")
       .agg(sum(col("n")).as("n_events"),
@@ -641,9 +485,8 @@ object StreamOps {
   /** Streaming heavy hitters over a document stream with BOUNDED state:
     * a merged CountMinSketch (KB–MB, ε/confidence-sized — NEVER grows
     * with vocabulary) plus a `4k`-term candidate ring, maintained per
-    * micro-batch as parquet state (the rollup-sink pattern: restart-safe
-    * because the state is files; a retried batch re-reads only state
-    * with `batch_id < current`, so replays are idempotent).
+    * micro-batch as [[perBatch]] parquet state (restart-safe because
+    * the state is files; replays are idempotent).
     *
     * Per batch: exact in-batch term counts (map-combined aggregation)
     * yield the batch's top-4k candidates; the batch CMS (fixed seed →
@@ -661,89 +504,84 @@ object StreamOps {
   def heavyHittersSink(docs: DataFrame, statePath: String, k: Int = 20,
       eps: Double = 1e-4, confidence: Double = 0.99,
       textCol: String = "text")
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val breadth = k * 4
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // one tokenization pass feeds both the exact top-breadth
-        // aggregation and the CMS build
-        val toks = batch.select(explode(
-          graft.expressions.WordShingles.shingles(col(textCol), 1)).as("t"))
-          .persist()
-        try {
-          val batchTop = toks.groupBy("t").count()
-            .orderBy(col("count").desc, col("t")).limit(breadth)
-            .as[(String, Long)].collect().map(_._1)
-          if (batchTop.nonEmpty) {
-            val batchCms = toks.stat.countMinSketch("t", eps, confidence,
-              CmsSeed)
-            val prev = readHeavyState(spark, statePath, batchId)
-            // sketches only merge when built under identical parameters;
-            // a restart with different eps/confidence against existing
-            // state would otherwise surface as a bare
-            // IncompatibleMergeException with no hint of the cause
-            for ((_, _, _, Some((pe, pc))) <- prev
-                 if pe != eps || pc != confidence)
-              throw new IllegalStateException(
-                s"heavyHittersSink state at $statePath was built with " +
-                s"eps=$pe confidence=$pc but this stream was started " +
-                s"with eps=$eps confidence=$confidence; CountMinSketches " +
-                "with different parameters cannot merge. Restart with " +
-                "the original parameters or point at a fresh statePath.")
-            val merged = prev match {
-              case Some((_, prevCms, _, _)) => prevCms.mergeInPlace(batchCms)
-              case None => batchCms
-            }
-            val prevCand =
-              prev.map(_._3).getOrElse(Array.empty[String])
-            val cand = (prevCand ++ batchTop).distinct
-              .map(t => (t, merged.estimateCount(t)))
-              .sortBy { case (t, e) => (-e, t) }
-              .take(breadth)
-            val bos = new java.io.ByteArrayOutputStream()
-            merged.writeTo(bos)
-            // the parameters travel WITH the sketch bytes so the
-            // mismatch check above can name them on restart
-            Seq((bos.toByteArray, eps, confidence, CmsSeed))
-              .toDF("sketch", "eps", "confidence", "seed").coalesce(1)
-              .write.mode("overwrite")
-              .parquet(s"$statePath/sketch/batch_id=$batchId")
-            cand.toSeq.toDF("term", "est").coalesce(1)
-              .write.mode("overwrite")
-              .parquet(s"$statePath/cand/batch_id=$batchId")
-            // Older state is superseded — prune so a year-long stream
-            // doesn't accumulate per-batch dirs. Prune strictly BELOW
-            // the batch id actually READ this batch (NOT batchId-1:
-            // token-less batches write nothing, so the predecessor may
-            // be several ids back — deleting it would strand a crash-
-            // then-replay with no state and silently reset every
-            // count). The read id itself always survives, so a replay
-            // of THIS batch re-reads exactly what this attempt read.
-            // The cand TREE (the index pick-latest consults) is fully
-            // pruned before the sketch tree: a crash between the two
-            // tree passes leaves orphan sketches — harmless, collected
-            // next prune — never a cand entry whose sketch is gone.
-            // (The invariant relied on is the per-TREE order of the
-            // Seq below, not a per-id interleaving.)
-            for (readId <- prev.map(_._1)) {
-              val fs = new org.apache.hadoop.fs.Path(statePath)
-                .getFileSystem(spark.sparkContext.hadoopConfiguration)
-              for (tree <- Seq("cand", "sketch");
-                   p = new org.apache.hadoop.fs.Path(s"$statePath/$tree")
-                   if fs.exists(p);
-                   st <- fs.listStatus(p)) {
-                val n = st.getPath.getName
-                if (n.startsWith("batch_id=") &&
-                    n.stripPrefix("batch_id=").toLong < readId)
-                  fs.delete(st.getPath, true)
-              }
+    perBatch(docs) { (batch, state) =>
+      val spark = state.spark
+      import spark.implicits._
+      // one tokenization pass feeds both the exact top-breadth
+      // aggregation and the CMS build
+      val toks = batch.select(explode(
+        graft.expressions.WordShingles.shingles(col(textCol), 1)).as("t"))
+        .persist()
+      try {
+        val batchTop = toks.groupBy("t").count()
+          .orderBy(col("count").desc, col("t")).limit(breadth)
+          .as[(String, Long)].collect().map(_._1)
+        if (batchTop.nonEmpty) {
+          val batchCms = toks.stat.countMinSketch("t", eps, confidence,
+            CmsSeed)
+          val prev = readHeavyState(state, statePath)
+          // sketches only merge when built under identical parameters;
+          // a restart with different eps/confidence against existing
+          // state would otherwise surface as a bare
+          // IncompatibleMergeException with no hint of the cause
+          for ((_, _, _, Some((pe, pc))) <- prev
+               if pe != eps || pc != confidence)
+            throw new IllegalStateException(
+              s"heavyHittersSink state at $statePath was built with " +
+              s"eps=$pe confidence=$pc but this stream was started " +
+              s"with eps=$eps confidence=$confidence; CountMinSketches " +
+              "with different parameters cannot merge. Restart with " +
+              "the original parameters or point at a fresh statePath.")
+          val merged = prev match {
+            case Some((_, prevCms, _, _)) => prevCms.mergeInPlace(batchCms)
+            case None => batchCms
+          }
+          val prevCand =
+            prev.map(_._3).getOrElse(Array.empty[String])
+          val cand = (prevCand ++ batchTop).distinct
+            .map(t => (t, merged.estimateCount(t)))
+            .sortBy { case (t, e) => (-e, t) }
+            .take(breadth)
+          val bos = new java.io.ByteArrayOutputStream()
+          merged.writeTo(bos)
+          // the parameters travel WITH the sketch bytes so the
+          // mismatch check above can name them on restart
+          state.overwrite(Seq((bos.toByteArray, eps, confidence, CmsSeed))
+            .toDF("sketch", "eps", "confidence", "seed").coalesce(1)
+            .write, s"$statePath/sketch")
+          state.overwrite(cand.toSeq.toDF("term", "est").coalesce(1)
+            .write, s"$statePath/cand")
+          // Older state is superseded — prune so a year-long stream
+          // doesn't accumulate per-batch dirs. Prune strictly BELOW
+          // the batch id actually READ this batch (NOT `state.id - 1`:
+          // token-less batches write nothing, so the predecessor may
+          // be several ids back — deleting it would strand a crash-
+          // then-replay with no state and silently reset every
+          // count). The read id itself always survives, so a replay
+          // of THIS batch re-reads exactly what this attempt read.
+          // The cand TREE (the index pick-latest consults) is fully
+          // pruned before the sketch tree: a crash between the two
+          // tree passes leaves orphan sketches — harmless, collected
+          // next prune — never a cand entry whose sketch is gone.
+          // (The invariant relied on is the per-TREE order of the
+          // Seq below, not a per-id interleaving.)
+          for (readId <- prev.map(_._1)) {
+            val fs = new Path(statePath)
+              .getFileSystem(spark.sparkContext.hadoopConfiguration)
+            for (tree <- Seq("cand", "sketch");
+                 p = new Path(s"$statePath/$tree")
+                 if fs.exists(p);
+                 st <- fs.listStatus(p)) {
+              val n = st.getPath.getName
+              if (n.startsWith("batch_id=") &&
+                  n.stripPrefix("batch_id=").toLong < readId)
+                fs.delete(st.getPath, true)
             }
           }
-        } finally toks.unpersist()
-        ()
+        }
+      } finally { toks.unpersist(); () }
     }
   }
 
@@ -754,24 +592,19 @@ object StreamOps {
   val CmsSeed = 42
 
   /** Latest persisted (batchId, sketch, candidates, stored params)
-    * strictly BELOW `beforeBatch` (a retried batch must not read its
+    * landed below `state`'s batch (a retried batch must not read its
     * own failed attempt's state). Params are None for state written by
     * pre-param-stamp versions of the sink (merge proceeds unchecked —
     * the legacy default was the library default).
     */
-  private def readHeavyState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, beforeBatch: Long)
+  private def readHeavyState(state: BatchState, statePath: String)
       : Option[(Long, org.apache.spark.util.sketch.CountMinSketch,
         Array[String], Option[(Double, Double)])] = {
-    // existence probe instead of read-and-catch: Spark's resolver logs
-    // the underlying FileNotFoundException at ERROR level before
-    // throwing the (caught) AnalysisException — pure cold-start noise
-    val candPath = new org.apache.hadoop.fs.Path(s"$statePath/cand")
-    val fs = candPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(candPath)) return None
-    val candTree = spark.read.parquet(s"$statePath/cand")
-      .filter(col("batch_id") < beforeBatch)
-    if (candTree.isEmpty) return None
+    val spark = state.spark
+    val candTree = state.landed(s"$statePath/cand") match {
+      case Some(t) if !t.isEmpty => t
+      case _ => return None
+    }
     // partition-dir inference types batch_id as int; read it as long
     val latest = candTree.agg(max(col("batch_id").cast("long")))
       .head().getLong(0)
@@ -802,7 +635,7 @@ object StreamOps {
     * per-batch-atomic files, so any successfully read batch dir is
     * internally consistent.
     */
-  def readHeavyHitters(spark: org.apache.spark.sql.SparkSession,
+  def readHeavyHitters(spark: SparkSession,
       statePath: String, k: Int = 20): DataFrame = {
     import spark.implicits._
     // bounded even on an unpruned legacy statePath: job 1 finds the
@@ -848,7 +681,7 @@ object StreamOps {
     * against a ground-truth batch. Returns (term, n) for every
     * candidate present in the corpus, ordered (n desc, term).
     */
-  def recoverExactCounts(spark: org.apache.spark.sql.SparkSession,
+  def recoverExactCounts(spark: SparkSession,
       statePath: String, corpus: DataFrame, k: Int = 20,
       textCol: String = "text"): DataFrame = {
     // full candidate ring (not just top-k): the ring is the recall

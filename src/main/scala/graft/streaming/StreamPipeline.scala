@@ -46,17 +46,22 @@ object StreamPipeline {
       counts.merge(filterName, passing.count(), (a, b) => a + b)
   }
 
+  /** The topic a filter's alerts go to: its name in directory-safe
+    * form (dots → dashes). [[run]] rejects filter lists in which two
+    * names map to one topic.
+    */
+  def topicOf(filterName: String): String = filterName.replace('.', '-')
+
   /** Durable fan-out: passing alerts append to
-    * `basePath/topic=<filter>/` — the file-based analog of the
+    * `basePath/topic=<topicOf(filter)>/` — the file-based analog of the
     * broker's per-science-topic Kafka fan-out (a Kafka notifier swaps
     * in by writing the same DataFrame to a topic; downstream consumers
     * read their topic directory with partition pruning on `topic=`).
-    * Filter names sanitize to directory-safe form (dots → dashes).
     */
   class ParquetTopicNotifier(basePath: String,
       selectColumns: Seq[String] = Seq.empty) extends Notifier {
     def notify(filterName: String, batchId: Long, passing: DataFrame): Unit = {
-      val topic = filterName.replace('.', '-')
+      val topic = topicOf(filterName)
       val out =
         if (selectColumns.nonEmpty) passing.selectExpr(selectColumns: _*)
         else passing
@@ -98,7 +103,16 @@ object StreamPipeline {
     // pre-flight: every requested filter must bind against this
     // stream's schema (the §3.1 name-binding step, checked BEFORE the
     // query starts — a misconfigured filter list fails here with the
-    // missing columns named, not per micro-batch)
+    // missing columns named, not per micro-batch). Names must be
+    // distinct and map to distinct topics: the calls of one batch run
+    // concurrently, and two appends into one topic directory would
+    // share its commit area.
+    filterNames.groupBy(topicOf).values.find(_.size > 1).foreach { same =>
+      throw new IllegalArgumentException(
+        s"filters ${same.mkString("'", "', '", "'")} all write topic " +
+          s"'${topicOf(same.head)}'; list each filter once, under names " +
+          "that stay distinct when dots become dashes")
+    }
     filterNames.foreach { n =>
       val missing = graft.schema.AlertSchemas.missingColumns(stream.schema, n)
       require(missing.isEmpty,

@@ -157,7 +157,7 @@ class RetrievalSpec extends SparkSpec {
       .select(col("doc_id").as("did"), col("text"))
     val landed = Retrieval.postingsIndex(
       d.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val appended = Retrieval.postingsAppend(
+    val appended = Retrieval.DocIndex.Postings.append(
       d.filter(pmod(col("did"), lit(10L)) === 7L), landed)
     val full = Retrieval.postingsIndex(d)
     def key(df: org.apache.spark.sql.DataFrame) =
@@ -396,7 +396,7 @@ class RetrievalSpec extends SparkSpec {
       (5L, "b c a a b c a a x")
     ).toDF("did", "text")
     val phrases = Seq((7L, "a a"), (9L, "b c")).toDF("qid", "phrase")
-    val idx = Retrieval.positionalIndex(corpus).localCheckpoint()
+    val idx = Retrieval.tokenPositions(corpus).localCheckpoint()
     assert(rows(Retrieval.phraseProbe(phrases, idx, topN = 10)) ===
       rows(Retrieval.phraseSearch(phrases, corpus, n = 2, topN = 10)))
     // divergence, by contract: a 1-token phrase probed against the
@@ -418,12 +418,12 @@ class RetrievalSpec extends SparkSpec {
     val d = spark.read.parquet(s"$dir/documents.parquet")
     val corpus = d.filter(pmod(col("doc_id"), lit(100L)) =!= 0L)
       .select(col("doc_id").as("did"), col("text"))
-    val grown = Retrieval.positionalAppend(
+    val grown = Retrieval.DocIndex.Positional.append(
       corpus.filter(pmod(col("did"), lit(10L)) === 7L),
-      Retrieval.positionalIndex(
+      Retrieval.tokenPositions(
         corpus.filter(pmod(col("did"), lit(10L)) =!= 7L)))
       .localCheckpoint()
-    val full = Retrieval.positionalIndex(corpus).localCheckpoint()
+    val full = Retrieval.tokenPositions(corpus).localCheckpoint()
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("did", "pos", "tok").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
@@ -577,12 +577,12 @@ class RetrievalSpec extends SparkSpec {
     val d = spark.read.parquet(s"$dir/documents.parquet")
     val corpus = d.filter(pmod(col("doc_id"), lit(100L)) =!= 0L)
       .select(col("doc_id").as("did"), col("text"))
-    val grown = Retrieval.gramAppend(
+    val grown = Retrieval.DocIndex.Gram(2).append(
       corpus.filter(pmod(col("did"), lit(10L)) === 7L),
-      Retrieval.gramIndex(
-        corpus.filter(pmod(col("did"), lit(10L)) =!= 7L), n = 2), n = 2)
+      Retrieval.gramPositions(
+        corpus.filter(pmod(col("did"), lit(10L)) =!= 7L), n = 2))
       .localCheckpoint()
-    val full = Retrieval.gramIndex(corpus, n = 2).localCheckpoint()
+    val full = Retrieval.gramPositions(corpus, n = 2).localCheckpoint()
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("did", "pos", "gram").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
@@ -693,11 +693,11 @@ class RetrievalSpec extends SparkSpec {
     def key3(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.toString).toSet
     assert(key3(Retrieval.indexDelete(gone,
-        Retrieval.positionalIndex(corpus))) ===
-      key3(Retrieval.positionalIndex(kept)))
+        Retrieval.tokenPositions(corpus))) ===
+      key3(Retrieval.tokenPositions(kept)))
     assert(key3(Retrieval.indexDelete(gone,
-        Retrieval.gramIndex(corpus, n = 2))) ===
-      key3(Retrieval.gramIndex(kept, n = 2)))
+        Retrieval.gramPositions(corpus, n = 2))) ===
+      key3(Retrieval.gramPositions(kept, n = 2)))
   }
 
   test("indexUpsert == rebuild-on-updated-corpus for all three index " +
@@ -718,7 +718,7 @@ class RetrievalSpec extends SparkSpec {
       .select(col("doc_id").as("qid"), col("text"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.toString).toSeq
-    val upserted = Retrieval.indexUpsert(updated,
+    val upserted = Retrieval.DocIndex.Postings.upsert(updated,
       Retrieval.postingsIndex(corpus.select("did", "text")))
       .localCheckpoint()
     val probed = rows(Retrieval.bm25Probe(queries, upserted, topN = 10))
@@ -732,14 +732,12 @@ class RetrievalSpec extends SparkSpec {
     assert(key3(upserted) !==
       key3(Retrieval.postingsIndex(corpus.select("did", "text"))))
     // positional and gram shapes: row-set equality with the rebuild
-    assert(key3(Retrieval.indexUpsert(updated,
-        Retrieval.positionalIndex(corpus.select("did", "text")),
-        Retrieval.positionalIndex)) ===
-      key3(Retrieval.positionalIndex(postCorpus)))
-    assert(key3(Retrieval.indexUpsert(updated,
-        Retrieval.gramIndex(corpus.select("did", "text"), n = 2),
-        Retrieval.gramIndex(_, n = 2))) ===
-      key3(Retrieval.gramIndex(postCorpus, n = 2)))
+    assert(key3(Retrieval.DocIndex.Positional.upsert(updated,
+        Retrieval.tokenPositions(corpus.select("did", "text")))) ===
+      key3(Retrieval.tokenPositions(postCorpus)))
+    assert(key3(Retrieval.DocIndex.Gram(2).upsert(updated,
+        Retrieval.gramPositions(corpus.select("did", "text"), n = 2))) ===
+      key3(Retrieval.gramPositions(postCorpus, n = 2)))
   }
 
   test("bm25f: title evidence outranks body evidence at equal length, " +
@@ -768,8 +766,8 @@ class RetrievalSpec extends SparkSpec {
       (3L, "x y z x y z x y z x y")).toDF("did", "text")
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.toString).toSet
-    assert(key(Retrieval.indexUpsert(updated, idx,
-        Retrieval.bm25fIndex(_, titleLen = 6))) ===
+    assert(key(Retrieval.DocIndex.Fielded(titleLen = 6).upsert(updated,
+        idx)) ===
       key(Retrieval.bm25fIndex(post, titleLen = 6)))
   }
 
@@ -1146,7 +1144,7 @@ class RetrievalSpec extends SparkSpec {
     val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
     val corpus = d.filter(!isQuery)
       .select(col("doc_id").as("did"), col("text"))
-    val positions = Retrieval.positionalIndex(corpus)
+    val positions = Retrieval.tokenPositions(corpus)
     val phrases = d.filter(isQuery).select(col("doc_id").as("qid"),
       element_at(graft.expressions.WordShingles.shingles(col("text"), 2),
         1).as("phrase"))

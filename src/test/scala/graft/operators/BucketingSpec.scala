@@ -107,9 +107,9 @@ class BucketingSpec extends SparkSpec {
           .shingles(col("text"), 2), 1).as("phrase"))
     val corpus = d.filter(col("doc_id") % 100 =!= 0)
       .select(col("doc_id").as("did"), col("text"))
-    val grams = Retrieval.gramIndex(corpus, n = 2)
+    val grams = Retrieval.gramPositions(corpus, n = 2)
     try {
-      // the production layout the gramIndex scaladoc prescribes: the
+      // the production layout the gramPositions scaladoc prescribes: the
       // positional gram relation persisted bucketed by its probe key.
       // hashpartitioning(gram) satisfies the (did, gram) occurrence
       // aggregation's clustering (equal (did, gram) ⇒ equal gram ⇒

@@ -105,6 +105,35 @@ class StreamFanOutSpec extends SparkSpec {
     }
   }
 
+  /** `run` must refuse `names` before any query starts, naming each of
+    * `clashing`. */
+  private def assertRejectedBeforeStart(names: Seq[String],
+      clashing: Seq[String]): Unit = {
+    names.distinct.foreach(FilterRegistry.registerSql(_, "rb > 0.5"))
+    val notifier = new StreamPipeline.CountingNotifier
+    val activeBefore = spark.streams.active.map(_.id).toSet
+    val e = intercept[IllegalArgumentException](
+      StreamPipeline.run(stream(writeInput("collide")), names, notifier,
+        checkpointDir = Some(Files.createTempDirectory("graft-ckpt").toString)))
+    clashing.foreach(n => assert(e.getMessage.contains(s"'$n'"), e))
+    assert(spark.streams.active.map(_.id).toSet === activeBefore)
+    assert(notifier.counts.isEmpty)
+  }
+
+  test("filter names that map to one topic are rejected before start") {
+    assert(StreamPipeline.topicOf("sql.fanout.x.y") ===
+      StreamPipeline.topicOf("sql.fanout.x-y"))
+    assertRejectedBeforeStart(
+      Seq("sql.fanout.other", "sql.fanout.x.y", "sql.fanout.x-y"),
+      clashing = Seq("sql.fanout.x.y", "sql.fanout.x-y"))
+  }
+
+  test("a filter listed twice is rejected before start") {
+    assertRejectedBeforeStart(
+      Seq("sql.fanout.x.y", "sql.fanout.other", "sql.fanout.x.y"),
+      clashing = Seq("sql.fanout.x.y"))
+  }
+
   test("a failing filter fails the batch after every other call completes") {
     val names = register()
     val failing = names(names.length / 2)

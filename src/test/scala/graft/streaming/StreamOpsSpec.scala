@@ -409,15 +409,17 @@ class StreamOpsSpec extends SparkSpec {
         .select("doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getString(1)))
       val in = MemoryStream[(Long, String)]
-      val q = StreamOps.postingsIndexSink(
-        in.toDF().toDF("doc_id", "text"), s"$dir/state")
+      val q = StreamOps.indexSink(
+        in.toDF().toDF("doc_id", "text"), s"$dir/state",
+        Retrieval.DocIndex.Postings)
         .option("checkpointLocation", s"$dir/ckpt").start()
       in.addData(base.take(200).toSeq)
       q.processAllAvailable()
       in.addData(base.drop(200).toSeq)
       q.processAllAvailable()
       q.stop()
-      val grown = StreamOps.readPostingsIndex(spark, s"$dir/state")
+      val grown = StreamOps.readIndex(spark, s"$dir/state",
+        Retrieval.DocIndex.Postings)
       val full = Retrieval.postingsIndex(
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
           .select(col("doc_id").as("did"), col("text")))
@@ -445,16 +447,18 @@ class StreamOpsSpec extends SparkSpec {
         .select("doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getString(1)))
       val in = MemoryStream[(Long, String)]
-      val q = StreamOps.positionalIndexSink(
-        in.toDF().toDF("doc_id", "text"), s"$dir/state")
+      val q = StreamOps.indexSink(
+        in.toDF().toDF("doc_id", "text"), s"$dir/state",
+        Retrieval.DocIndex.Positional)
         .option("checkpointLocation", s"$dir/ckpt").start()
       in.addData(base.take(200).toSeq)
       q.processAllAvailable()
       in.addData(base.drop(200).toSeq)
       q.processAllAvailable()
       q.stop()
-      val grown = StreamOps.readPositionalIndex(spark, s"$dir/state")
-      val full = Retrieval.positionalIndex(
+      val grown = StreamOps.readIndex(spark, s"$dir/state",
+        Retrieval.DocIndex.Positional)
+      val full = Retrieval.tokenPositions(
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
           .select(col("doc_id").as("did"), col("text")))
       assert(grown.count() === full.count())
@@ -492,19 +496,21 @@ class StreamOpsSpec extends SparkSpec {
         .select("doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getString(1)))
       val in = MemoryStream[(Long, String)]
-      val q = StreamOps.gramIndexSink(
-        in.toDF().toDF("doc_id", "text"), s"$dir/state", n = 2)
+      val q = StreamOps.indexSink(
+        in.toDF().toDF("doc_id", "text"), s"$dir/state",
+        Retrieval.DocIndex.Gram(n = 2))
         .option("checkpointLocation", s"$dir/ckpt").start()
       in.addData(base.take(200).toSeq)
       q.processAllAvailable()
       in.addData(base.drop(200).toSeq)
       q.processAllAvailable()
       q.stop()
-      val grown = StreamOps.readGramPositions(spark, s"$dir/state")
+      val grown = StreamOps.readIndex(spark, s"$dir/state",
+        Retrieval.DocIndex.Gram(n = 2))
       val all = spark.read
         .parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id").as("did"), col("text"))
-      val full = Retrieval.gramIndex(all, n = 2)
+      val full = Retrieval.gramPositions(all, n = 2)
       assert(grown.count() === full.count())
       val d = spark.read
         .parquet("/root/testdata/sf0.001/documents.parquet")
@@ -535,15 +541,17 @@ class StreamOpsSpec extends SparkSpec {
         .select("doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getString(1)))
       val in = MemoryStream[(Long, String)]
-      val q = StreamOps.fieldedIndexSink(
-        in.toDF().toDF("doc_id", "text"), s"$dir/state", titleLen = 6)
+      val q = StreamOps.indexSink(
+        in.toDF().toDF("doc_id", "text"), s"$dir/state",
+        Retrieval.DocIndex.Fielded(titleLen = 6))
         .option("checkpointLocation", s"$dir/ckpt").start()
       in.addData(base.take(200).toSeq)
       q.processAllAvailable()
       in.addData(base.drop(200).toSeq)
       q.processAllAvailable()
       q.stop()
-      val grown = StreamOps.readFieldedIndex(spark, s"$dir/state")
+      val grown = StreamOps.readIndex(spark, s"$dir/state",
+        Retrieval.DocIndex.Fielded(titleLen = 6))
       val all = spark.read
         .parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id").as("did"), col("text"))

@@ -504,7 +504,7 @@ object Soak {
   /** Build+materialize 2.7 s for 21.5M positions; phraseProbe 4.0 s /
     * proximityProbe 6.4 s per 100-query batch vs one-shot 2.6 / 4.9 s.
     * At this corpus shape a probe costs about one one-shot pass; the
-    * split's wins are ingest (positionalAppend never re-tokenizes
+    * split's wins are ingest (DocIndex.append never re-tokenizes
     * landed docs) and serving phrase + NEAR/w batches from one held,
     * tok-bucketed relation.
     */
@@ -518,7 +518,7 @@ object Soak {
         element_at(toks, 1).as("tok_a"), element_at(toks, 5).as("tok_b"))
       .localCheckpoint()
     // production writes the index bucketed by tok; persist stands in
-    val positions = Retrieval.positionalIndex(corpus).persist()
+    val positions = Retrieval.tokenPositions(corpus).persist()
     time("positional index build+materialize 100x (one-off)")(
       println(s"  ${positions.count()} position rows"))
     noop("phraseProbe 100 phrases over held index", clear = false)(
@@ -544,7 +544,7 @@ object Soak {
     val corpus = rareCorpus()
     val qdocs = corpus.filter(col("did") % 5000 === 0)
     val phrases = leadPhrases(qdocs)
-    val grams = Retrieval.gramIndex(corpus, n = 2).persist()
+    val grams = Retrieval.gramPositions(corpus, n = 2).persist()
     time("gram index build+materialize 100x (one-off)")(
       println(s"  ${grams.count()} gram-position rows"))
     noop("gramProbe 100 phrases over held index", clear = false)(
@@ -647,9 +647,10 @@ object Soak {
       println(s"  ${postings.count()} posting rows"))
     // 10% of docs arrive updated (one appended token)
     val updated = col("did") % 10 === 3
-    val upserted = time("indexUpsert 10% of 500k docs (lazy)")(
-      Retrieval.indexUpsert(corpus.filter(updated).select(col("did"),
-        concat(col("text"), lit(" upd")).as("text")), postings).persist())
+    val upserted = time("upsert 10% of 500k docs (lazy)")(
+      Retrieval.DocIndex.Postings.upsert(corpus.filter(updated)
+        .select(col("did"), concat(col("text"), lit(" upd")).as("text")),
+        postings).persist())
     noop("bm25Probe 100 queries over the upsert-maintained index",
       clear = false)(Retrieval.bm25ProbeTerms(qTok, upserted, topN = 10))
     noop("full rebuild + probe (what upsert replaces)", clear = false)(
