@@ -1,9 +1,9 @@
 package graft.colops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Column-level helpers over in-row history arrays.
+/** The fink-utils `concat_col` helpers over in-row history arrays.
   *
   * The reference keeps each alert's photometric history embedded in the row
   * (`prv_candidates` array of structs) and flattens selected fields into
@@ -51,84 +51,4 @@ object ColOps {
     names.foldLeft(concatCols(df, names, prefix)) { (d, n) =>
       d.withColumnRenamed(prefix + n, prefix + n + prefix)
     }
-
-  /** Latest (= last) element of a history array. A1 in SURVEY §2.3. */
-  def latest(arr: Column): Column = element_at(arr, -1)
-
-  /** Count of elements matching a predicate. A2. */
-  def countWhere(arr: Column, pred: Column => Column): Column =
-    size(filter(arr, pred))
-
-  /** True when the last `n` elements all satisfy `pred`. A3. */
-  def lastNForall(arr: Column, n: Int, pred: Column => Column): Column =
-    forall(slice(arr, -n, n), pred)
-
-  /** Pairwise zip of two same-length arrays into structs (x, y). */
-  def zipped(xs: Column, ys: Column): Column =
-    zip_with(xs, ys, (x, y) => struct(x.as("x"), y.as("y")))
-
-  /** Mean of a numeric array (null on empty). */
-  def arrayMean(arr: Column): Column = {
-    val s = aggregate(arr, lit(0.0), (acc, x) => acc + x.cast("double"))
-    when(size(arr) > 0, s / size(arr))
-  }
-
-  /** Sum of a numeric array. */
-  def arraySum(arr: Column): Column =
-    aggregate(arr, lit(0.0), (acc, x) => acc + x.cast("double"))
-
-  /** Elements of `values` where the parallel `keys` array satisfies `pred`
-    * — the "same band" masking idiom (A10): zip, filter on key, project
-    * value back out.
-    */
-  def whereKey(values: Column, keys: Column, pred: Column => Column): Column =
-    transform(
-      filter(zipped(values, keys), s => pred(s.getField("y"))),
-      s => s.getField("x"))
-
-  /** Closed-form ordinary least squares over (xs, ys) arrays:
-    * returns struct(slope, intercept, r2, n). Used for the YSO SPICY R²
-    * test (G5, `filter_yso_spicy_candidates/filter.py:28-76`) and slope
-    * checks. Pure expressions → codegen.
-    */
-  def olsFit(xs: Column, ys: Column): Column = {
-    val n = size(xs).cast("double")
-    val sx = arraySum(xs)
-    val sy = arraySum(ys)
-    val sxx = aggregate(xs, lit(0.0), (a, x) => a + x.cast("double") * x.cast("double"))
-    val syy = aggregate(ys, lit(0.0), (a, y) => a + y.cast("double") * y.cast("double"))
-    val sxy = aggregate(zipped(xs, ys), lit(0.0),
-      (a, s) => a + s.getField("x").cast("double") * s.getField("y").cast("double"))
-    val denom = n * sxx - sx * sx
-    val slope = (n * sxy - sx * sy) / denom
-    val intercept = (sy - slope * sx) / n
-    val ssTot = syy - sy * sy / n
-    val ssRes = syy - intercept * sy - slope * sxy
-    val r2 = when(ssTot =!= 0.0, lit(1.0) - ssRes / ssTot)
-    struct(slope.as("slope"), intercept.as("intercept"), r2.as("r2"), n.as("n"))
-  }
-
-  /** Weighted least-squares slope with 1/sigma weights (G1/G2,
-    * `filter_rate_based_kn_candidates/filter.py:151-167`,
-    * `prefilter.py:69-84`): returns struct(slope, sigma_slope).
-    * Weights w_i = 1/dy_i^2 (numpy polyfit w=1/dy uses sqrt-weights on
-    * residuals, i.e. chi^2 weights 1/dy^2); covariance is "unscaled".
-    */
-  def weightedSlopeFit(xs: Column, ys: Column, dys: Column): Column = {
-    val w = transform(dys, d => lit(1.0) / (d.cast("double") * d.cast("double")))
-    val sw = arraySum(w)
-    val swx = aggregate(zipped(xs, w), lit(0.0),
-      (a, s) => a + s.getField("x").cast("double") * s.getField("y"))
-    val swy = aggregate(zipped(ys, w), lit(0.0),
-      (a, s) => a + s.getField("x").cast("double") * s.getField("y"))
-    val swxx = aggregate(zipped(xs, w), lit(0.0),
-      (a, s) => a + s.getField("x").cast("double") * s.getField("x").cast("double") * s.getField("y"))
-    val swxy = aggregate(zip_with(xs, zipped(ys, w), (x, s) =>
-      struct(x.cast("double").as("x"), s.getField("x").cast("double").as("y"), s.getField("y").as("w"))),
-      lit(0.0), (a, s) => a + s.getField("w") * s.getField("x") * s.getField("y"))
-    val denom = sw * swxx - swx * swx
-    val slope = (sw * swxy - swx * swy) / denom
-    val sigmaSlope = sqrt(sw / denom)
-    struct(slope.as("slope"), sigmaSlope.as("sigma_slope"))
-  }
 }

@@ -3,6 +3,7 @@ package graft.filters.ztf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.HistoryFits
 import graft.filters.{AlertFilter, FilterRegistry}
 
 /** ZTF filters over the in-row photometric history (A1-A11 array
@@ -91,7 +92,8 @@ object ZtfHistoryFilters {
   /** SPICY YSO candidates — `filter_yso_spicy_candidates/filter.py:28-158`
     * (G5): known SPICY class ∧ |linear_fit_slope| > 0.025 ∧ R² of the
     * r-band linear fit (≥5 detections) > 0.6. R² computed closed-form
-    * from the raw sums, identical to the reference's two-pass formula.
+    * from the raw sums ([[graft.expressions.LinearR2]]), identical to the
+    * reference's two-pass formula.
     */
   val ysoSpicy: AlertFilter = new AlertFilter {
     val name = "ztf.livestream.yso_spicy_candidates"
@@ -116,21 +118,7 @@ object ZtfHistoryFilters {
             s.getField("m").cast("double").as("y"),
             s.getField("f").as("f"))),
         s => validMag(s.getField("y")) && s.getField("f").cast("int") === 2)
-      val n = size(pts).cast("double")
-      val sx = aggregate(pts, lit(0.0), (a, s) => a + s.getField("x"))
-      val sy = aggregate(pts, lit(0.0), (a, s) => a + s.getField("y"))
-      val sxx = aggregate(pts, lit(0.0),
-        (a, s) => a + s.getField("x") * s.getField("x"))
-      val syy = aggregate(pts, lit(0.0),
-        (a, s) => a + s.getField("y") * s.getField("y"))
-      val sxy = aggregate(pts, lit(0.0),
-        (a, s) => a + s.getField("x") * s.getField("y"))
-      val ssxx = sxx - sx * sx / n
-      val ssyy = syy - sy * sy / n
-      val ssxy = sxy - sx * sy / n
-      val r2 = when(n >= 5 && ssxx =!= 0.0 && ssyy =!= 0.0,
-        lit(1.0) - (ssyy - ssxy * ssxy / ssxx) / ssyy)
-      spicyKnown && slopeOk && r2 > 0.6
+      spicyKnown && slopeOk && HistoryFits.linearR2(pts, minN = 5) > 0.6
     }
   }
 

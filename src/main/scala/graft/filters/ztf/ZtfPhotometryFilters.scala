@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.filters.{AlertFilter, FilterRegistry}
 import graft.astro.Astro
+import graft.expressions.HistoryFits
 import ZtfHistoryFilters.{chist, validMag}
 
 /** Photometric model-fit filters (G1-G3): the rate-based kilonova search
   * and the early-TDE prefilter. Both run the reference's per-alert
   * numpy/scipy fits as closed-form weighted least squares over in-row
-  * history arrays — pure Catalyst expressions, no UDF, no collect.
+  * history arrays, in the per-row kernels of
+  * [[graft.expressions.HistoryFits]] — no UDF, no collect.
   */
 object ZtfPhotometryFilters {
 
@@ -76,67 +78,6 @@ object ZtfPhotometryFilters {
     })
   }
 
-  /** Weighted least-squares slope and its unscaled-covariance error over
-    * struct(x=jd, y, e) points — closed form of `prefilter.py:66-84`
-    * (`np.polyfit(w=1/dy, cov="unscaled")`); chi-square weights 1/e².
-    * Returns struct(slope, serr).
-    */
-  private def weightedSlope(pts: Column): Column = {
-    val w = transform(pts, p => lit(1.0) / (p.getField("e") * p.getField("e")))
-    def s(f: Column => Column): Column =
-      aggregate(zip_with(pts, w, (p, wi) => f(p) * wi), lit(0.0), _ + _)
-    val sw = aggregate(w, lit(0.0), _ + _)
-    val swx = s(_.getField("jd"))
-    val swy = s(_.getField("y"))
-    val swxx = s(p => p.getField("jd") * p.getField("jd"))
-    val swxy = s(p => p.getField("jd") * p.getField("y"))
-    val denom = sw * swxx - swx * swx
-    struct(
-      ((sw * swxy - swx * swy) / denom).as("slope"),
-      sqrt(sw / denom).as("serr"))
-  }
-
-  /** The `is_rising` detector (G3, `prefilter.py:87-149`): per band,
-    * last-vs-prior n-σ rise/decay tests, consecutive-pair decay test,
-    * and the 3-σ weighted-slope rise test; rising iff any rise and no
-    * decay across both bands.
-    */
-  private def isRising(nsRise: Double = 2, nsDecay: Double = 1,
-      nsSlope: Double = 3): Column = {
-    val all = fluxHistory
-    def bandFlags(b: Int): (Column, Column) = {
-      val pts = filter(all, p => p.getField("ok") && p.getField("fid") === b)
-      val n = size(pts)
-      val last = try_element_at(pts, lit(-1))
-      val prior = slice(pts, lit(1), greatest(n - 1, lit(0)))
-      val rised = exists(prior, p =>
-        last.getField("f") - p.getField("f") >
-          lit(nsRise) * hypot(p.getField("e"), last.getField("e")))
-      val decayLast = exists(prior, p =>
-        p.getField("f") - last.getField("f") >
-          lit(nsDecay) * hypot(p.getField("e"), last.getField("e")))
-      val decayConsec = exists(
-        zip_with(slice(pts, lit(1), greatest(n - 1, lit(0))),
-          slice(pts, lit(2), greatest(n - 1, lit(0))),
-          (p, q) => p.getField("f") - q.getField("f") >
-            lit(nsDecay) * hypot(p.getField("e"), q.getField("e"))),
-        c => c)
-      val jds = transform(pts, _.getField("jd"))
-      val ptp = array_max(jds) - array_min(jds)
-      val fit = weightedSlope(transform(pts, p => struct(
-        p.getField("jd").as("jd"), p.getField("f").as("y"),
-        p.getField("e").as("e"))))
-      val slopeRise = n >= 3 && ptp > 0.0 &&
-        fit.getField("slope") > lit(nsSlope) * fit.getField("serr")
-      val enough = n >= 2
-      (enough && (rised || slopeRise), enough && (decayLast || decayConsec))
-    }
-    val (r1, d1) = bandFlags(1)
-    val (r2, d2) = bandFlags(2)
-    def safe(c: Column) = coalesce(c, lit(false))
-    (safe(r1) || safe(r2)) && !(safe(d1) || safe(d2))
-  }
-
   /** SIMBAD classes admitted by the early-TDE prefilter —
     * `prefilter.py:195-287` (the 90-entry whitelist).
     */
@@ -185,7 +126,8 @@ object ZtfPhotometryFilters {
         col("cdsxmatch").isin(TdeWantedClasses: _*) &&
         col("nalerthist") >= 5 &&
         nneg <= 1 && nfid(1) > 0 && nfid(2) > 0 &&
-        abs(b) >= 20 && isRising()
+        abs(b) >= 20 &&
+        HistoryFits.isRising(fluxHistory, nsRise = 2, nsDecay = 1, nsSlope = 3)
     }
   }
 
@@ -245,10 +187,10 @@ object ZtfPhotometryFilters {
       })
       // outlier cut: dc mag < 21 (NaN/null dc drops out, as in pandas)
       val good = filter(dc, p => p.getField("y") < 21)
-      val span = try_element_at(transform(good, _.getField("jd")), lit(-1)) -
-        try_element_at(transform(good, _.getField("jd")), lit(1))
-      val rate = weightedSlope(good).getField("slope")
-      pre && size(pts) >= 2 && size(good) >= 2 && span > 0.5 && rate > 0.3
+      // good ⊆ pts, so n ≥ 2 also stands for the reference's size(pts) ≥ 2
+      val fit = HistoryFits.weightedSlope(good)
+      pre && fit.getField("n") >= 2 && fit.getField("span") > 0.5 &&
+        fit.getField("slope") > 0.3
     }
   }
 

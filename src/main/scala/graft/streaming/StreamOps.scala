@@ -279,8 +279,10 @@ object StreamOps {
       }
     }
 
-  /** Per-doc cleaned reports accumulated by [[spanDedupSink]]:
-    * (doc_id, n_spans, n_kept, clean_sig, n_chars_kept, batch_id).
+  /** Per-doc reports accumulated under `<statePath>/reports`, with
+    * `batch_id` as a long: the cleaned reports of [[spanDedupSink]]
+    * (doc_id, n_spans, n_kept, clean_sig, n_chars_kept, batch_id) or the
+    * duplicated-region reports of [[duplicatedSpansSink]].
     */
   def readSpanReports(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(s"$statePath/reports")
@@ -313,12 +315,6 @@ object StreamOps {
         state.overwrite(delta.write, s"$statePath/grams")
       }
     }
-
-  /** Per-doc duplicated-region reports accumulated by
-    * [[duplicatedSpansSink]]. */
-  def readDupSpanReports(spark: SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(s"$statePath/reports")
-      .withColumn("batch_id", col("batch_id").cast("long"))
 
   /** The landed gram-digest index accumulated by
     * [[duplicatedSpansSink]]. */

@@ -625,7 +625,7 @@ class StreamOpsSpec extends SparkSpec {
         4L -> "f1 f2 f3 f4 f5 f6")
       q.processAllAvailable()
       q.stop()
-      val rep = StreamOps.readDupSpanReports(spark, s"$dir/state")
+      val rep = StreamOps.readSpanReports(spark, s"$dir/state")
         .collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("gram_start"),
           r.getAs[Long]("gram_end"), r.getAs[Long]("n_grams"),
