@@ -47,21 +47,32 @@ object ZtfHostlessFilters {
     * Scala UDF over the binary columns — the one deliberate UDF in the
     * engine (SURVEY §7.3: image ops over BinaryType), applied LAST, on
     * the survivors of all cheap cuts.
+    *
+    * The stage is ONE boolean UDF over both stamps, referenced once.
+    * Catalyst merges this `Filter` with the cheap-cut one into a single
+    * `AND`; an expression referenced twice there (`ks >= 0 && ks <= max`)
+    * is a common subexpression, which is hoisted and evaluated for every
+    * row ahead of the short-circuit. Referenced once, it runs after the
+    * cheap conjuncts, on their survivors only. The template stamp is
+    * decoded only when the science stamp is within bounds; a null stamp
+    * is not hostless.
     */
   class FitsKsScorer(scienceMax: Double = 0.5, templateMax: Double = 0.85)
       extends HostlessScorer {
     def keepHostless(candidates: DataFrame): DataFrame = {
-      val ks = udf((bytes: Array[Byte]) =>
-        if (bytes == null) Double.NaN
-        else graft.multimodal.FitsOps.hostlessKs(bytes))
-      candidates
-        .withColumn("__ks_sci", ks(col("cutoutScience.stampData")))
-        .withColumn("__ks_tpl", ks(col("cutoutTemplate.stampData")))
-        .filter(col("__ks_sci") >= 0 && col("__ks_sci") <= scienceMax &&
-          col("__ks_tpl") >= 0 && col("__ks_tpl") <= templateMax)
-        .drop("__ks_sci", "__ks_tpl")
+      val hostless = udf((sci: Array[Byte], tpl: Array[Byte]) =>
+        ksWithin(sci, scienceMax) && ksWithin(tpl, templateMax))
+      candidates.filter(hostless(col("cutoutScience.stampData"),
+        col("cutoutTemplate.stampData")))
     }
   }
+
+  /** Is `stamp` present with a KS statistic in [0, max]? (NaN is not.) */
+  private def ksWithin(stamp: Array[Byte], max: Double): Boolean =
+    stamp != null && {
+      val ks = graft.multimodal.FitsOps.hostlessKs(stamp)
+      ks >= 0 && ks <= max
+    }
 
   /** Not in the ZTF reference catalog, SIMBAD, Gaia DR3, or the MPC —
     * `filter_new_hostless/utils.py:34-84` (composing the simbad / gaia

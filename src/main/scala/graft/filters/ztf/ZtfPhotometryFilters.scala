@@ -187,10 +187,13 @@ object ZtfPhotometryFilters {
       })
       // outlier cut: dc mag < 21 (NaN/null dc drops out, as in pandas)
       val good = filter(dc, p => p.getField("y") < 21)
-      // good ⊆ pts, so n ≥ 2 also stands for the reference's size(pts) ≥ 2
+      // good ⊆ pts, so n ≥ 2 also stands for the reference's size(pts) ≥ 2;
+      // the fit is bound once through a one-element array (each getField
+      // of the kernel would copy it with its whole `good` subtree), and
+      // `exists` keeps the predicate's three-valued result
       val fit = HistoryFits.weightedSlope(good)
-      pre && fit.getField("n") >= 2 && fit.getField("span") > 0.5 &&
-        fit.getField("slope") > 0.3
+      pre && exists(array(fit), f => f.getField("n") >= 2 &&
+        f.getField("span") > 0.5 && f.getField("slope") > 0.3)
     }
   }
 

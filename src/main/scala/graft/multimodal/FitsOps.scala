@@ -2,6 +2,7 @@ package graft.multimodal
 
 import java.io.ByteArrayInputStream
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
 /** Minimal FITS image decoding + the Kolmogorov-Smirnov statistic for
@@ -29,23 +30,24 @@ object FitsOps {
         out.toByteArray
       } else payload
 
-    // walk 2880-byte header blocks until the END card
-    var headerEnd = 0
-    var done = false
-    while (!done && headerEnd + 2880 <= raw.length) {
-      val block = new String(raw, headerEnd, 2880, "US-ASCII")
-      headerEnd += 2880
-      done = block.grouped(80).exists(_.startsWith("END"))
+    // 80-byte cards up to the END card (the keyword END, then blanks);
+    // a keyword is read from columns 1-8 only, its first card counts
+    val cardAt = scala.collection.mutable.Map.empty[String, Int]
+    var pos = 0
+    var end = false
+    while (!end && pos + 80 <= raw.length) {
+      end = isEndCard(raw, pos)
+      if (!end) cardAt.getOrElseUpdate(ascii(raw, pos, 8).trim, pos)
+      pos += 80
     }
-    val header = new String(raw, 0, headerEnd, "US-ASCII")
-    def intCard(key: String): Int = {
-      val r = (key + """\s*=\s*(-?\d+)""").r
-      r.findFirstMatchIn(header).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalArgumentException(s"no $key card"))
-    }
+    require(end, "no END card")
+    def intCard(key: String): Int = intValue(raw,
+      cardAt.getOrElse(key, throw new IllegalArgumentException(s"no $key card")))
     require(intCard("BITPIX") == -32, "only BITPIX=-32 (float32) supported")
     val w = intCard("NAXIS1")
     val h = intCard("NAXIS2")
+    // the data starts at the next 2880-byte block boundary
+    val headerEnd = (pos + 2879) / 2880 * 2880
     val bb = ByteBuffer.wrap(raw, headerEnd, w * h * 4)
       .order(ByteOrder.BIG_ENDIAN)
     val px = new Array[Float](w * h)
@@ -54,18 +56,40 @@ object FitsOps {
     (w, h, px)
   }
 
-  /** Two-sample Kolmogorov-Smirnov statistic: sup |F1 − F2|. */
-  def ksStatistic(a: Array[Double], b: Array[Double]): Double = {
-    if (a.isEmpty || b.isEmpty) return Double.NaN
-    val sa = a.sorted
-    val sb = b.sorted
+  private val EndCard = "END".padTo(80, ' ')
+
+  private def isEndCard(raw: Array[Byte], pos: Int): Boolean =
+    ascii(raw, pos, 80) == EndCard
+
+  private def ascii(raw: Array[Byte], pos: Int, n: Int): String =
+    new String(raw, pos, n, StandardCharsets.US_ASCII)
+
+  /** The integer value of the card at `pos`: after the value indicator
+    * `= ` in columns 9-10, up to a `/` comment.
+    */
+  private def intValue(raw: Array[Byte], pos: Int): Int = {
+    val card = ascii(raw, pos, 80)
+    val v = card.substring(10).takeWhile(_ != '/').trim
+    if (card.substring(8, 10) != "= " || !v.matches("[+-]?\\d+"))
+      throw new IllegalArgumentException(s"not an integer card: ${card.trim}")
+    v.toInt
+  }
+
+  /** Two-sample Kolmogorov-Smirnov statistic sup |F1 − F2| of the first
+    * `na` values of `a` and the first `nb` of `b`; sorts those prefixes
+    * in place.
+    */
+  private def ksStatistic(a: Array[Double], na: Int, b: Array[Double],
+      nb: Int): Double = {
+    if (na == 0 || nb == 0) return Double.NaN
+    java.util.Arrays.sort(a, 0, na)
+    java.util.Arrays.sort(b, 0, nb)
     var i = 0; var j = 0; var d = 0.0
-    while (i < sa.length && j < sb.length) {
-      val x = math.min(sa(i), sb(j))
-      while (i < sa.length && sa(i) <= x) i += 1
-      while (j < sb.length && sb(j) <= x) j += 1
-      d = math.max(d,
-        math.abs(i.toDouble / sa.length - j.toDouble / sb.length))
+    while (i < na && j < nb) {
+      val x = math.min(a(i), b(j))
+      while (i < na && a(i) <= x) i += 1
+      while (j < nb && b(j) <= x) j += 1
+      d = math.max(d, math.abs(i.toDouble / na - j.toDouble / nb))
     }
     d
   }
@@ -88,8 +112,9 @@ object FitsOps {
     val cx = (w - 1) / 2.0
     val cy = (h - 1) / 2.0
     val r2 = radiusPx.toDouble * radiusPx
-    val center = Array.newBuilder[Double]
-    val outer = Array.newBuilder[Double]
+    val center = new Array[Double](px.length)
+    val outer = new Array[Double](px.length)
+    var nc = 0; var no = 0
     var y = 0
     while (y < h) {
       var x = 0
@@ -97,12 +122,13 @@ object FitsOps {
         val v = px(y * w + x)
         if (!v.isNaN) {
           val d2 = (x - cx) * (x - cx) + (y - cy) * (y - cy)
-          if (d2 <= r2) center += v.toDouble else outer += v.toDouble
+          if (d2 <= r2) { center(nc) = v; nc += 1 }
+          else { outer(no) = v; no += 1 }
         }
         x += 1
       }
       y += 1
     }
-    ksStatistic(center.result(), outer.result())
+    ksStatistic(center, nc, outer, no)
   }
 }

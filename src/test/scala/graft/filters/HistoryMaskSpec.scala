@@ -13,8 +13,10 @@ import graft.SparkSpec
   * restated in lambda functions (the history array read once per sum)
   * grew the analysed masks to 18,399 / 12,788 / 2,607 nodes, which the
   * analyser and planner paid for on every micro-batch. The per-row
-  * kernels of `graft.expressions.HistoryFits` read the history once;
-  * the budgets fail the build if a mask grows back.
+  * kernels of `graft.expressions.HistoryFits` read the history once,
+  * and the rate-based KN mask binds its fit once instead of copying it
+  * into each of three field reads (1,584 → 619 nodes); the budgets fail
+  * the build if a mask grows back.
   */
 class HistoryMaskSpec extends SparkSpec {
 
@@ -39,17 +41,19 @@ class HistoryMaskSpec extends SparkSpec {
   /** (jd, fid, magpsf, sigmapsf) of one detection. */
   private type Det = (Double, Int, Float, Float)
 
-  private def pointRow(d: Det): Seq[Any] =
-    Seq[Any](d._1, d._2, d._3, d._4, 20.5f, "t", 15f, 0.02f)
+  private def pointRow(d: Det, magnr: Float): Seq[Any] =
+    Seq[Any](d._1, d._2, d._3, d._4, 20.5f, "t", magnr, 0.02f)
 
   /** One alert at (ra 180, dec 30), far off the galactic plane, hosted
-    * by an "Unknown" SIMBAD class: the history before `cur`, then `cur`.
+    * by an "Unknown" SIMBAD class: the history before `cur`, then `cur`;
+    * every point has the reference magnitude `magnr`.
     */
-  private def alert(candid: Long, prv: Seq[Det], cur: Det): Row = Row(
+  private def alert(candid: Long, prv: Seq[Det], cur: Det,
+      magnr: Float = 15f): Row = Row(
     candid,
-    Row.fromSeq(pointRow(cur) ++ Seq[Any](180.0, 30.0, 0.95f, 0.9f,
+    Row.fromSeq(pointRow(cur, magnr) ++ Seq[Any](180.0, 30.0, 0.95f, 0.9f,
       prv.size + 1, prv.headOption.getOrElse(cur)._1, -999f)),
-    prv.map(d => Row.fromSeq(pointRow(d))),
+    prv.map(d => Row.fromSeq(pointRow(d, magnr))),
     "Unknown", null, 0, prv.size + 1, Row(0.0))
 
   private def frame(rows: Row*): DataFrame =
@@ -76,6 +80,19 @@ class HistoryMaskSpec extends SparkSpec {
     assert(passing(frame(flat, rising), "ztf.early_tde_prefilter") === Set(2L))
   }
 
+  test("rate_based_kn_candidates: a 0.5 mag/day fade passes, 0.2 does not") {
+    // a reference at 26 mag, at least 6.5 mag fainter than the
+    // transient, moves the DC magnitudes by under 0.003 mag, so the
+    // fitted rate is the magpsf slope; four r-band nights inside 5 days
+    def fading(candid: Long, rate: Float): Row = {
+      val pts = (0 to 3).map(i => (2460000.5 + i, 2, 18f + rate * i, 0.05f))
+      alert(candid, pts.init, pts.last, magnr = 26f)
+    }
+    val single = alert(3L, Nil, (2460000.5, 2, 18f, 0.05f), magnr = 26f)
+    assert(passing(frame(fading(1L, 0.5f), fading(2L, 0.2f), single),
+      "ztf.livestream.rate_based_kn_candidates") === Set(1L))
+  }
+
   /** Nodes of the analysed filter condition of `name` (lambda functions
     * and their variables included).
     */
@@ -88,7 +105,7 @@ class HistoryMaskSpec extends SparkSpec {
   }
 
   Seq("ztf.early_tde_prefilter" -> 1000,
-    "ztf.livestream.rate_based_kn_candidates" -> 2000,
+    "ztf.livestream.rate_based_kn_candidates" -> 700,
     "ztf.livestream.yso_spicy_candidates" -> 500).foreach { case (name, budget) =>
     test(s"$name analyses to at most $budget nodes") {
       val n = analysedNodes(name)
