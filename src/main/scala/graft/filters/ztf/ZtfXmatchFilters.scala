@@ -7,10 +7,10 @@ import graft.filters.AlertFilter
 import graft.xmatch.CrossMatch
 
 /** Cross-match-backed ZTF filters (O17-O19). Unlike the pure-predicate
-  * catalog in [[ZtfFilters]], these need a JOIN against a catalog
-  * DataFrame, so they override `apply` (the mask alone cannot express
-  * them) and also expose the reference's enrichment form — a label
-  * column, "Unknown" when unmatched.
+  * catalog in [[ZtfFilters]], these match against a catalog DataFrame,
+  * so they override `apply` (the mask alone cannot express them) and
+  * also expose the reference's enrichment form — a label column,
+  * "Unknown" when unmatched.
   */
 object ZtfXmatchFilters {
 
@@ -18,19 +18,13 @@ object ZtfXmatchFilters {
     * difference alerts only — `filter_known_tde/filter.py:59-129`.
     */
   def withKnownTde(df: DataFrame, catalog: DataFrame,
-      outCol: String = "tde"): DataFrame = {
+      outCol: String = "tde"): DataFrame =
     // the reference cross-matches only isdiffpos-valid alerts
     // (filter.py:124-129); invalid ones stay "Unknown" without competing
     // in the mutual-nearest ranking
-    val pos = df.filter(col("candidate.isdiffpos").isin("t", "1"))
-    val labeled = CrossMatch.mutualNearestLabel(
-      pos, "candid", col("candidate.ra"), col("candidate.dec"),
-      catalog, outCol)
-      .select(col("candid").as("__k"), col(outCol))
-    df.join(labeled, df("candid") === col("__k"), "left")
-      .withColumn(outCol, coalesce(col(outCol), lit("Unknown")))
-      .drop("__k")
-  }
+    CrossMatch.mutualNearestLabel(
+      df, "candid", col("candidate.ra"), col("candidate.dec"),
+      catalog, outCol, eligible = col("candidate.isdiffpos").isin("t", "1"))
 
   /** `crossmatch_symbiotic` enrichment ("Name,source" label) —
     * `filter_symbiotic_stars/filter.py:34-107`.
@@ -86,7 +80,7 @@ object ZtfXmatchFilters {
 
   /** Registry bindings to the packaged default catalogs (O23 — the
     * reference re-reads these files inside its UDF per batch; here they
-    * load once per apply and broadcast). The parameterized factories
+    * are read once per apply). The parameterized factories
     * above remain the injectable form; these resolve the catalog lazily
     * from the incoming frame's session so the string-dispatch config
     * path (SURVEY §3.1) covers the xmatch family too.

@@ -1,10 +1,17 @@
 package graft.xmatch
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ExpressionBridge
+import org.apache.spark.sql.types.{DataType, MapType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.astro.Astro
+import graft.expressions.AngularSeparation
 
 /** Spatial cross-match operators (O17-O19) — the engine analog of
   * fink-science's `cross_match_astropy` as consumed at
@@ -19,20 +26,75 @@ import graft.astro.Astro
   * the (per-source) match radius. This reproduces the reference counts
   * exactly (1/21 TDE, 19/20 symbiotic, 1/1 dwarf-AGN), including the
   * "two alerts merged into one match" behavior its comments describe
-  * (`filter_symbiotic_stars/filter.py:68-75`).
+  * (`filter_symbiotic_stars/filter.py:68-75`). Ties break by catalog row
+  * order on the alert side and by alert id on the source side.
   *
-  * Scale design: the catalog side broadcasts (KBs); a conservative
-  * |Δdec| ≤ maxRadius zone prune bounds the nested-loop join before any
-  * trig — pruned pairs have separation > every match radius, so ranks
-  * among surviving pairs decide identically (proof: a pruned pair's
-  * separation exceeds maxRadius, so if it were a rank-1 pair its match
-  * would fail the radius gate anyway, and whichever pair replaces it at
-  * rank 1 has an even larger separation). The two rank windows partition
-  * by alert resp. catalog id — no global sort anywhere.
+  * Plan: the catalog is small, so one call reads it once to the driver,
+  * finds each alert's candidate pairs with a per-row kernel over a
+  * declination-sorted copy of it, collects the pairs in one job and
+  * resolves the mutual-nearest matches on the driver. No sort, shuffle
+  * or join touches the alert rows.
+  *
+  * Why pruning at `sep < maxRad` (the largest finite radius) is safe: a
+  * match has `sep < radius ≤ maxRad`, and every pair that ranks before
+  * it at its alert or at its source has a separation no larger, so the
+  * prune keeps all of them and the match keeps both of its ranks.
+  * Conversely, a kept pair that ranks first at both ends among the kept
+  * pairs and passes the gate ranks first in the full set too: any pair
+  * ranking before it would be below `maxRad` and kept. So only pairs
+  * that fail the gate whatever their ranks are dropped. A per-source
+  * prune (`sep < radius(source)`) is NOT safe: it drops an alert's
+  * nearest source when that source is out of its own (small) range,
+  * and can then match the alert with a farther source whose radius is
+  * larger.
+  *
+  * Size of the collected pairs: every pair has `sep < maxRad`, so there
+  * are at most Σ over eligible alerts of the catalog sources within
+  * `maxRad` of the alert — alerts × (densest `maxRad` cap of the
+  * catalog), a source or two per alert for arcsecond radii, and never
+  * more than alerts × catalog rows.
   */
 object CrossMatch {
 
-  /** Adds `outCol` to `df`: the matched catalog `name`, or "Unknown".
+  /** The catalog's sources with usable coordinates, sorted by
+    * declination, as the candidate-pair kernel searches them.
+    */
+  private final class DecIndex(cid: Array[Int], ra: Array[Double],
+      dec: Array[Double], maxRad: Double) extends Serializable {
+
+    /** (cid, separation in arcsec) of every source with
+      * |Δdec|·3600 ≤ maxRad and a separation below maxRad, computed as
+      * `AngularSeparation.compute(alert, source) * 3600`.
+      */
+    def pairs(aRa: Double, aDec: Double): Array[(Int, Double)] = {
+      val w = maxRad / 3600.0 + 1e-9 // a wider window; the exact test follows
+      var lo = 0
+      var hi = dec.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (dec(mid) < aDec - w) lo = mid + 1 else hi = mid
+      }
+      val out = Array.newBuilder[(Int, Double)]
+      var i = lo
+      while (i < dec.length && dec(i) <= aDec + w) {
+        if (math.abs(aDec - dec(i)) * 3600.0 <= maxRad) {
+          val sep = AngularSeparation.compute(aRa, aDec, ra(i), dec(i)) * 3600.0
+          if (sep < maxRad) out += ((cid(i), sep))
+        }
+        i += 1
+      }
+      out.result()
+    }
+  }
+
+  /** Adds `outCol` to `df`: the matched catalog `name`, or `noMatch`.
+    *
+    * Only rows where `eligible` holds take part in the matching; the
+    * others get `noMatch`. A row with a null id or coordinate, or a
+    * source with a null or NaN coordinate, takes no part either, so it
+    * blocks no match. A source whose radius is null, NaN or infinite
+    * competes for its alerts but never matches. Runs one job to read
+    * the catalog (none for a local one) and one to collect the pairs.
     *
     * @param catalog small DataFrame with columns
     *                (name: string, ra, dec: double degrees,
@@ -46,34 +108,54 @@ object CrossMatch {
       dec: Column,
       catalog: DataFrame,
       outCol: String,
-      noMatch: String = "Unknown"): DataFrame = {
-    val maxRad = catalog.agg(max(col("radius_arcsec"))).head().getDouble(0)
-    val cat = catalog.select(
-      col("name").as("__cname"),
-      col("ra").cast("double").as("__cra"),
-      col("dec").cast("double").as("__cdec"),
-      col("radius_arcsec").cast("double").as("__crad"),
-      monotonically_increasing_id().as("__cid"))
-    val alerts = df.select(col(idCol).as("__aid"),
-      ra.cast("double").as("__ara"), dec.cast("double").as("__adec"))
-    val sepAs =
-      Astro.angSepDeg(col("__ara"), col("__adec"),
-        col("__cra"), col("__cdec")) * 3600.0
-    val cand = alerts
-      .join(broadcast(cat),
-        abs(col("__adec") - col("__cdec")) * 3600.0 <= maxRad)
-      .withColumn("__sep", sepAs)
-    val byAlert = Window.partitionBy("__aid").orderBy(col("__sep"), col("__cid"))
-    val bySource = Window.partitionBy("__cid").orderBy(col("__sep"), col("__aid"))
-    val matched = cand
-      .withColumn("__rka", row_number().over(byAlert))
-      .withColumn("__rkc", row_number().over(bySource))
-      .filter(col("__rka") === 1 && col("__rkc") === 1 &&
-        col("__sep") < col("__crad"))
-      .select(col("__aid"), col("__cname"))
-    df.join(matched, df(idCol) === matched("__aid"), "left")
-      .withColumn(outCol, coalesce(col("__cname"), lit(noMatch)))
-      .drop("__aid", "__cname")
+      noMatch: String = "Unknown",
+      eligible: Column = lit(true)): DataFrame = {
+    val cat = catalog.select(col("name").cast("string"),
+      col("ra").cast("double"), col("dec").cast("double"),
+      col("radius_arcsec").cast("double")).collect()
+    val idType = df.select(col(idCol)).schema.head.dataType
+    val alerts = df.filter(eligible && col(idCol).isNotNull)
+      .select(col(idCol).as("aid"), ra.cast("double").as("ra"), dec.cast("double").as("dec"))
+    val labels = matches(alerts, idType, cat)
+    if (labels.isEmpty) df.withColumn(outCol, lit(noMatch))
+    else {
+      val byId = ExpressionBridge.column(Literal(
+        ArrayBasedMapData(labels.map(_._1), labels.map(_._2)),
+        MapType(idType, StringType, valueContainsNull = false)))
+      df.withColumn(outCol, coalesce(byId(col(idCol)), lit(noMatch)))
+    }
+  }
+
+  private final case class Pair(aid: Any, cid: Int, sep: Double)
+
+  /** The mutual-nearest (alert id, source name) matches of `alerts`
+    * (aid, ra, dec) against the collected catalog rows; ids are in
+    * Catalyst's internal form, so they key a map literal.
+    */
+  private def matches(alerts: DataFrame, idType: DataType,
+      cat: Array[Row]): Array[(Any, UTF8String)] = {
+    def num(r: Row, i: Int): Double = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+    val radius = cat.map { r => val v = num(r, 3); if (v.isInfinite) Double.NaN else v }
+    radius.filterNot(_.isNaN).maxOption.fold(Array.empty[(Any, UTF8String)]) { maxRad =>
+      val usable = cat.indices.filter(i => !num(cat(i), 1).isNaN && !num(cat(i), 2).isNaN)
+        .sortBy(i => num(cat(i), 2))
+      val index = new DecIndex(usable.toArray, usable.map(i => num(cat(i), 1)).toArray,
+        usable.map(i => num(cat(i), 2)).toArray, maxRad)
+      val kernel = udf((a: Double, d: Double) => index.pairs(a, d))
+      val key = CatalystTypeConverters.createToCatalystConverter(idType)
+      val pairs = alerts.select(col("aid"), inline(kernel(col("ra"), col("dec"))))
+        .collect().map(r => Pair(key(r.get(0)), r.getInt(1), r.getDouble(2)))
+
+      val idOrder = PhysicalDataType.ordering(idType)
+      val nearestSource = pairs.groupMapReduce(_.aid)(identity)((p, q) =>
+        if (q.sep < p.sep || q.sep == p.sep && q.cid < p.cid) q else p)
+      val nearestAlert = pairs.groupMapReduce(_.cid)(identity)((p, q) =>
+        if (q.sep < p.sep || q.sep == p.sep && idOrder.lt(q.aid, p.aid)) q else p)
+      nearestAlert.values.collect {
+        case p if nearestSource(p.aid).cid == p.cid && p.sep < radius(p.cid) &&
+            !cat(p.cid).isNullAt(0) => p.aid -> UTF8String.fromString(cat(p.cid).getString(0))
+      }.toArray
+    }
   }
 }
 
