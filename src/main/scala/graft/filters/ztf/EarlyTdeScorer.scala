@@ -263,12 +263,16 @@ object EarlyTdeScorer {
   /** OPTIMIZER BARRIER after the fit stage: pushing downstream
     * predicates through the feature projects substitutes the whole
     * fold tree once per referenced field — the plan balloons to a
-    * multi-MB codegen unit (observed OOM). The RDD round-trip pins the
-    * boundary (lazy, no storage); downstream consumers (quality cuts,
-    * compiled tree scorers) see plain attribute references.
+    * multi-MB codegen unit (observed OOM). A `LogicalRDD` leaf over the
+    * fit stage's internal rows pins the boundary (lazy, no storage);
+    * downstream consumers (quality cuts, compiled tree scorers) see
+    * plain attribute references. It replaces a `createDataFrame(df.rdd,
+    * schema)` round-trip, whose external-`Row` serializer and
+    * deserializer over the full alert schema generated ~0.5M characters
+    * of code per task.
     */
   def featuresBarrier(featured: DataFrame): DataFrame =
-    featured.sparkSession.createDataFrame(featured.rdd, featured.schema)
+    org.apache.spark.sql.graftbridge.PlanBridge.barrier(featured)
 
   /** The full stage-1 + stage-2 pipeline: prefilter survivors →
     * closed-form features → quality cuts → classifier threshold.

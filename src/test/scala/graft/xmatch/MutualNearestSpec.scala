@@ -1,11 +1,8 @@
 package graft.xmatch
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.JobCount
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -267,26 +264,12 @@ class MutualNearestSpec extends SparkSpec {
 
   test("known_tde over a local catalog runs two Spark jobs") {
     // one job collects the candidate pairs, one materializes the rows
-    val sc = spark.sparkContext
     val df = frame(night)
     val cat = catalog(cases("known_tde").catalog)
     def run(): Long = ZtfXmatchFilters.knownTde(cat)(df).queryExecution.toRdd.count()
     val want = expected(night.filter(positive), cases("known_tde").catalog).size.toLong
     assert(run() === want)
-    val group = "mutual-nearest-job-budget"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "known_tde job budget")
-      try assert(run() === want) finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get === 2)
+    assert(JobCount(spark.sparkContext)(run()) === ((want, 2)))
   }
 }
 
