@@ -3,8 +3,8 @@ package graft.streaming
 import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.filters.FilterRegistry
@@ -93,6 +93,17 @@ object StreamPipeline {
     * so the scheduler needs more of them in flight than it has cores to
     * stay busy). The batch waits for every call, unpersists, and then
     * fails with the first failure, the others attached as suppressed.
+    *
+    * Repeated `run` calls in one JVM (replays, restarts) reuse the
+    * classes that earlier queries compiled. Each query runs on a clone
+    * of `stream`'s session, and with artifact isolation on (Spark's
+    * default) the clone gets its own executor class loader, which misses
+    * the codegen cache (keyed by class loader and code), so every query
+    * would recompile every task-side class. `run` therefore starts the
+    * query with `spark.sql.artifact.isolation.enabled` off; the caller's
+    * session is left as it was. The one condition: the query's tasks
+    * see the jars and files of the `SparkContext`, not artifacts added
+    * to a session (Spark Connect); the engine adds none.
     */
   def run(
       stream: DataFrame,
@@ -107,6 +118,9 @@ object StreamPipeline {
     // distinct and map to distinct topics: the calls of one batch run
     // concurrently, and two appends into one topic directory would
     // share its commit area.
+    require(filterNames.nonEmpty,
+      "no filters to run: filterNames is empty, so every micro-batch " +
+        "would be read and cached with nothing to notify")
     filterNames.groupBy(topicOf).values.find(_.size > 1).foreach { same =>
       throw new IllegalArgumentException(
         s"filters ${same.mkString("'", "', '", "'")} all write topic " +
@@ -124,14 +138,35 @@ object StreamPipeline {
       filterNames.size))
     var w = stream.writeStream.trigger(trigger)
     checkpointDir.foreach(d => w = w.option("checkpointLocation", d))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    w = w.foreachBatch { (batch: DataFrame, batchId: Long) =>
       // one pass per filter over the SAME cached micro-batch: scan once
       val cached = batch.persist()
       try fanOut(s"graft-fanout-$batchId", threads, filterNames.map { name =>
         () => notifier.notify(name, batchId,
           FilterRegistry.applyFilter(cached, name))
       }) finally { cached.unpersist(); () }
-    }.start()
+    }
+    startShared(stream.sparkSession, w)
+  }
+
+  private val Isolation = "spark.sql.artifact.isolation.enabled"
+  private val startLock = new Object
+
+  /** Starts `w` with artifact isolation off for the query's session
+    * clone only (see [[run]]). `start()` clones the caller's session
+    * synchronously, so the clone copies the value set here; the
+    * caller's own value (or its absence) is restored afterwards. The
+    * lock keeps concurrent starts from restoring over each other.
+    */
+  private def startShared(spark: SparkSession,
+      w: DataStreamWriter[Row]): StreamingQuery = startLock.synchronized {
+    val before = spark.conf.getAll.get(Isolation)
+    spark.conf.set(Isolation, "false")
+    try w.start()
+    finally before match {
+      case Some(v) => spark.conf.set(Isolation, v)
+      case None => spark.conf.unset(Isolation)
+    }
   }
 
   /** Runs `calls` on a pool of `threads` daemon threads named

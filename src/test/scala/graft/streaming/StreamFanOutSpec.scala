@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
@@ -94,7 +95,11 @@ class StreamFanOutSpec extends SparkSpec {
     assert(!notifier.timedOut)
     // the pool threads carried the stream thread's job group
     assert(notifier.jobGroups.asScala.toSet === Set(q.runId.toString))
+    assertTopics(base)
+  }
 
+  /** Each predicate's topic under `base` holds exactly its candids. */
+  private def assertTopics(base: String): Unit =
     Predicates.foreach { case (name, _, keep) =>
       val expected = alerts.filter(keep).map(_.candid).sorted
       assert(expected.nonEmpty && expected.length < alerts.length, name)
@@ -103,19 +108,53 @@ class StreamFanOutSpec extends SparkSpec {
       assert(got.length === expected.length, name)
       assert(got === expected, name)
     }
+
+  test("repeated runs reuse compiled classes and leave the session conf as it was") {
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val names = register()
+    val source = stream(writeInput("reuse"))
+    /** One drain from a fresh checkpoint into a fresh topic base; checks
+      * its topics and returns how many classes it compiled. */
+    def drain(): Long = {
+      val base = Files.createTempDirectory("graft-fanout-reuse").toString
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val q = StreamPipeline.run(source, names,
+        new StreamPipeline.ParquetTopicNotifier(base, Seq("candid")),
+        checkpointDir = Some(Files.createTempDirectory("graft-ckpt").toString))
+      q.awaitTermination(240000)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(q.exception.isEmpty, q.exception)
+      assertTopics(base)
+      compiled
+    }
+    val callerValue = spark.conf.getAll.get(isolation)
+    try {
+      spark.conf.unset(isolation)
+      drain()
+      assert(spark.conf.getAll.get(isolation) === None)
+      spark.conf.set(isolation, "true")
+      assert(drain() === 0L)
+      assert(spark.conf.getAll.get(isolation) === Some("true"))
+      spark.conf.unset(isolation)
+      assert(drain() === 0L)
+      assert(spark.conf.getAll.get(isolation) === None)
+    } finally callerValue match {
+      case Some(v) => spark.conf.set(isolation, v)
+      case None => spark.conf.unset(isolation)
+    }
   }
 
-  /** `run` must refuse `names` before any query starts, naming each of
-    * `clashing`. */
+  /** `run` must refuse `names` before any query starts, with a message
+    * that contains each of `cause`. */
   private def assertRejectedBeforeStart(names: Seq[String],
-      clashing: Seq[String]): Unit = {
+      cause: Seq[String]): Unit = {
     names.distinct.foreach(FilterRegistry.registerSql(_, "rb > 0.5"))
     val notifier = new StreamPipeline.CountingNotifier
     val activeBefore = spark.streams.active.map(_.id).toSet
     val e = intercept[IllegalArgumentException](
       StreamPipeline.run(stream(writeInput("collide")), names, notifier,
         checkpointDir = Some(Files.createTempDirectory("graft-ckpt").toString)))
-    clashing.foreach(n => assert(e.getMessage.contains(s"'$n'"), e))
+    cause.foreach(c => assert(e.getMessage.contains(c), e))
     assert(spark.streams.active.map(_.id).toSet === activeBefore)
     assert(notifier.counts.isEmpty)
   }
@@ -125,13 +164,17 @@ class StreamFanOutSpec extends SparkSpec {
       StreamPipeline.topicOf("sql.fanout.x-y"))
     assertRejectedBeforeStart(
       Seq("sql.fanout.other", "sql.fanout.x.y", "sql.fanout.x-y"),
-      clashing = Seq("sql.fanout.x.y", "sql.fanout.x-y"))
+      cause = Seq("'sql.fanout.x.y'", "'sql.fanout.x-y'"))
   }
 
   test("a filter listed twice is rejected before start") {
     assertRejectedBeforeStart(
       Seq("sql.fanout.x.y", "sql.fanout.other", "sql.fanout.x.y"),
-      clashing = Seq("sql.fanout.x.y"))
+      cause = Seq("'sql.fanout.x.y'"))
+  }
+
+  test("an empty filter list is rejected before start") {
+    assertRejectedBeforeStart(Seq.empty, cause = Seq("filterNames is empty"))
   }
 
   test("a failing filter fails the batch after every other call completes") {
