@@ -10,8 +10,14 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
 /** Per-row least-squares kernels over in-row history arrays: the
-  * `is_rising` detector, the σ-weighted slope and the OLS R² of the
+  * `is_rising` detector, the σ-weighted linear fit and the OLS R² of the
   * photometric filters (SURVEY G1–G3, G5).
+  *
+  * [[HistoryFits.Wls]] is the engine's one σ-weighted least-squares fit
+  * of a history (`np.polyfit(w=1/dy, cov="unscaled")`): `IsRising`'s
+  * slope test, `WeightedSlope` (and through it the early-TDE band fits
+  * of `EarlyTdeScorer`) and `RainbowFit`'s seed all sum their points
+  * into it and read the fit out of it.
   *
   * Why kernels: a fit stated in lambda functions reads its history array
   * once per sum, and Catalyst copies the whole history subtree at every
@@ -27,7 +33,7 @@ import org.apache.spark.sql.types._
   * e² = 0, or a zero determinant: raw jd ≈ 2.46e6 squared cancels on
   * same-night points) and fail the query with DIVIDE_BY_ZERO, a kernel
   * reports "no fit": `IsRising`'s slope test is not true,
-  * `WeightedSlope`'s slope and serr are null.
+  * `WeightedSlope`'s fitted fields are null.
   */
 object HistoryFits {
 
@@ -65,29 +71,62 @@ object HistoryFits {
       else { isNull(i) = false; v(i) = p.getDouble(ord) }
   }
 
-  /** σ-weighted least squares of y on x over the first n points, weights
-    * 1/e² (`np.polyfit(w=1/dy, cov="unscaled")`); inputs non-null. Leaves
-    * (slope, serr) in `out`, or returns false for no fit. Each sum is
-    * its own left fold, so one loop adds in the order separate folds did.
+  /** σ-weighted least squares of y on x, weights 1/e²
+    * (`np.polyfit(w=1/dy, cov="unscaled")`): the moments of the points
+    * added since the last `reset`, and the fit read out of them. Each
+    * sum is its own left fold from 0.0, so one loop adds in the order
+    * separate folds did.
     */
-  private[expressions] def wls(x: Array[Double], y: Array[Double],
-      e: Array[Double], n: Int, out: Array[Double]): Boolean = {
+  private[expressions] final class Wls {
     var sw = 0.0; var swx = 0.0; var swy = 0.0; var swxx = 0.0
-    var swxy = 0.0
-    var i = 0
-    while (i < n) {
-      val ee = e(i) * e(i)
+    var swxy = 0.0; var swyy = 0.0
+
+    def reset(): Unit = {
+      sw = 0.0; swx = 0.0; swy = 0.0; swxx = 0.0; swxy = 0.0; swyy = 0.0
+    }
+
+    /** Adds (x, y) at weight 1/e²; false, adding nothing, where e² = 0. */
+    def add(x: Double, y: Double, e: Double): Boolean = {
+      val ee = e * e
       if (ee == 0.0) return false
       val w = 1.0 / ee
-      sw += w; swx += x(i) * w; swy += y(i) * w
-      swxx += x(i) * x(i) * w; swxy += x(i) * y(i) * w
-      i += 1
+      sw += w; swx += x * w; swy += y * w
+      swxx += x * x * w; swxy += x * y * w; swyy += y * y * w
+      true
     }
-    val denom = sw * swxx - swx * swx
-    if (denom == 0.0) return false
-    out(0) = (sw * swxy - swx * swy) / denom
-    out(1) = math.sqrt(sw / denom)
-    true
+
+    /** Sums the first n points afresh; false for no fit (a point with
+      * e² = 0 or a zero determinant). Inputs non-null.
+      */
+    def fit(x: Array[Double], y: Array[Double], e: Array[Double],
+        n: Int): Boolean = {
+      reset()
+      var i = 0
+      while (i < n) {
+        if (!add(x(i), y(i), e(i))) return false
+        i += 1
+      }
+      det != 0.0
+    }
+
+    def det: Double = sw * swxx - swx * swx
+    def slope: Double = (sw * swxy - swx * swy) / det
+    def slopeErr: Double = math.sqrt(sw / det)
+    /** The intercept: the fitted y at x = 0. */
+    def level: Double = (swxx * swy - swx * swxy) / det
+    def levelErr: Double = math.sqrt(swxx / det)
+
+    /** Σw(y − level − slope·x)² in its algebraic form
+      * swyy − 2a·swy − 2m·swxy + a²·sw + 2am·swx + m²·swxx, clamped at 0
+      * against cancellation on near-perfect fits (NaN stays NaN).
+      */
+    def chi2: Double = {
+      val a = level
+      val m = slope
+      val c = swyy - 2.0 * a * swy - 2.0 * m * swxy + a * a * sw +
+        2.0 * a * m * swx + m * m * swxx
+      if (gt(0.0, c)) 0.0 else c
+    }
   }
 
   /** A finite double as a Java literal for generated code. */
@@ -170,7 +209,7 @@ object IsRising {
     val jd = new HistoryFits.Field(total)
     val f = new HistoryFits.Field(total)
     val e = new HistoryFits.Field(total)
-    val fit = new Array[Double](2)
+    val fit = new HistoryFits.Wls
     var rise = false
     var band = 1
     while (band <= 2) {
@@ -213,8 +252,8 @@ object IsRising {
             if (gt(mn, jd.v(i))) mn = jd.v(i)
             i += 1
           }
-          if (gt(mx - mn, 0.0) && HistoryFits.wls(jd.v, f.v, e.v, n, fit) &&
-              gt(fit(0), nsSlope * fit(1))) rise = true
+          if (gt(mx - mn, 0.0) && fit.fit(jd.v, f.v, e.v, n) &&
+              gt(fit.slope, nsSlope * fit.slopeErr)) rise = true
         }
       }
       band += 1
@@ -224,9 +263,11 @@ object IsRising {
 }
 
 /** σ-weighted linear fit (G1/G2, `filter_rate_based_kn_candidates/
-  * filter.py:151-167`) over `struct(jd, y, e)` points, weights 1/e²:
-  * struct(slope, serr, n, span) with n the point count and span the last
-  * jd minus the first (null without points). slope and serr are null
+  * filter.py:151-167`; the early-TDE band fits) over `struct(jd, y, e)`
+  * points, weights 1/e²: struct(slope, serr, n, span, level, level_err,
+  * chi2) with n the point count, span the last jd minus the first (null
+  * without points), level ± level_err the intercept at jd = 0 and chi2
+  * Σw(y − fit)² (see [[HistoryFits.Wls]]). The fitted fields are null
   * where a field they need is null or there is no fit.
   */
 case class WeightedSlope(child: Expression) extends UnaryExpression {
@@ -261,7 +302,8 @@ object WeightedSlope {
   val outputType: StructType = StructType(Seq(
     StructField("slope", DoubleType), StructField("serr", DoubleType),
     StructField("n", IntegerType, nullable = false),
-    StructField("span", DoubleType)))
+    StructField("span", DoubleType), StructField("level", DoubleType),
+    StructField("level_err", DoubleType), StructField("chi2", DoubleType)))
 
   /** Java-callable kernel (referenced from generated code). */
   def compute(pts: ArrayData, numFields: Int, iJd: Int, iY: Int,
@@ -276,13 +318,15 @@ object WeightedSlope {
       jd.set(i, p, iJd); y.set(i, p, iY); e.set(i, p, iE)
       i += 1
     }
-    val row = new GenericInternalRow(4)
-    val fit = new Array[Double](2)
-    // y only enters swy and swxy: with a null y the serr still stands
-    if (jd.nulls == 0 && e.nulls == 0 &&
-        HistoryFits.wls(jd.v, y.v, e.v, n, fit)) {
-      if (y.nulls == 0) row.update(0, fit(0))
-      row.update(1, fit(1))
+    val row = new GenericInternalRow(7)
+    val fit = new HistoryFits.Wls
+    // y only enters swy, swxy and swyy: with a null y the errors stand
+    if (jd.nulls == 0 && e.nulls == 0 && fit.fit(jd.v, y.v, e.v, n)) {
+      if (y.nulls == 0) {
+        row.update(0, fit.slope); row.update(4, fit.level)
+        row.update(6, fit.chi2)
+      }
+      row.update(1, fit.slopeErr); row.update(5, fit.levelErr)
     }
     row.update(2, n)
     if (n > 0 && !jd.isNull(0) && !jd.isNull(n - 1))

@@ -213,29 +213,24 @@ object RainbowFit {
     }
 
     // ---- WLS seed: per-band level a and rate m at the alert epoch ----
-    // (same closed forms as the linear stage: centered intercept =
-    // level, slope = rate)
+    // (the linear stage's fit: centered intercept = level, slope = rate)
     var tSeed = 6000.0
     var aG = 0.0; var aR = 0.0; var mBest = 0.0; var aBest = 0.0
+    val fit = new HistoryFits.Wls
     var b = 0
     while (b < 2) {
       val lb = if (b == 0) LambdaG else LambdaR
-      var sw = 0.0; var swx = 0.0; var swy = 0.0; var swxx = 0.0
-      var swxy = 0.0; var nb = 0
+      fit.reset()
+      var nb = 0
       var j = 0
       while (j < nDet) {
-        if (lam(j) == lb) {
-          val w = 1.0 / (s(j) * s(j))
-          sw += w; swx += w * u(j); swy += w * y(j)
-          swxx += w * u(j) * u(j); swxy += w * u(j) * y(j)
-          nb += 1
-        }
+        // e > 0, so only an e² that underflows to 0 leaves the seed
+        if (lam(j) == lb && fit.add(u(j), y(j), s(j))) nb += 1
         j += 1
       }
-      val denom = sw * swxx - swx * swx
-      if (nb >= 2 && denom != 0.0) {
-        val m = (sw * swxy - swx * swy) / denom
-        val a = (swxx * swy - swx * swxy) / denom
+      if (nb >= 2 && fit.det != 0.0) {
+        val m = fit.slope
+        val a = fit.level
         if (b == 0) aG = a else aR = a
         if (a > 0.0 && m > 0.0 && a / m > aBest / math.max(mBest, 1e-300)) {
           // track the band with the slowest (best-measured) rise

@@ -3,6 +3,7 @@ package graft.filters.ztf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.HistoryFits
 import graft.filters.AlertFilter
 
 /** Stage 2 of the early-TDE pipeline (SURVEY §3.3) as a DISTRIBUTED
@@ -19,9 +20,10 @@ import graft.filters.AlertFilter
   * both have closed forms over the in-alert history:
   *
   *  - per-band σ-weighted LINEAR flux fit, centered on the alert epoch
-  *    jd_max: level a = f̂(jd_max) ± σa, rate m = df/dt ± σm, χ² — all
-  *    closed-form sums (the linear sibling of Rainbow's sigmoid rise;
-  *    same SNANA flux domain as the prefilter);
+  *    jd_max: level a = f̂(jd_max) ± σa, rate m = df/dt ± σm, χ² — the
+  *    one closed-form fit of [[graft.expressions.HistoryFits]] (the
+  *    linear sibling of Rainbow's sigmoid rise; same SNANA flux domain
+  *    as the prefilter);
   *  - `snr_rise_time` → rate significance m/σm per band (the fit
   *    covariance the reference samples is available analytically);
   *  - `temperature` → Wien-approximation color temperature from the
@@ -62,56 +64,16 @@ object EarlyTdeScorer {
   private val WienC = HcOverK * (1.0 / LambdaG - 1.0 / LambdaR)
   private val WienLimit = math.pow(LambdaR / LambdaG, 5.0)
 
-  /** ONE fold per band: struct(n, sw, swx, swy, swxx, swxy, swyy) of
-    * the σ-weighted sums over (x = jd − jdMax, y = flux). Everything
-    * downstream is scalar algebra over this struct — which is why the
-    * caller MATERIALIZES it as a column: CollapseProject duplicates
-    * non-cheap expressions per reference, and an inline sums fold
-    * referenced from every fit field would re-run O(history) work per
-    * field (the round-2 lesson that cost q23 8 s).
+  /** One band's σ-weighted linear flux fit, [[HistoryFits.weightedSlope]]
+    * over (x = jd − jdMax, y = flux, e) of its ok points: centring makes
+    * the intercept the level a ± sa at jdMax; the slope is the rate
+    * m ± sm per day.
     */
-  private def bandSums(pts: Column, jdMax: Column, band: Int): Column = {
-    val bp = filter(pts, p =>
-      p.getField("ok") && p.getField("fid") === band)
-    val zero = struct(
-      lit(0.0).as("sw"), lit(0.0).as("swx"), lit(0.0).as("swy"),
-      lit(0.0).as("swxx"), lit(0.0).as("swxy"), lit(0.0).as("swyy"))
-    val sums = aggregate(bp, zero, (acc, p) => {
-      val x = p.getField("jd") - jdMax
-      val y = p.getField("f")
-      val w = lit(1.0) / (p.getField("e") * p.getField("e"))
-      struct(
-        (acc.getField("sw") + w).as("sw"),
-        (acc.getField("swx") + w * x).as("swx"),
-        (acc.getField("swy") + w * y).as("swy"),
-        (acc.getField("swxx") + w * x * x).as("swxx"),
-        (acc.getField("swxy") + w * x * y).as("swxy"),
-        (acc.getField("swyy") + w * y * y).as("swyy"))
-    })
-    struct(size(bp).as("n"), sums.as("s"))
-  }
-
-  /** Fit struct from a MATERIALIZED sums column: level a ± sa at jdMax
-    * (centering makes the intercept the level), rate m ± sm per day,
-    * and χ² in its algebraic form
-    * Σw(y−a−mx)² = Swyy − 2aSwy − 2mSwxy + a²Sw + 2amSwx + m²Swxx
-    * (clamped at 0 against cancellation on near-perfect fits).
-    */
-  private def fitFromSums(bs: Column): Column = {
-    def s(n: String) = bs.getField("s").getField(n)
-    val (sw, swx, swy, swxx, swxy, swyy) =
-      (s("sw"), s("swx"), s("swy"), s("swxx"), s("swxy"), s("swyy"))
-    val denom = sw * swxx - swx * swx
-    val m = sdiv(sw * swxy - swx * swy, denom)
-    val a = sdiv(swxx * swy - swx * swxy, denom)
-    val chi2 = greatest(
-      swyy - lit(2.0) * a * swy - lit(2.0) * m * swxy +
-        a * a * sw + lit(2.0) * a * m * swx + m * m * swxx,
-      lit(0.0))
-    struct(bs.getField("n").as("n"),
-      a.as("a"), sqrt(sdiv(swxx, denom)).as("sa"),
-      m.as("m"), sqrt(sdiv(sw, denom)).as("sm"), chi2.as("chi2"))
-  }
+  private def bandFit(pts: Column, jdMax: Column, band: Int): Column =
+    HistoryFits.weightedSlope(transform(
+      filter(pts, p => p.getField("ok") && p.getField("fid") === band),
+      p => struct((p.getField("jd") - jdMax).as("jd"), p.getField("f").as("y"),
+        p.getField("e").as("e"))))
 
   /** Feature struct from the two MATERIALIZED per-band fit columns
     * (attribute references only — cheap under CollapseProject). Fields
@@ -140,33 +102,35 @@ object EarlyTdeScorer {
     def f(c: Column, n: String) = c.getField(n)
     val deredden = pow(lit(10.0), lit(0.4) * ebv *
       lit(graft.astro.Dereddening.AvZtf(1) - graft.astro.Dereddening.AvZtf(2)))
-    val ratio = sdiv(f(g, "a"), f(r, "a")) * deredden
+    val ratio = sdiv(f(g, "level"), f(r, "level")) * deredden
     val lnr = when(ratio > 0, log(lit(WienLimit) / ratio))
     val temperature = sdiv(lit(WienC), lnr)
     // σ_T = T²/WienC · σ_lnRatio, σ_lnRatio² = (σa_g/a_g)² + (σa_r/a_r)²
     val sLnRatio = sqrt(
-      pow(sdiv(f(g, "sa"), f(g, "a")), 2) +
-        pow(sdiv(f(r, "sa"), f(r, "a")), 2))
+      pow(sdiv(f(g, "level_err"), f(g, "level")), 2) +
+        pow(sdiv(f(r, "level_err"), f(r, "level")), 2))
     val snrT = abs(sdiv(lit(WienC), temperature * sLnRatio))
     // rate significance: the weaker band bounds the claim
-    val snrRise = least(abs(sdiv(f(g, "m"), f(g, "sm"))),
-      abs(sdiv(f(r, "m"), f(r, "sm"))))
+    val snrRise = least(abs(sdiv(f(g, "slope"), f(g, "serr"))),
+      abs(sdiv(f(r, "slope"), f(r, "serr"))))
     val dof = (f(g, "n") + f(r, "n") - lit(4)).cast("double")
-    val rChisq = sdiv(f(g, "chi2") + f(r, "chi2"), dof)
+    // a band without a fit adds 0 to the pooled χ²
+    def chi2(c: Column) = coalesce(f(c, "chi2"), lit(0.0))
+    val rChisq = sdiv(chi2(g) + chi2(r), dof)
     // zero-crossing t0 − jdMax = −a/m (flux-weighted mean over bands
     // would hide a band disagreement; take the better-measured band)
-    val useG = sdiv(f(g, "sm"), abs(f(g, "m"))) <=
-      sdiv(f(r, "sm"), abs(f(r, "m")))
-    val aBest = when(useG, f(g, "a")).otherwise(f(r, "a"))
-    val saBest = when(useG, f(g, "sa")).otherwise(f(r, "sa"))
-    val mBest = when(useG, f(g, "m")).otherwise(f(r, "m"))
-    val smBest = when(useG, f(g, "sm")).otherwise(f(r, "sm"))
+    val useG = sdiv(f(g, "serr"), abs(f(g, "slope"))) <=
+      sdiv(f(r, "serr"), abs(f(r, "slope")))
+    val aBest = when(useG, f(g, "level")).otherwise(f(r, "level"))
+    val saBest = when(useG, f(g, "level_err")).otherwise(f(r, "level_err"))
+    val mBest = when(useG, f(g, "slope")).otherwise(f(r, "slope"))
+    val smBest = when(useG, f(g, "serr")).otherwise(f(r, "serr"))
     val relRef = sdiv(-aBest, mBest)
     val eRef = abs(relRef) * sqrt(
       pow(sdiv(saBest, aBest), 2) + pow(sdiv(smBest, mBest), 2))
     struct(
       f(g, "n").as("n_g"), f(r, "n").as("n_r"),
-      f(g, "m").as("rate_g"), f(r, "m").as("rate_r"),
+      f(g, "slope").as("rate_g"), f(r, "slope").as("rate_r"),
       snrRise.as("snr_rise_time"),
       temperature.as("temperature"), snrT.as("snr_temperature"),
       rChisq.as("r_chisq"),
@@ -174,8 +138,8 @@ object EarlyTdeScorer {
   }
 
   /** Adds `tde_features` to the frame. Intermediates (flux history,
-    * per-band sums, per-band fits) are materialized as columns so every
-    * O(history) fold runs exactly once per row. `deredden = true`
+    * per-band fits) are materialized as columns so each fit runs
+    * exactly once per row. `deredden = true`
     * applies the S12 correction (see featuresFromFits): if the frame
     * already carries an `ebv` column — e.g. from an upstream
     * [[graft.astro.Dereddening.EbvTable]] enrichment stage (the real
@@ -192,13 +156,11 @@ object EarlyTdeScorer {
         col("candidate.ra").cast("double"), col("candidate.dec").cast("double"))
     df
       .withColumn("__tde_pts", ZtfPhotometryFilters.fluxHistoryCol)
-      .withColumn("__tde_gs", bandSums(col("__tde_pts"), jdMax, 1))
-      .withColumn("__tde_rs", bandSums(col("__tde_pts"), jdMax, 2))
-      .withColumn("__tde_g", fitFromSums(col("__tde_gs")))
-      .withColumn("__tde_r", fitFromSums(col("__tde_rs")))
+      .withColumn("__tde_g", bandFit(col("__tde_pts"), jdMax, 1))
+      .withColumn("__tde_r", bandFit(col("__tde_pts"), jdMax, 2))
       .withColumn("tde_features",
         featuresFromFits(col("__tde_g"), col("__tde_r"), ebv))
-      .drop("__tde_pts", "__tde_gs", "__tde_rs", "__tde_g", "__tde_r")
+      .drop("__tde_pts", "__tde_g", "__tde_r")
   }
 
   /** Adds the NONLINEAR `rainbow_fit` struct — the distributed
@@ -262,7 +224,7 @@ object EarlyTdeScorer {
 
   /** OPTIMIZER BARRIER after the fit stage: pushing downstream
     * predicates through the feature projects substitutes the whole
-    * fold tree once per referenced field — the plan balloons to a
+    * fit tree once per referenced field — the plan balloons to a
     * multi-MB codegen unit (observed OOM). A `LogicalRDD` leaf over the
     * fit stage's internal rows pins the boundary (lazy, no storage);
     * downstream consumers (quality cuts, compiled tree scorers) see

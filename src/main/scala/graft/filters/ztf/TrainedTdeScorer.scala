@@ -5,7 +5,7 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ml.TreeColumnCompiler
+import graft.ml.PortableGbt
 
 /** A TRAINED stage-2 early-TDE classifier behind the
   * [[EarlyTdeScorer.TdeScorer]] seam — the engine's answer to the
@@ -17,7 +17,7 @@ import graft.ml.TreeColumnCompiler
   *
   * Shape: training is a one-off distributed Spark ML `GBTClassifier`
   * fit over the closed-form feature structs; the FROZEN model is then
-  * compiled to Column algebra ([[TreeColumnCompiler]]) so scoring is a
+  * compiled to Column algebra ([[PortableGbt]]) so scoring is a
   * pure whole-stage-codegen map stage — the reference's
   * per-candidate driver loop (`filter.py:305-360`) becomes a
   * distributed predicate with zero per-row model-dispatch overhead.
@@ -47,7 +47,7 @@ object TrainedTdeScorer {
 
   /** Feature rows for raw alert frames: alerts with a defined two-band
     * fit (≥2 points per band), one row per alert. The barrier keeps
-    * the n_g/n_r filter from inlining the fold tree per reference
+    * the n_g/n_r filter from inlining the fit tree per reference
     * (see [[EarlyTdeScorer.featuresBarrier]]).
     */
   private def featureRows(alerts: DataFrame, label: Double): DataFrame =
@@ -69,7 +69,7 @@ object TrainedTdeScorer {
       maxIter: Int = 20, maxDepth: Int = 3,
       seed: Long = 42L): GbtTdeScorer = {
     // the boosting loop makes MANY passes over the training frame;
-    // localCheckpoint truncates the (enormous) closed-form fold
+    // localCheckpoint truncates the (enormous) closed-form fit
     // lineage so feature extraction runs exactly once, not per pass
     val training = featureRows(positives, 1.0)
       .unionByName(featureRows(negatives, 0.0))
@@ -87,27 +87,27 @@ object TrainedTdeScorer {
   }
 
   /** The frozen model as a [[EarlyTdeScorer.TdeScorer]]: probability
-    * of the TDE class, compiled to Column algebra.
+    * of the TDE class, compiled to Column algebra through its portable
+    * form, so it scores exactly as its saved artifact does.
     */
   final class GbtTdeScorer(val model: GBTClassificationModel)
       extends EarlyTdeScorer.TdeScorer {
-    def score(feat: Column): Column =
-      round(TreeColumnCompiler.gbtProbability(model,
-        i => featAsDouble(feat, featureNames(i))), 6)
+    private val portable =
+      new PortableTdeScorer(PortableGbt.fromModel(model, featureNames))
+    def score(feat: Column): Column = portable.score(feat)
 
-    /** Freeze to the open `graft-gbt-1` JSON (see
-      * [[graft.ml.PortableGbt]]) — the deployable artifact: load it
-      * back with [[TrainedTdeScorer.loadPortable]] on a classpath
-      * WITHOUT `org.apache.spark.ml`, with bit-identical scores.
+    /** Freeze to the open `graft-gbt-1` JSON (see [[PortableGbt]]) —
+      * the deployable artifact: load it back with
+      * [[TrainedTdeScorer.loadPortable]] on a classpath WITHOUT
+      * `org.apache.spark.ml`, with bit-identical scores.
       */
-    def save(path: String): Unit =
-      graft.ml.PortableGbt.fromModel(model, featureNames).save(path)
+    def save(path: String): Unit = portable.ensemble.save(path)
   }
 
   /** A saved portable ensemble as a [[EarlyTdeScorer.TdeScorer]] —
     * same Column algebra, no Spark ML types anywhere on the path.
     */
-  final class PortableTdeScorer(ensemble: graft.ml.PortableGbt.Ensemble)
+  final class PortableTdeScorer(val ensemble: PortableGbt.Ensemble)
       extends EarlyTdeScorer.TdeScorer {
     require(ensemble.featureNames == featureNames,
       s"portable model features ${ensemble.featureNames} != $featureNames")
@@ -117,5 +117,5 @@ object TrainedTdeScorer {
   }
 
   def loadPortable(path: String): PortableTdeScorer =
-    new PortableTdeScorer(graft.ml.PortableGbt.load(path))
+    new PortableTdeScorer(PortableGbt.load(path))
 }

@@ -13,8 +13,17 @@ import org.json4s.jackson.JsonMethods
   * the format is open JSON and the loader needs nothing beyond this
   * file: a deployment can freeze a [[graft.filters.ztf.TrainedTdeScorer]]
   * once and score forever without `org.apache.spark.ml` on the
-  * classpath (scoring compiles to the same Column algebra as
-  * [[TreeColumnCompiler]] — whole-stage-codegen CASE WHEN chains).
+  * classpath.
+  *
+  * Scoring compiles the ensemble into Catalyst Column algebra: each
+  * tree a nested CASE WHEN chain, the ensemble a weighted sum. The
+  * model is baked into the plan as literals, so scoring stays inside
+  * whole-stage codegen with no VectorAssembler or per-row predict UDF
+  * (what `model.transform` would run). Split semantics mirror
+  * `Split.shouldGoLeft`: continuous → left iff value ≤ threshold;
+  * categorical → left iff the value is in `leftCategories`. Null inputs
+  * must be imputed by the caller's feature accessor (the ML pipeline
+  * would have thrown on them).
   *
   * Format (`graft-gbt-1`):
   * {{{
@@ -44,15 +53,18 @@ object PortableGbt {
   final case class Ensemble(featureNames: Seq[String],
       treeWeights: Seq[Double], trees: Seq[PNode]) {
 
-    /** GBT margin Σ w_m·tree_m(x) as Column algebra — identical shape
-      * to [[TreeColumnCompiler.gbtRawScore]], no ML classes involved.
+    /** GBT margin Σ w_m·tree_m(x) as Column algebra, no ML classes
+      * involved.
       */
     def rawScore(features: Int => Column): Column =
       trees.zip(treeWeights).map { case (t, w) =>
         compile(t, features) * lit(w)
       }.reduce(_ + _)
 
-    /** Positive-class probability for a logistic-loss GBT. */
+    /** Positive-class probability for a logistic-loss GBT:
+      * 1 / (1 + e^(−2·raw)), the map `GBTClassificationModel` applies in
+      * `raw2probabilityInPlace`.
+      */
     def probability(features: Int => Column): Column =
       lit(1.0) / (lit(1.0) + exp(lit(-2.0) * rawScore(features)))
 

@@ -34,8 +34,11 @@ class HistoryFitsSpec extends SparkSpec {
 
   private final case class P(x: Double, y: Double, e: Double)
 
-  /** Weighted fit (slope, serr); None for a zero e² or determinant. */
-  private def wls(ps: Seq[P]): Option[(Double, Double)] =
+  private final case class Fit(slope: Double, serr: Double, level: Double,
+      levelErr: Double, chi2: Double)
+
+  /** Weighted fit; None for a zero e² or determinant. */
+  private def wls(ps: Seq[P]): Option[Fit] =
     if (ps.exists(p => p.e * p.e == 0.0)) None
     else {
       val w = ps.map(p => 1.0 / (p.e * p.e))
@@ -44,9 +47,17 @@ class HistoryFitsSpec extends SparkSpec {
       val sw = w.foldLeft(0.0)(_ + _)
       val (swx, swy) = (s(_.x), s(_.y))
       val (swxx, swxy) = (s(p => p.x * p.x), s(p => p.x * p.y))
+      val swyy = s(p => p.y * p.y)
       val det = sw * swxx - swx * swx
       if (det == 0.0) None
-      else Some(((sw * swxy - swx * swy) / det, math.sqrt(sw / det)))
+      else {
+        val m = (sw * swxy - swx * swy) / det
+        val a = (swxx * swy - swx * swxy) / det
+        val chi2 = swyy - 2.0 * a * swy - 2.0 * m * swxy + a * a * sw +
+          2.0 * a * m * swx + m * m * swxx
+        Some(Fit(m, math.sqrt(sw / det), a, math.sqrt(swxx / det),
+          if (gt(0.0, chi2)) 0.0 else chi2))
+      }
     }
 
   private def isRising(h: Option[Seq[HfFlux]], nsRise: Double,
@@ -68,7 +79,7 @@ class HistoryFitsSpec extends SparkSpec {
         jds.reduce((a, c) => if (gt(a, c)) c else a)
       val slopeRise = pts.size >= 3 && known && gt(ptp, 0.0) &&
         wls(pts.map(p => P(p.jd.get, p.f.get, p.e.get)))
-          .exists { case (slope, serr) => gt(slope, nsSlope * serr) }
+          .exists(f => gt(f.slope, nsSlope * f.serr))
       (rised || slopeRise, decay)
     }
     val (r1, d1) = bandFlags(1)
@@ -84,9 +95,24 @@ class HistoryFitsSpec extends SparkSpec {
     if (ps.exists(p => p.jd.isEmpty || p.e.isEmpty)) (None, None, ps.size, span)
     else {
       // a null y only reaches swy and swxy, i.e. the slope
-      val fit = wls(ps.map(p => P(p.jd.get, p.y.getOrElse(0.0), p.e.get)))
-      val slope = if (ps.exists(_.y.isEmpty)) None else fit.map(_._1)
-      (slope, fit.map(_._2), ps.size, span)
+      val fit = slopeFit(ps)
+      val slope = if (ps.exists(_.y.isEmpty)) None else fit.map(_.slope)
+      (slope, fit.map(_.serr), ps.size, span)
+    }
+  }
+
+  private def slopeFit(ps: Seq[HfSlope]): Option[Fit] =
+    wls(ps.map(p => P(p.jd.get, p.y.getOrElse(0.0), p.e.get)))
+
+  /** (level, level_err, chi2) of the same fit, with None for SQL null. */
+  private def levelFit(h: Option[Seq[HfSlope]])
+      : Option[(Option[Double], Option[Double], Option[Double])] = h.map { ps =>
+    if (ps.exists(p => p.jd.isEmpty || p.e.isEmpty)) (None, None, None)
+    else {
+      // a null y reaches swy, swxy and swyy: the level and the χ²
+      val fit = slopeFit(ps)
+      val known = fit.filter(_ => ps.forall(_.y.isDefined))
+      (known.map(_.level), fit.map(_.levelErr), known.map(_.chi2))
     }
   }
 
@@ -157,6 +183,14 @@ class HistoryFitsSpec extends SparkSpec {
               s"weighted_slope ${c.id}: $s vs ${(slope, serr, n, span)}")
           case other => fail(s"weighted_slope ${c.id}: $other")
         }
+        (levelFit(c.slope), Option(r.getStruct(3))) match {
+          case (None, None) =>
+          case (Some((level, levelErr, chi2)), Some(s)) =>
+            assert(same(level, s.get(4)) && same(levelErr, s.get(5)) &&
+              same(chi2, s.get(6)),
+              s"weighted_slope level ${c.id}: $s vs ${(level, levelErr, chi2)}")
+          case other => fail(s"weighted_slope level ${c.id}: $other")
+        }
         assert(same(linearR2(c.line, 5), r.get(4)), s"linear_r2 ${c.id}")
       }
       // every branch is reached
@@ -164,6 +198,10 @@ class HistoryFitsSpec extends SparkSpec {
       assert(rising >= 10 && cases.size - rising >= 10, s"$rising rising")
       val slopes = cases.flatMap(c => weightedSlope(c.slope)).map(_._1)
       assert(slopes.count(_.isDefined) >= 10 && slopes.count(_.isEmpty) >= 10)
+      val levels = cases.flatMap(c => levelFit(c.slope))
+      assert(levels.count(_._1.isDefined) >= 10 &&
+        levels.count(_._1.isEmpty) >= 10)
+      assert(levels.count(_._3.exists(_ > 0.0)) >= 10)
       val r2 = cases.flatMap(c => linearR2(c.line, 5))
       assert(r2.count(_ > 0.6) >= 5 && r2.count(_ <= 0.6) >= 5)
     }
@@ -176,6 +214,11 @@ class HistoryFitsSpec extends SparkSpec {
     // σ = 0: no fit, but the count and span stand
     assert(weightedSlope(byId(Planted.ZeroSigma).slope) ===
       Some((None, None, 3, Some(2.0))))
+    assert(levelFit(byId(Planted.ZeroSigma).slope) === Some((None, None, None)))
+    // a null y: the level and χ² are null, the level's error stands
+    assert(levelFit(byId(Planted.SlopeOnly).slope).map {
+      case (l, le, c) => (l.isDefined, le.isDefined, c.isDefined)
+    } === Some((false, true, false)))
     // a null history: not rising, null fit, null R²
     assert(!isRising(byId(Planted.NullHistory).flux, 2, 1, 3))
     assert(weightedSlope(byId(Planted.NullHistory).slope).isEmpty)

@@ -1,10 +1,12 @@
 package graft.filters
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.filters.ztf.EarlyTdeScorer
 
 /** The three least-squares livestream masks over hand-built alerts of
   * the ZTF layout; no fixture is read.
@@ -15,8 +17,10 @@ import graft.SparkSpec
   * analyser and planner paid for on every micro-batch. The per-row
   * kernels of `graft.expressions.HistoryFits` read the history once,
   * and the rate-based KN mask binds its fit once instead of copying it
-  * into each of three field reads (1,584 → 619 nodes); the budgets fail
-  * the build if a mask grows back.
+  * into each of three field reads (1,584 → 619 nodes). The early-TDE
+  * feature stage fits each band with the same kernel instead of a
+  * six-sum lambda fold per band (2,972 → 1,474 nodes). The budgets fail
+  * the build if a mask or the stage grows back.
   */
 class HistoryMaskSpec extends SparkSpec {
 
@@ -111,5 +115,20 @@ class HistoryMaskSpec extends SparkSpec {
       val n = analysedNodes(name)
       assert(n <= budget, s"$name: $n analysed nodes")
     }
+  }
+
+  /** Nodes of the columns the stage computes (pass-through attributes
+    * left out).
+    */
+  test("the early-TDE feature stage analyses to at most 1600 nodes") {
+    val plan = EarlyTdeScorer.withFeatures(frame(), deredden = true)
+      .queryExecution.analyzed
+    var n = 0
+    plan.foreach {
+      case p: Project => p.projectList.filterNot(_.isInstanceOf[Attribute])
+        .foreach(_.foreach(_ => n += 1))
+      case _ =>
+    }
+    assert(n <= 1600, s"early-TDE features: $n analysed nodes")
   }
 }

@@ -9,12 +9,17 @@ seed `--seed0 + i` for both sides and alternates which side runs first,
 so drift of the host cancels. For every end-to-end metric declared in
 the change's `BENCHMARK.json` it prints, per workload, each side's median
 and quartiles, how many pairs the change won, the relative change of
-the median, and two verdicts:
+the median, and three verdicts:
 
   claim   the change won at least 9 of 10 pairs (scaled to N) and the
           medians differ by more than the parent's interquartile range;
   worse   the change's median is worse than the parent's by more than
-          the metric's `bound`.
+          the metric's `bound`;
+  unresolved
+          the parent's own spread (interquartile range over median) is
+          wider than the metric's `bound`, so the runs cannot tell a change
+          within the bound from none; not printed when every change run
+          beats every parent run.
 
 It also prints how many runs were not `correct` or had failed
 operations. Nothing in either tree is changed; the exports are removed
@@ -98,8 +103,12 @@ def report(workload, metrics, runs, pairs):
         verdict = []
         if wins >= 0.9 * len(both) and gain > pq[2] - pq[0]:
             verdict.append("claim")
-        if pq[1] and -gain / pq[1] > m.get("bound", float("inf")):
+        bound = m.get("bound", float("inf"))
+        if pq[1] and -gain / pq[1] > bound:
             verdict.append("worse")
+        beats_all = max(cs) < min(ps) if lower else min(cs) > max(ps)
+        if pq[1] and (pq[2] - pq[0]) / abs(pq[1]) > bound and not beats_all:
+            verdict.append("unresolved")
         p_txt = f"{pq[1]:.1f} ({pq[0]:.1f}-{pq[2]:.1f})"
         c_txt = f"{cq[1]:.1f} ({cq[0]:.1f}-{cq[2]:.1f})"
         print(f"{name:<18}{p_txt:<30}{c_txt:<30}{f'{wins}/{len(both)}':<8}"
