@@ -95,12 +95,16 @@ object HistoryFits {
       true
     }
 
-    /** Sums the first n points afresh; false for no fit (a point with
-      * e² = 0 or a zero determinant). Inputs non-null.
+    /** Sums the first n points afresh; false for no fit (fewer than
+      * two points, a point with e² = 0 or a zero determinant). Inputs
+      * non-null. One point has a zero determinant only in exact
+      * arithmetic: in doubles it is a few ulps either side, which would
+      * give a slope of rounding noise.
       */
     def fit(x: Array[Double], y: Array[Double], e: Array[Double],
         n: Int): Boolean = {
       reset()
+      if (n < 2) return false
       var i = 0
       while (i < n) {
         if (!add(x(i), y(i), e(i))) return false
@@ -268,7 +272,8 @@ object IsRising {
   * chi2) with n the point count, span the last jd minus the first (null
   * without points), level ± level_err the intercept at jd = 0 and chi2
   * Σw(y − fit)² (see [[HistoryFits.Wls]]). The fitted fields are null
-  * where a field they need is null or there is no fit.
+  * where a field they need is null or there is no fit, as with fewer
+  * than two points.
   */
 case class WeightedSlope(child: Expression) extends UnaryExpression {
 

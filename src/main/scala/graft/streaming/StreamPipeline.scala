@@ -104,6 +104,20 @@ object StreamPipeline {
     * session is left as it was. The one condition: the query's tasks
     * see the jars and files of the `SparkContext`, not artifacts added
     * to a session (Spark Connect); the engine adds none.
+    *
+    * The query's local files are written without starting processes.
+    * Without libhadoop, Hadoop's local file system runs `chmod` for
+    * every file and directory it creates (eight per topic append) and
+    * `readlink` for the link checks of every checkpoint-log rename. The
+    * clone therefore also gets `fs.file.impl`,
+    * `fs.file.impl.disable.cache=true` and
+    * `fs.AbstractFileSystem.file.impl` naming [[LocalFiles]], which does
+    * both through `java.nio.file`, so every topic append made in a
+    * notify call and the query's offset, commit and metadata logs go
+    * through it. Two limits: the file source's own log under the
+    * checkpoint's `sources/` follows the session that read the stream,
+    * and writes made outside a `run` query keep the session's own
+    * `file:` file system.
     */
   def run(
       stream: DataFrame,
@@ -149,23 +163,28 @@ object StreamPipeline {
     startShared(stream.sparkSession, w)
   }
 
-  private val Isolation = "spark.sql.artifact.isolation.enabled"
+  /** The session keys each query's clone gets (see [[run]]): artifact
+    * isolation off, and `file:` paths through [[LocalFiles]].
+    */
+  private[streaming] val CloneConf: Seq[(String, String)] =
+    ("spark.sql.artifact.isolation.enabled" -> "false") +: LocalFiles.Conf
   private val startLock = new Object
 
-  /** Starts `w` with artifact isolation off for the query's session
-    * clone only (see [[run]]). `start()` clones the caller's session
-    * synchronously, so the clone copies the value set here; the
-    * caller's own value (or its absence) is restored afterwards. The
-    * lock keeps concurrent starts from restoring over each other.
+  /** Starts `w` with [[CloneConf]] set for the query's session clone
+    * only. `start()` clones the caller's session synchronously, so the
+    * clone copies the values set here; the caller's own values (or
+    * their absence) are restored afterwards. The lock keeps concurrent
+    * starts from restoring over each other.
     */
   private def startShared(spark: SparkSession,
       w: DataStreamWriter[Row]): StreamingQuery = startLock.synchronized {
-    val before = spark.conf.getAll.get(Isolation)
-    spark.conf.set(Isolation, "false")
+    val callers = spark.conf.getAll
+    val before = CloneConf.map { case (k, _) => k -> callers.get(k) }
+    CloneConf.foreach { case (k, v) => spark.conf.set(k, v) }
     try w.start()
-    finally before match {
-      case Some(v) => spark.conf.set(Isolation, v)
-      case None => spark.conf.unset(Isolation)
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -18,7 +18,7 @@ case class HfCase(id: Int, flux: Option[Seq[HfFlux]],
   *
   * Inputs are LCG histories plus planted edges: null σ, NaN magnitudes,
   * one band, n = 0–3, equal jds, σ = 0, a same-night fit whose uncentred
-  * determinant cancels to 0, and a null history. Every value is
+  * determinant cancels to 0, one point (no fit) and a null history. Every value is
   * compared bit for bit, under generated code and under the interpreter.
   */
 class HistoryFitsSpec extends SparkSpec {
@@ -37,9 +37,10 @@ class HistoryFitsSpec extends SparkSpec {
   private final case class Fit(slope: Double, serr: Double, level: Double,
       levelErr: Double, chi2: Double)
 
-  /** Weighted fit; None for a zero e² or determinant. */
+  /** Weighted fit; None under two points or for a zero e² or
+    * determinant. */
   private def wls(ps: Seq[P]): Option[Fit] =
-    if (ps.exists(p => p.e * p.e == 0.0)) None
+    if (ps.size < 2 || ps.exists(p => p.e * p.e == 0.0)) None
     else {
       val w = ps.map(p => 1.0 / (p.e * p.e))
       def s(f: P => Double) =
@@ -193,6 +194,10 @@ class HistoryFitsSpec extends SparkSpec {
         }
         assert(same(linearR2(c.line, 5), r.get(4)), s"linear_r2 ${c.id}")
       }
+      // one point is no fit, whatever its determinant rounds to
+      val one = got(Planted.OnePoint).getStruct(3)
+      assert(one.getInt(2) === 1)
+      assert(Seq(0, 1, 4, 5, 6).forall(one.isNullAt), one)
       // every branch is reached
       val rising = cases.count(c => isRising(c.flux, 2, 1, 3))
       assert(rising >= 10 && cases.size - rising >= 10, s"$rising rising")
@@ -245,6 +250,7 @@ object HistoryFitsSpec {
     val SameNight = 1001
     val ZeroSigma = 1002
     val SlopeOnly = 1003
+    val OnePoint = 1005
   }
 
   /** 64-bit LCG (Knuth's MMIX constants). */
@@ -327,7 +333,7 @@ object HistoryFitsSpec {
       // n = 0-3 in each band, single band, null σ on the last point,
       // NaN magnitudes, equal jds
       HfCase(1004, Some(Seq.empty), Some(Seq.empty), Some(Seq.empty)),
-      HfCase(1005, Some(Seq(flux(2460000.5, 18.0, Some(0.1), 1))),
+      HfCase(OnePoint, Some(Seq(flux(2460000.5, 18.0, Some(0.1), 1))),
         Some(Seq(HfSlope(Some(2460000.5), Some(18.0), Some(0.1)))),
         Some(Seq(HfLine(Some(2460000.5), Some(18.0))))),
       HfCase(1006, Some(Seq(flux(2460000.5, 18.0, Some(0.1), 1),

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.ProcessStarts
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
@@ -109,8 +110,74 @@ class StreamFanOutSpec extends SparkSpec {
       assert(got === expected, name)
     }
 
+  test("a drain starts no process for its topic files or checkpoint logs") {
+    val names = register()
+    val input = writeInput("processes")
+    val base = Files.createTempDirectory("graft-fanout-out").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val (q, started) = ProcessStarts {
+      val q = StreamPipeline.run(stream(input), names,
+        new StreamPipeline.ParquetTopicNotifier(base, Seq("candid")),
+        checkpointDir = Some(ckpt))
+      q.awaitTermination(240000)
+      q
+    }
+    assert(q.exception.isEmpty, q.exception)
+    assert(q.recentProgress.count(_.numInputRows > 0) === NumFiles)
+    assertTopics(base)
+    // without libhadoop, Hadoop's own local file system starts chmod
+    // and readlink for these paths, about ten per (batch, filter)
+    val logs = Seq("offsets", "commits", "metadata").map(d => s"$ckpt/$d")
+    val named = started.filter(c => c.contains(base) || logs.exists(c.contains))
+    assert(named.isEmpty, s"${named.size} of ${started.size}: ${named.take(5)}")
+  }
+
+  test("a restart from the checkpoint runs only the uncommitted batch") {
+    val names = register()
+    val source = stream(writeInput("restart"))
+    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    /** One drain on `ckpt`: the (batch, filter) calls it made. */
+    def drain(): Set[(Long, String)] = {
+      val calls = ConcurrentHashMap.newKeySet[(Long, String)]()
+      val q = StreamPipeline.run(source, names, new StreamPipeline.Notifier {
+        def notify(filterName: String, batchId: Long, passing: DataFrame): Unit =
+          { calls.add((batchId, filterName)); () }
+      }, checkpointDir = Some(ckpt))
+      q.awaitTermination(240000)
+      assert(q.exception.isEmpty, q.exception)
+      calls.asScala.toSet
+    }
+    val last = NumFiles - 1L
+    assert(drain() === (0L to last).flatMap(b => names.map(b -> _)).toSet)
+    // the logs, written through graft's file system, read back: a crash
+    // before the last commit replays that batch alone, then nothing
+    val commit = Path.of(ckpt, "commits", last.toString)
+    Files.delete(commit)
+    Files.deleteIfExists(commit.resolveSibling(s".$last.crc"))
+    assert(drain() === names.map(last -> _).toSet)
+    assert(Files.isRegularFile(commit))
+    assert(drain() === Set.empty)
+  }
+
   test("repeated runs reuse compiled classes and leave the session conf as it was") {
-    val isolation = "spark.sql.artifact.isolation.enabled"
+    // a value of the caller's for every key that the query's clone gets
+    val callerValues = Map(
+      "spark.sql.artifact.isolation.enabled" -> Some("true"),
+      "fs.file.impl" -> Some(classOf[org.apache.hadoop.fs.LocalFileSystem].getName),
+      "fs.file.impl.disable.cache" -> Some("false"),
+      "fs.AbstractFileSystem.file.impl" ->
+        Some(classOf[org.apache.hadoop.fs.local.LocalFs].getName))
+    val keys = StreamPipeline.CloneConf.map(_._1)
+    assert(keys.toSet === callerValues.keySet)
+    def callerConf(): Map[String, Option[String]] = {
+      val all = spark.conf.getAll
+      keys.map(k => k -> all.get(k)).toMap
+    }
+    def setCaller(values: Map[String, Option[String]]): Unit = values.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val unset = keys.map(_ -> None).toMap
     val names = register()
     val source = stream(writeInput("reuse"))
     /** One drain from a fresh checkpoint into a fresh topic base; checks
@@ -127,21 +194,18 @@ class StreamFanOutSpec extends SparkSpec {
       assertTopics(base)
       compiled
     }
-    val callerValue = spark.conf.getAll.get(isolation)
+    val saved = callerConf()
     try {
-      spark.conf.unset(isolation)
+      setCaller(unset)
       drain()
-      assert(spark.conf.getAll.get(isolation) === None)
-      spark.conf.set(isolation, "true")
+      assert(callerConf() === unset)
+      setCaller(callerValues)
       assert(drain() === 0L)
-      assert(spark.conf.getAll.get(isolation) === Some("true"))
-      spark.conf.unset(isolation)
+      assert(callerConf() === callerValues)
+      setCaller(unset)
       assert(drain() === 0L)
-      assert(spark.conf.getAll.get(isolation) === None)
-    } finally callerValue match {
-      case Some(v) => spark.conf.set(isolation, v)
-      case None => spark.conf.unset(isolation)
-    }
+      assert(callerConf() === unset)
+    } finally setCaller(saved)
   }
 
   /** `run` must refuse `names` before any query starts, with a message

@@ -1,6 +1,12 @@
 package org.apache.spark
 
+import java.nio.file.Files
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -35,5 +41,29 @@ object JobCount {
       ListenerBusDrain(sc)
       (out, jobs.get)
     } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** The operating-system processes started while `body` runs, by any
+  * thread of this JVM: `body` runs under a flight recording of
+  * `jdk.ProcessStart` events, which are read back afterwards. Each is
+  * the command line as the JVM reports it.
+  */
+object ProcessStarts {
+  def apply[T](body: => T): (T, Seq[String]) = {
+    val recording = new Recording()
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      val out = try body finally recording.stop()
+      val file = Files.createTempFile("process-starts", ".jfr")
+      try {
+        recording.dump(file)
+        val commands = RecordingFile.readAllEvents(file).asScala.toSeq
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
+          .map(_.getString("command"))
+        (out, commands)
+      } finally Files.deleteIfExists(file)
+    } finally recording.close()
   }
 }

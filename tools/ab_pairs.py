@@ -22,7 +22,10 @@ the median, and three verdicts:
           beats every parent run.
 
 It also prints how many runs were not `correct` or had failed
-operations. Nothing in either tree is changed; the exports are removed
+operations, and each side's `attempted` count (median and range): a
+night run of 3 passes and one of 4, or a live run of 6 batches and one
+of 8, differ there, and a throughput metric can move with that count
+alone. Nothing in either tree is changed; the exports are removed
 at the end.
 
 Run from the root of a checkout:
@@ -85,6 +88,12 @@ def report(workload, metrics, runs, pairs):
            for side in ("parent", "change")}
     print(f"runs failed, incorrect or with failed operations: "
           f"parent {bad['parent']}, change {bad['change']}")
+    attempted = []
+    for side in ("parent", "change"):
+        xs = [r["attempted"] for r in runs[side] if r and "attempted" in r]
+        attempted.append(f"{side} {statistics.median(xs):g} ({min(xs)}-{max(xs)})"
+                         if xs else f"{side} none")
+    print("attempted operations, median (range): " + ", ".join(attempted))
     print(f"{'metric':<18}{'parent median (q1-q3)':<30}{'change median (q1-q3)':<30}"
           f"{'wins':<8}{'median':>8}  verdict")
     for m in metrics:
