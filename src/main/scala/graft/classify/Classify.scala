@@ -3,7 +3,7 @@ package graft.classify
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.filters.{AlertFilter, FilterRegistry}
+import graft.filters.AlertFilter
 import graft.filters.ztf.ZtfFilters
 
 /** Fink classification cascade (O21) — the engine analog of
@@ -65,17 +65,9 @@ object Classify {
   /** Unclassified alerts — `filter_unknowns/filter.py:108-129` (the
     * livestream re-derivation, tracklet unavailable).
     */
-  val unknowns: AlertFilter = new AlertFilter {
-    val name = "ztf.livestream.unknowns"
-    override val description = "Alerts the full classification leaves Unknown"
-    val requiredColumns = Seq("cdsxmatch", "roid", "mulens",
-      "snn_snia_vs_nonia", "snn_sn_vs_all", "rf_snia_vs_nonia",
-      "rf_kn_vs_nonkn", "candidate")
-    def mask(df: DataFrame): Column =
-      extractFinkClassification(df, withTracklet = false) === "Unknown"
-  }
-
-  FilterRegistry.register(unknowns)
-
-  def load(): Unit = ()
+  val unknowns: AlertFilter = AlertFilter(
+    "ztf.livestream.unknowns", "Alerts the full classification leaves Unknown",
+    Seq("cdsxmatch", "roid", "mulens", "snn_snia_vs_nonia", "snn_sn_vs_all",
+      "rf_snia_vs_nonia", "rf_kn_vs_nonkn", "candidate"),
+    mask = extractFinkClassification(_, withTracklet = false) === "Unknown")
 }

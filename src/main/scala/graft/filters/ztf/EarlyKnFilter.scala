@@ -1,7 +1,8 @@
 package graft.filters.ztf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.astro.Astro
 import graft.filters.AlertFilter
@@ -66,43 +67,26 @@ object EarlyKnFilter {
   }
 
   /** The full filter with an injected Mangrove catalog. */
-  def earlyKnCandidates(mangrove: DataFrame): AlertFilter = new AlertFilter {
-    val name = "ztf.livestream.early_kn_candidates"
-    override val description =
-      "Very young KN candidates near a Mangrove galaxy"
-    val requiredColumns = Seq("candidate", "cdsxmatch", "roid")
-    def mask(df: DataFrame): Column = preCuts && latitudeCuts
-    override def apply(df: DataFrame): DataFrame =
-      nearMangroveGalaxy(df.filter(mask(df)), mangrove)
+  def earlyKnCandidates(mangrove: => DataFrame): AlertFilter = {
+    def cuts = preCuts && latitudeCuts
+    AlertFilter("ztf.livestream.early_kn_candidates",
+      "Very young KN candidates near a Mangrove galaxy",
+      Seq("candidate", "cdsxmatch", "roid"), mask = _ => cuts,
+      stage = Some(df => nearMangroveGalaxy(df.filter(cuts), mangrove)))
   }
 
   /** Registry binding. The reference's packaged mangrove_filtered.csv
     * is ABSENT from this checkout, so the default binding uses an empty
-    * catalog — the pre/latitude cuts run, the neighborhood semi-join
-    * passes nothing. Real deployments inject a catalog via
-    * [[earlyKnCandidates]].
+    * catalog (made in the active session on every apply) — the
+    * pre/latitude cuts run, the neighborhood semi-join passes nothing.
+    * Real deployments inject a catalog via [[earlyKnCandidates]].
     */
-  private val registryDefault: AlertFilter = new AlertFilter {
-    val name = "ztf.livestream.early_kn_candidates"
-    override val description =
-      "Very young KN candidates near a Mangrove galaxy (default binding: " +
-        "empty catalog — the packaged galaxy list is absent from this " +
-        "checkout; inject one via EarlyKnFilter.earlyKnCandidates)"
-    val requiredColumns = Seq("candidate", "cdsxmatch", "roid")
-    def mask(df: DataFrame): Column = preCuts && latitudeCuts
-    override def apply(df: DataFrame): DataFrame = {
-      val spark = df.sparkSession
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          Seq("ra", "dec", "lum_dist", "ang_dist").map(
-            org.apache.spark.sql.types.StructField(_,
-              org.apache.spark.sql.types.DoubleType))))
-      earlyKnCandidates(empty)(df)
-    }
-  }
-
-  graft.filters.FilterRegistry.register(registryDefault)
-
-  def load(): Unit = ()
+  private[filters] val registryDefault: AlertFilter = earlyKnCandidates {
+    val spark = SparkSession.active
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(
+      Seq("ra", "dec", "lum_dist", "ang_dist").map(StructField(_, DoubleType))))
+  }.copy(description =
+    "Very young KN candidates near a Mangrove galaxy (default binding: " +
+      "empty catalog — the packaged galaxy list is absent from this " +
+      "checkout; inject one via EarlyKnFilter.earlyKnCandidates)")
 }

@@ -257,21 +257,14 @@ object EarlyTdeScorer {
   }
 
   /** Registry binding (additive name — stage 1 alone remains
-    * `ztf.early_tde_prefilter`).
+    * `ztf.early_tde_prefilter`): the prefilter's columns and mask, with
+    * the whole pipeline as its stage.
     */
-  private val registryEntry: AlertFilter = new AlertFilter {
-    val name = "ztf.early_tde_candidates"
-    override val description =
-      "Early TDE candidates: prefilter + closed-form rise/color fit + " +
-        "logistic score (pluggable scorer seam for a trained model)"
-    val requiredColumns = Seq("roid", "cdsxmatch", "nalerthist",
-      "candidate", "prv_candidates")
-    def mask(df: DataFrame): Column = ZtfPhotometryFilters
-      .earlyTdePrefilter.mask(df)
-    override def apply(df: DataFrame): DataFrame = earlyTdeCandidates(df)
-  }
-
-  graft.filters.FilterRegistry.register(registryEntry)
-
-  def load(): Unit = ()
+  private[filters] val registryEntry: AlertFilter =
+    ZtfPhotometryFilters.earlyTdePrefilter.copy(
+      name = "ztf.early_tde_candidates",
+      description = "Early TDE candidates: prefilter + closed-form " +
+        "rise/color fit + logistic score (pluggable scorer seam for a " +
+        "trained model)",
+      stage = Some(earlyTdeCandidates(_)))
 }

@@ -1,9 +1,9 @@
 package graft.filters.ztf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.filters.{AlertFilter, FilterRegistry}
+import graft.filters.AlertFilter
 
 /** Multi-messenger (GRB / GW counterpart) filters —
   * `fink_filters/ztf/filter_mm_module/filter.py:25-261`. Inputs are the
@@ -44,27 +44,22 @@ object MmFilters {
     silver(observatories) && col("rb") >= 0.9 &&
       col("grb_loc_error") / 60 <= 5 && abs(col("rate")) > 0.3
 
-  private def mm(n: String, desc: String)(m: => Column): AlertFilter =
-    new AlertFilter {
-      val name = n
-      override val description = desc
-      val requiredColumns = Seq("fink_class", "observatory", "rb",
-        "grb_proba", "grb_loc_error", "rate")
-      def mask(df: DataFrame): Column = m
-    }
+  /** The GRB-module output columns every level reads. */
+  private val MmColumns = Seq("fink_class", "observatory", "rb", "grb_proba",
+    "grb_loc_error", "rate")
 
-  val grbBronze: AlertFilter = mm("ztf.mm.grb_bronze",
-    "GRB counterpart candidates (bronze)")(bronze(GrbObservatories))
-  val grbSilver: AlertFilter = mm("ztf.mm.grb_silver",
-    "GRB counterpart candidates (silver, 5-sigma association)")(
-    silver(GrbObservatories))
-  val grbGold: AlertFilter = mm("ztf.mm.grb_gold",
-    "GRB counterpart candidates (gold, fast + well-localized)")(
-    gold(GrbObservatories))
-  val gwBronze: AlertFilter = mm("ztf.mm.gw_bronze",
-    "GW counterpart candidates (bronze)")(bronze(GwObservatories))
+  val grbBronze: AlertFilter = AlertFilter("ztf.mm.grb_bronze",
+    "GRB counterpart candidates (bronze)", MmColumns,
+    mask = _ => bronze(GrbObservatories))
+  val grbSilver: AlertFilter = AlertFilter("ztf.mm.grb_silver",
+    "GRB counterpart candidates (silver, 5-sigma association)", MmColumns,
+    mask = _ => silver(GrbObservatories))
+  val grbGold: AlertFilter = AlertFilter("ztf.mm.grb_gold",
+    "GRB counterpart candidates (gold, fast + well-localized)", MmColumns,
+    mask = _ => gold(GrbObservatories))
+  val gwBronze: AlertFilter = AlertFilter("ztf.mm.gw_bronze",
+    "GW counterpart candidates (bronze)", MmColumns,
+    mask = _ => bronze(GwObservatories))
 
   val all: Seq[AlertFilter] = Seq(grbBronze, grbSilver, grbGold, gwBronze)
-  FilterRegistry.register(all: _*)
-  def load(): Unit = ()
 }

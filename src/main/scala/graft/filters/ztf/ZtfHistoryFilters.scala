@@ -1,10 +1,10 @@
 package graft.filters.ztf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.expressions.HistoryFits
-import graft.filters.{AlertFilter, FilterRegistry}
+import graft.filters.AlertFilter
 
 /** ZTF filters over the in-row photometric history (A1-A11 array
   * operators) — the reference flattens `prv_candidates` into `c*c`
@@ -43,12 +43,9 @@ object ZtfHistoryFilters {
     * within 10 d, band-aware fading rule on the 2nd/3rd points,
     * mean(g)−mean(r) ≥ 0, and no SSO identification.
     */
-  val orphanGrb: AlertFilter = new AlertFilter {
-    val name = "ztf.orphan_grb_candidates"
-    override val description = "Orphan GRB afterglow candidates"
-    val requiredColumns = Seq("candidate", "prv_candidates")
-
-    def mask(df: DataFrame): Column = {
+  val orphanGrb: AlertFilter = AlertFilter(
+    "ztf.orphan_grb_candidates", "Orphan GRB afterglow candidates",
+    Seq("candidate", "prv_candidates"), mask = _ => {
       val cmag = chist("magpsf")
       val cjd = chist("jd")
       val cfid = chist("fid")
@@ -86,8 +83,7 @@ object ZtfHistoryFilters {
         s => s.isNull || s === "null")
       atMostAMonth && above18 && atLeast3 && within10d && validRate &&
         colorOk && noSso
-    }
-  }
+    })
 
   /** SPICY YSO candidates — `filter_yso_spicy_candidates/filter.py:28-158`
     * (G5): known SPICY class ∧ |linear_fit_slope| > 0.025 ∧ R² of the
@@ -95,13 +91,10 @@ object ZtfHistoryFilters {
     * from the raw sums ([[graft.expressions.LinearR2]]), identical to the
     * reference's two-pass formula.
     */
-  val ysoSpicy: AlertFilter = new AlertFilter {
-    val name = "ztf.livestream.yso_spicy_candidates"
-    override val description = "Variable SPICY YSO candidates"
-    val requiredColumns = Seq("spicy_class", "lc_features_r.linear_fit_slope",
-      "candidate", "prv_candidates")
-
-    def mask(df: DataFrame): Column = {
+  val ysoSpicy: AlertFilter = AlertFilter(
+    "ztf.livestream.yso_spicy_candidates", "Variable SPICY YSO candidates",
+    Seq("spicy_class", "lc_features_r.linear_fit_slope", "candidate",
+      "prv_candidates"), mask = _ => {
       val spicyKnown = col("spicy_class").isNotNull &&
         !col("spicy_class").isin("Unknown")
       val slope = col("lc_features_r.linear_fit_slope").cast("double")
@@ -119,10 +112,7 @@ object ZtfHistoryFilters {
             s.getField("f").as("f"))),
         s => validMag(s.getField("y")) && s.getField("f").cast("int") === 2)
       spicyKnown && slopeOk && HistoryFits.linearR2(pts, minN = 5) > 0.6
-    }
-  }
+    })
 
   val all: Seq[AlertFilter] = Seq(orphanGrb, ysoSpicy)
-  FilterRegistry.register(all: _*)
-  def load(): Unit = ()
 }

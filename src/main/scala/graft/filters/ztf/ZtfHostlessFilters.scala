@@ -3,7 +3,7 @@ package graft.filters.ztf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.filters.{AlertFilter, FilterRegistry}
+import graft.filters.AlertFilter
 import ZtfHistoryFilters.chist
 
 /** The hostless-transient family —
@@ -16,9 +16,10 @@ import ZtfHistoryFilters.chist
   * [[HostlessScorer]]; the REGISTERED defaults run the real
   * [[FitsKsScorer]], matching the reference's registered behavior
   * (`filter_new_hostless/filter.py:82-96` — the expensive stage runs
-  * last, on the survivors of the cheap cuts). Each filter also
-  * registers a `*_fast` sibling with the [[PassthroughScorer]] —
-  * cheap cuts only, for stamp-less inputs or triage sweeps.
+  * last, on the survivors of the cheap cuts). Each filter also has a
+  * registered `*_fast` sibling, a copy without the image stage (what
+  * the [[PassthroughScorer]] gives) — cheap cuts only, for stamp-less
+  * inputs or triage sweeps.
   */
 object ZtfHostlessFilters {
 
@@ -29,8 +30,8 @@ object ZtfHostlessFilters {
     def keepHostless(candidates: DataFrame): DataFrame
   }
 
-  /** Admits all candidates — the cheap-cuts-only image stage, used by
-    * the registered `*_fast` siblings (the Rubin pipeline carries a
+  /** Admits all candidates — the cheap-cuts-only image stage, which
+    * the registered `*_fast` siblings equal (the Rubin pipeline carries a
     * precomputed score instead, which
     * [[graft.filters.rubin.RubinFilters.hostlessCandidate]] consumes).
     */
@@ -78,15 +79,11 @@ object ZtfHostlessFilters {
     * `filter_new_hostless/utils.py:34-84` (composing the simbad / gaia
     * candidate predicates negated).
     */
-  def isUncataloged: Column = {
-    val c = col("cdsxmatch")
-    val inSimbad = !c.isin("Unknown", "Transient", "Fail", "Fail 504") &&
-      !c.startsWith("Fail") && !c.startsWith("Galaxy")
+  def isUncataloged: Column =
     col("candidate.distnr") > 1.5 &&
-      !coalesce(inSimbad, lit(false)) &&
+      !coalesce(ZtfFilters.inSimbad, lit(false)) &&
       col("DR3Name") === "nan" &&
       col("roid") =!= 3
-  }
 
   /** Last `nobs` detections present and within `lapseHour` — the
     * intra-night cadence (`utils.py:145-186`).
@@ -118,63 +115,57 @@ object ZtfHostlessFilters {
         12.0 / 24.0
   }
 
-  private def hostless(n: String, desc: String, cheap: => Column,
-      scorer: HostlessScorer): AlertFilter =
-    new AlertFilter {
-      val name = n
-      override val description = desc
-      val requiredColumns = Seq("candidate", "prv_candidates", "cdsxmatch",
-        "DR3Name", "roid", "cutoutScience", "cutoutTemplate")
-      def mask(df: DataFrame): Column = cheap
-      override def apply(df: DataFrame): DataFrame =
-        scorer.keepHostless(df.filter(mask(df)))
-    }
+  /** What the hostless filters read: the cheap cuts' columns and the
+    * image stage's stamps.
+    */
+  private val HostlessColumns = Seq("candidate", "prv_candidates",
+    "cdsxmatch", "DR3Name", "roid", "cutoutScience", "cutoutTemplate")
 
   /** ndethist == 1 ∧ uncataloged ∧ hostless —
     * `filter_new_hostless/filter.py:82-96`.
     */
-  def newHostless(scorer: HostlessScorer = new FitsKsScorer()): AlertFilter =
-    hostless("ztf.livestream.new_hostless",
+  def newHostless(scorer: HostlessScorer = new FitsKsScorer()): AlertFilter = {
+    def cheap = col("candidate.ndethist") === 1 && isUncataloged
+    AlertFilter("ztf.livestream.new_hostless",
       "First-detection hostless candidates (ELEPHANT KS image stage ON)",
-      col("candidate.ndethist") === 1 && isUncataloged, scorer)
+      HostlessColumns, mask = _ => cheap,
+      stage = Some(df => scorer.keepHostless(df.filter(cheap))))
+  }
 
   /** ndethist == 2 ∧ uncataloged ∧ 2 obs within 12 h ∧ hostless —
     * `filter_intra_night_hostless/filter.py:111-128`.
     */
   def intraNightHostless(
-      scorer: HostlessScorer = new FitsKsScorer()): AlertFilter =
-    hostless("ztf.livestream.intra_night_hostless",
+      scorer: HostlessScorer = new FitsKsScorer()): AlertFilter = {
+    def cheap = col("candidate.ndethist") === 2 && isUncataloged &&
+      intraNightCadence()
+    AlertFilter("ztf.livestream.intra_night_hostless",
       "Intra-night hostless candidates (ELEPHANT KS image stage ON)",
-      col("candidate.ndethist") === 2 && isUncataloged &&
-        intraNightCadence(), scorer)
+      HostlessColumns, mask = _ => cheap,
+      stage = Some(df => scorer.keepHostless(df.filter(cheap))))
+  }
 
   /** ndethist == 3 ∧ uncataloged ∧ inter-night gap pattern ∧ hostless —
     * `filter_inter_night_hostless/filter.py:111-129`.
     */
   def interNightHostless(
-      scorer: HostlessScorer = new FitsKsScorer()): AlertFilter =
-    hostless("ztf.livestream.inter_night_hostless",
+      scorer: HostlessScorer = new FitsKsScorer()): AlertFilter = {
+    def cheap = col("candidate.ndethist") === 3 && isUncataloged &&
+      interNightCadence()
+    AlertFilter("ztf.livestream.inter_night_hostless",
       "Inter-night hostless candidates (ELEPHANT KS image stage ON)",
-      col("candidate.ndethist") === 3 && isUncataloged &&
-        interNightCadence(), scorer)
+      HostlessColumns, mask = _ => cheap,
+      stage = Some(df => scorer.keepHostless(df.filter(cheap))))
+  }
 
-  /** The registered `*_fast` sibling of `f`: same cheap cuts, image
-    * stage skipped (PassthroughScorer) — for stamp-less inputs.
+  /** The registered filters and their `*_fast` siblings: the same cheap
+    * cuts with the image stage skipped — for stamp-less inputs.
     */
-  private def fastSibling(f: AlertFilter): AlertFilter =
-    new AlertFilter {
-      val name = f.name + "_fast"
-      override val description =
-        f.description.replace(" (ELEPHANT KS image stage ON)",
-          " (cheap cuts only — image stage SKIPPED)")
-      val requiredColumns = f.requiredColumns
-      def mask(df: DataFrame): Column = f.mask(df)
-    }
-
   val all: Seq[AlertFilter] = {
     val real = Seq(newHostless(), intraNightHostless(), interNightHostless())
-    real ++ real.map(fastSibling)
+    real ++ real.map(f => f.copy(name = f.name + "_fast",
+      description = f.description.replace(" (ELEPHANT KS image stage ON)",
+        " (cheap cuts only — image stage SKIPPED)"),
+      stage = None))
   }
-  FilterRegistry.register(all: _*)
-  def load(): Unit = ()
 }

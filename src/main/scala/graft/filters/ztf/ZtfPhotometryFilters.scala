@@ -1,9 +1,9 @@
 package graft.filters.ztf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.filters.{AlertFilter, FilterRegistry}
+import graft.filters.AlertFilter
 import graft.astro.Astro
 import graft.expressions.HistoryFits
 import ZtfHistoryFilters.{chist, validMag}
@@ -105,14 +105,11 @@ object ZtfPhotometryFilters {
     * galactic plane, and a rising light curve. The stage-2 Rainbow/XGB
     * scorer consumes the survivors driver-side.
     */
-  val earlyTdePrefilter: AlertFilter = new AlertFilter {
-    val name = "ztf.early_tde_prefilter"
-    override val description =
-      "Early TDE candidate pre-selection (rising nuclear transients)"
-    val requiredColumns = Seq("roid", "cdsxmatch", "nalerthist",
-      "candidate", "prv_candidates")
-
-    def mask(df: DataFrame): Column = {
+  val earlyTdePrefilter: AlertFilter = AlertFilter(
+    "ztf.early_tde_prefilter",
+    "Early TDE candidate pre-selection (rising nuclear transients)",
+    Seq("roid", "cdsxmatch", "nalerthist", "candidate", "prv_candidates"),
+    mask = _ => {
       val cisd = chist("isdiffpos")
       val cmag = chist("magpsf")
       val cfid = chist("fid")
@@ -128,8 +125,7 @@ object ZtfPhotometryFilters {
         nneg <= 1 && nfid(1) > 0 && nfid(2) > 0 &&
         abs(b) >= 20 &&
         HistoryFits.isRising(fluxHistory, nsRise = 2, nsDecay = 1, nsSlope = 3)
-    }
-  }
+    })
 
   /** Rate-based kilonova candidates (G1, Andreoni+21 cuts —
     * `filter_rate_based_kn_candidates/filter.py:102-167`): quality/
@@ -138,12 +134,10 @@ object ZtfPhotometryFilters {
     * reference's final SDSS star veto is an external HTTP enrichment
     * (O26) stubbed as pass-through.
     */
-  val rateBasedKn: AlertFilter = new AlertFilter {
-    val name = "ztf.livestream.rate_based_kn_candidates"
-    override val description = "Rate-based kilonova candidates (Andreoni+21)"
-    val requiredColumns = Seq("cdsxmatch", "candidate", "prv_candidates")
-
-    def mask(df: DataFrame): Column = {
+  val rateBasedKn: AlertFilter = AlertFilter(
+    "ztf.livestream.rate_based_kn_candidates",
+    "Rate-based kilonova candidates (Andreoni+21)",
+    Seq("cdsxmatch", "candidate", "prv_candidates"), mask = _ => {
       val cjd = chist("jd")
       val cmag = chist("magpsf")
       val csig = chist("sigmapsf")
@@ -194,10 +188,7 @@ object ZtfPhotometryFilters {
       val fit = HistoryFits.weightedSlope(good)
       pre && exists(array(fit), f => f.getField("n") >= 2 &&
         f.getField("span") > 0.5 && f.getField("slope") > 0.3)
-    }
-  }
+    })
 
   val all: Seq[AlertFilter] = Seq(earlyTdePrefilter, rateBasedKn)
-  FilterRegistry.register(all: _*)
-  def load(): Unit = ()
 }

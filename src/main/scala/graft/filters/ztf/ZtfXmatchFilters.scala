@@ -8,7 +8,7 @@ import graft.xmatch.{Catalogs, CrossMatch}
 
 /** Cross-match-backed ZTF filters (O17-O19). Unlike the pure-predicate
   * catalog in [[ZtfFilters]], these match against a catalog DataFrame,
-  * so they override `apply` (the mask alone cannot express them) and
+  * so each has a stage (the mask alone cannot express them) and
   * also expose the reference's enrichment form — a label column,
   * "Unknown" when unmatched.
   */
@@ -51,7 +51,15 @@ object ZtfXmatchFilters {
     * and whether only positive alerts compete.
     */
   private final case class Kind(name: String, description: String,
-      outCol: String, positiveOnly: Boolean)
+      outCol: String, positiveOnly: Boolean) {
+
+    /** The filter keeping the alerts that `enrich` labels in `outCol`. */
+    def matched(desc: String, enrich: DataFrame => DataFrame): AlertFilter = {
+      val labelled: DataFrame => Column = _ => col(outCol) =!= "Unknown"
+      AlertFilter(name, desc, Seq("candid", "candidate.ra", "candidate.dec"),
+        mask = labelled, stage = Some(df => enrich(df).filter(labelled(df))))
+    }
+  }
 
   private val KnownTde = Kind("ztf.known_tde",
     "Alerts matching a known TDE within 5 arcsec", "tde", positiveOnly = true)
@@ -62,20 +70,9 @@ object ZtfXmatchFilters {
   private val DwarfAgn = Kind("ztf.dwarf_agn",
     "Alerts matching the dwarf-AGN list", "manga", positiveOnly = false)
 
-  /** A filter keeping the alerts that `enrich` labels in `k.outCol`. */
-  private def matchedFilter(k: Kind, desc: String,
-      enrich: DataFrame => DataFrame): AlertFilter =
-    new AlertFilter {
-      val name = k.name
-      override val description = desc
-      val requiredColumns = Seq("candid", "candidate.ra", "candidate.dec")
-      def mask(df: DataFrame): Column = col(k.outCol) =!= "Unknown"
-      override def apply(df: DataFrame): DataFrame = enrich(df).filter(mask(df))
-    }
-
   /** The injectable form: `catalog` is collected on every apply. */
   private def injected(k: Kind, catalog: DataFrame): AlertFilter =
-    matchedFilter(k, k.description, label(_, catalog, k.outCol, k.positiveOnly))
+    k.matched(k.description, label(_, catalog, k.outCol, k.positiveOnly))
 
   def knownTde(catalog: DataFrame): AlertFilter = injected(KnownTde, catalog)
 
@@ -101,7 +98,7 @@ object ZtfXmatchFilters {
     */
   def packaged(dir: => String): Seq[AlertFilter] = {
     def bound(k: Kind, rows: (SparkSession, String) => IndexedSeq[Row]) =
-      matchedFilter(k, k.description + " (packaged default catalog)",
+      k.matched(k.description + " (packaged default catalog)",
         df => CrossMatch.mutualNearestLabelRows(df, "candid", col("candidate.ra"),
           col("candidate.dec"), rows(df.sparkSession, dir), k.outCol,
           eligible = eligible(k.positiveOnly)))
@@ -116,8 +113,4 @@ object ZtfXmatchFilters {
     * [[Catalogs.dataDir]].
     */
   val all: Seq[AlertFilter] = packaged(Catalogs.dataDir)
-
-  graft.filters.FilterRegistry.register(all: _*)
-
-  def load(): Unit = ()
 }

@@ -141,12 +141,7 @@ object StreamPipeline {
           s"'${topicOf(same.head)}'; list each filter once, under names " +
           "that stay distinct when dots become dashes")
     }
-    filterNames.foreach { n =>
-      val missing = graft.schema.AlertSchemas.missingColumns(stream.schema, n)
-      require(missing.isEmpty,
-        s"filter '$n' cannot bind against this stream: missing " +
-          missing.mkString(", "))
-    }
+    filterNames.foreach(graft.schema.AlertSchemas.validate(stream, _))
     val threads = math.max(1, math.min(
       2 * stream.sparkSession.sparkContext.defaultParallelism,
       filterNames.size))

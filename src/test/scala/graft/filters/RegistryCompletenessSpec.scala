@@ -44,10 +44,23 @@ class RegistryCompletenessSpec extends SparkSpec {
   }
 
   test("registry metadata is populated (description + archive flag)") {
-    FilterRegistry.all.values.foreach { f =>
-      assert(f.name.nonEmpty)
+    FilterRegistry.all.foreach { case (name, f) =>
+      assert(f.name === name)
       // Rubin modules export DESCRIPTION/HBASE_SUPPORT — our analogs
-      assert(f.description != null)
+      assert(f.description.nonEmpty, name)
+      assert(f.requiredColumns.nonEmpty, name)
     }
+  }
+
+  test("an SQL filter cannot shadow a catalog filter") {
+    val before = FilterRegistry.get("ztf.quality_cuts")
+    val e = intercept[IllegalArgumentException](
+      FilterRegistry.registerSql("ztf.quality_cuts", "true"))
+    assert(e.getMessage.contains("'ztf.quality_cuts'"))
+    assert(FilterRegistry.get("ztf.quality_cuts") eq before)
+    // an ad-hoc name is still replaced by its next registration
+    FilterRegistry.registerSql("sql.registry.shadow", "rb > 0.5")
+    val again = FilterRegistry.registerSql("sql.registry.shadow", "rb > 0.9")
+    assert(FilterRegistry.get("sql.registry.shadow") eq again)
   }
 }

@@ -5,6 +5,7 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 import org.apache.spark.ProcessStarts
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -208,14 +209,17 @@ class StreamFanOutSpec extends SparkSpec {
     } finally setCaller(saved)
   }
 
-  /** `run` must refuse `names` before any query starts, with a message
-    * that contains each of `cause`. */
-  private def assertRejectedBeforeStart(names: Seq[String],
-      cause: Seq[String]): Unit = {
-    names.distinct.foreach(FilterRegistry.registerSql(_, "rb > 0.5"))
+  /** `run` must refuse `names` before any query starts, throwing an `E`
+    * whose message contains each of `cause`. The `sql.*` names among
+    * them are registered first; the others are catalog or unknown names.
+    */
+  private def assertRejectedBeforeStart[E <: Exception: ClassTag](
+      names: Seq[String], cause: Seq[String]): Unit = {
+    names.distinct.filter(_.startsWith("sql."))
+      .foreach(FilterRegistry.registerSql(_, "rb > 0.5"))
     val notifier = new StreamPipeline.CountingNotifier
     val activeBefore = spark.streams.active.map(_.id).toSet
-    val e = intercept[IllegalArgumentException](
+    val e = intercept[E](
       StreamPipeline.run(stream(writeInput("collide")), names, notifier,
         checkpointDir = Some(Files.createTempDirectory("graft-ckpt").toString)))
     cause.foreach(c => assert(e.getMessage.contains(c), e))
@@ -226,19 +230,34 @@ class StreamFanOutSpec extends SparkSpec {
   test("filter names that map to one topic are rejected before start") {
     assert(StreamPipeline.topicOf("sql.fanout.x.y") ===
       StreamPipeline.topicOf("sql.fanout.x-y"))
-    assertRejectedBeforeStart(
+    assertRejectedBeforeStart[IllegalArgumentException](
       Seq("sql.fanout.other", "sql.fanout.x.y", "sql.fanout.x-y"),
       cause = Seq("'sql.fanout.x.y'", "'sql.fanout.x-y'"))
   }
 
   test("a filter listed twice is rejected before start") {
-    assertRejectedBeforeStart(
+    assertRejectedBeforeStart[IllegalArgumentException](
       Seq("sql.fanout.x.y", "sql.fanout.other", "sql.fanout.x.y"),
       cause = Seq("'sql.fanout.x.y'"))
   }
 
   test("an empty filter list is rejected before start") {
-    assertRejectedBeforeStart(Seq.empty, cause = Seq("filterNames is empty"))
+    assertRejectedBeforeStart[IllegalArgumentException](Seq.empty,
+      cause = Seq("filterNames is empty"))
+  }
+
+  test("a catalog filter that does not bind to the stream is rejected before start") {
+    // the synthetic rows are flat: rb and nbad are not under `candidate`
+    assertRejectedBeforeStart[IllegalArgumentException](
+      Seq("sql.fanout.other", "ztf.quality_cuts"),
+      cause = Seq("'ztf.quality_cuts' cannot bind",
+        "candidate.rb, candidate.nbad"))
+  }
+
+  test("an unknown filter name is rejected before start") {
+    assertRejectedBeforeStart[NoSuchElementException](
+      Seq("sql.fanout.other", "ztf.no_such_filter"),
+      cause = Seq("unknown filter 'ztf.no_such_filter'"))
   }
 
   test("a failing filter fails the batch after every other call completes") {
