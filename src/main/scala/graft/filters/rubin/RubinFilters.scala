@@ -27,12 +27,13 @@ object RubinFilters {
   /** TNS counterpart known at emission time —
     * `filter_in_tns/filter.py:49` (`tns_fullname is not None`). The test
     * fixture predates the `xm.tns_fullname` field, so the mask degrades
-    * to constant-false when the field is absent.
+    * to constant-false when the field is absent; it declares `xm` alone,
+    * so the pre-flight accepts exactly the schemas the mask handles.
     */
   val inTns: AlertFilter = AlertFilter(
     "rubin.livestream.in_tns",
     "Alerts with a known counterpart in TNS at emission time",
-    Seq("xm.tns_fullname"), mask = df =>
+    Seq("xm"), mask = df =>
       if (xmHasField(df, "tns_fullname")) col("xm.tns_fullname").isNotNull
       else lit(false))
 

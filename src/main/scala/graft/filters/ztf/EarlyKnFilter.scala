@@ -79,11 +79,12 @@ object EarlyKnFilter {
     * is ABSENT from this checkout, so the default binding uses an empty
     * catalog (made in the active session on every apply) — the
     * pre/latitude cuts run, the neighborhood semi-join passes nothing.
-    * Real deployments inject a catalog via [[earlyKnCandidates]].
+    * The catalog is a local relation, which the optimizer sees is
+    * empty, so the semi-join folds away instead of being planned and
+    * run. Real deployments inject a catalog via [[earlyKnCandidates]].
     */
   private[filters] val registryDefault: AlertFilter = earlyKnCandidates {
-    val spark = SparkSession.active
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(
+    SparkSession.active.createDataFrame(java.util.List.of[Row](), StructType(
       Seq("ra", "dec", "lum_dist", "ang_dist").map(StructField(_, DoubleType))))
   }.copy(description =
     "Very young KN candidates near a Mangrove galaxy (default binding: " +

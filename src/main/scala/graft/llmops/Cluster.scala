@@ -196,7 +196,7 @@ object Cluster {
     * keeps exactly the `doc_id == cluster_rep` rows.
     */
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = GateInputs.documents(spark, dir)
     val pairs = Dedup.nearDupPairs(docs, threshold = 0.3)
     val cc = connectedComponents(pairs, "doc_a", "doc_b")
     val sizes = cc.groupBy("cluster_rep")
@@ -413,9 +413,9 @@ object Cluster {
     */
   def qKcenterCoreset(spark: SparkSession, dir: String): DataFrame =
     kcenterStats(
-      spark.read.parquet(s"$dir/embeddings.parquet"), k = 8)
+      GateInputs.embeddings(spark, dir), k = 8)
 
   def qKmeans(spark: SparkSession, dir: String): DataFrame =
-    kmeansInt(spark.read.parquet(s"$dir/embeddings.parquet")
+    kmeansInt(GateInputs.embeddings(spark, dir)
       .select("vec_id", "embedding"), k = 8, iters = 3)
 }

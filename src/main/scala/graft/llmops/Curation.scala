@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** q30 — stratified quota sample: the top `quota` documents per
     * (lang, source) stratum by token count, deterministic tie-break on
     * doc_id. The balancing step of corpus assembly ("cap every
@@ -27,7 +24,7 @@ object Curation {
   def qQuotaSample(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("lang", "source")
       .orderBy(col("n_tokens").desc, col("doc_id"))
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(col("lang"), col("source"), col("doc_id"),
         TextOps.tokenCount(col("text")).as("n_tokens"))
       .withColumn("rk", row_number().over(w).cast("long"))
@@ -53,7 +50,7 @@ object Curation {
     * The assembly report of [[splitLabel]]; a map stage + a 3-group agg.
     */
   def qHashSplit(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(splitLabel(col("doc_id")).as("split"), col("doc_id"),
         TextOps.tokenCount(col("text")).as("n_tokens"))
       .groupBy("split")
@@ -217,7 +214,7 @@ object Curation {
     * order).
     */
   def qMixtureWeights(spark: SparkSession, dir: String): DataFrame =
-    mixtureWeights(docs(spark, dir),
+    mixtureWeights(GateInputs.documents(spark, dir),
       Seq("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))
 
   /** q57 — mixture-sampling summary: per source, the original and
@@ -227,7 +224,7 @@ object Curation {
     * summary needs Σ n_copies, not the exploded rows).
     */
   def qMixtureSummary(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(col("source"),
         TextOps.tokenCount(col("text")).as("n_tokens"),
         mixtureCopies(col("source"), col("doc_id")).as("n_copies"))
@@ -298,7 +295,7 @@ object Curation {
   def qQualitySelect(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("lang")
       .orderBy(col("score"), col("doc_id"))
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(col("lang"), col("doc_id"),
         round(TextOps.bpeTokenCount(col("text")).cast("double") /
           col("n_chars"), 6).as("score"))
@@ -378,7 +375,7 @@ object Curation {
     * tiny residual anti-join.
     */
   def qBloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = GateInputs.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
         splitLabel(col("doc_id")).as("split"))
     val evalDocs = d.filter(col("split").isin("val", "test"))
@@ -410,7 +407,7 @@ object Curation {
     */
   def qDecontaminate(spark: SparkSession, dir: String,
       minOverlap: Int = 5): DataFrame = {
-    val d = docs(spark, dir)
+    val d = GateInputs.documents(spark, dir)
       .select(col("doc_id"), splitLabel(col("doc_id")).as("split"),
         Dedup.hashedShingles(
           graft.expressions.WordShingles.shingles(col("text"))).as("shh"))
@@ -520,7 +517,7 @@ object Curation {
     */
   def qPrioritySample(spark: SparkSession, dir: String): DataFrame =
     prioritySample(
-      docs(spark, dir).select(col("doc_id"), col("lang"),
+      GateInputs.documents(spark, dir).select(col("doc_id"), col("lang"),
         TextOps.tokenCount(col("text")).as("n_tokens")),
       Seq("lang"), "n_tokens", "doc_id", k = 10)
       .select(col("lang"), col("rk"), col("doc_id"), col("n_tokens"),
@@ -534,7 +531,7 @@ object Curation {
     * cosine bit-for-bit.
     */
   def qSemanticDecontam(spark: SparkSession, dir: String): DataFrame = {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = GateInputs.embeddings(spark, dir)
     semanticDecontaminate(
       e.filter(pmod(col("vec_id"), lit(10)) =!= 7),
       e.filter(pmod(col("vec_id"), lit(10)) === 7),
@@ -682,7 +679,7 @@ object Curation {
     * bit-for-bit.
     */
   def qDsirSelect(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = GateInputs.documents(spark, dir)
     val sel = dsirSelect(d, col("lang") === "en", k = 200)
     broadcast(sel).join(d.select("doc_id", "lang"), "doc_id")
       .select(col("doc_id"), col("lang"), col("n_feat"),

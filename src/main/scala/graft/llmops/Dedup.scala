@@ -21,9 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** Normalized word tokens of the text. */
   def tokens(text: Column): Column =
     split(regexp_replace(lower(text), "\\s+", " "), " ")
@@ -125,7 +122,7 @@ object Dedup {
     * duplicate count. The shuffle key is the 64-bit fingerprint.
     */
   def qDedupExact(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
       .groupBy("fp")
       .agg(min("doc_id").as("canonical_doc_id"),
@@ -185,7 +182,7 @@ object Dedup {
     * exactly the unmodified fresh docs.
     */
   def qDedupIncrement(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = GateInputs.documents(spark, dir)
     val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
     val landed = d.filter(col("doc_id") < 400)
     val fresh = d.filter(col("doc_id") >= 400)
@@ -261,7 +258,7 @@ object Dedup {
   }
 
   def qNearDupMinhash(spark: SparkSession, dir: String): DataFrame =
-    nearDupPairs(docs(spark, dir), threshold = 0.3)
+    nearDupPairs(GateInputs.documents(spark, dir), threshold = 0.3)
       .orderBy("doc_a", "doc_b")
 
   /** SimHash fingerprints + bucket-collision candidates on 16-bit chunks:
@@ -274,7 +271,7 @@ object Dedup {
     * reproducible by the DuckDB oracle from the md5 hex digits.
     */
   def qNearDupSimhash(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = GateInputs.documents(spark, dir)
       // WordShingles with n=1 IS the token array (one-token shingles) —
       // same native single pass, no regex tokenizer
       .withColumn("toks", graft.expressions.WordShingles.shingles(col("text"), 1))
@@ -332,7 +329,7 @@ object Dedup {
     * belongs to the IVF/PQ path (q27), not to bucket blocking.
     */
   def qDedupEmbedding(spark: SparkSession, dir: String): DataFrame =
-    embeddingDedup(spark.read.parquet(s"$dir/embeddings.parquet"),
+    embeddingDedup(GateInputs.embeddings(spark, dir),
       nTables = 4, planesPer = 4, threshold = 0.3)
 
   /** Parameterized library form of [[qDedupEmbedding]] (same plan;
@@ -464,7 +461,7 @@ object Dedup {
     * replays the identical assignment + per-cell pair semantics.
     */
   def qSemanticDedup(spark: SparkSession, dir: String): DataFrame =
-    semanticDedup(spark.read.parquet(s"$dir/embeddings.parquet"),
+    semanticDedup(GateInputs.embeddings(spark, dir),
       threshold = 0.25)
 
   /** q49 — asymmetric CONTAINMENT pairs: C(A→B) = |A∩B| / |A| over the
@@ -486,7 +483,7 @@ object Dedup {
     // each of the first 50 docs joins the corpus as its own document —
     // the snippet is contained in its parent by construction, while
     // Jaccard stays low whenever the parent is long
-    val d0 = docs(spark, dir)
+    val d0 = GateInputs.documents(spark, dir)
     val corpus = d0.select(col("source"), col("doc_id"), col("text"))
       .unionByName(d0.filter(col("doc_id") < 50)
         .select(col("source"), (col("doc_id") + 5000).as("doc_id"),
@@ -540,7 +537,7 @@ object Dedup {
     // |A∩B| arrives as a count instead of a per-pair array intersection.
     // On this corpus that is ~60k co-occurrence rows instead of ~600k
     // full-pair intersections.
-    val d = docs(spark, dir)
+    val d = GateInputs.documents(spark, dir)
       .select(col("source"), col("doc_id"),
         hashedShingles(
           graft.expressions.WordShingles.shingles(col("text"))).as("sh"))
@@ -698,7 +695,7 @@ object Dedup {
     * qualifying pair.
     */
   def qSetSimJoin(spark: SparkSession, dir: String): DataFrame = {
-    val d0 = docs(spark, dir)
+    val d0 = GateInputs.documents(spark, dir)
     val trunc = d0.filter(col("doc_id") < 200)
       .select((col("doc_id") + lit(20000L)).as("doc_id"),
         split(col("text"), " ").as("toks"))

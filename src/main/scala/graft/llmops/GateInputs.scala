@@ -1,9 +1,19 @@
 package graft.llmops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared gate-input plumbing for the llmops query families. */
 object GateInputs {
+
+  /** The gate corpus: `<dir>/documents.parquet`, one row per document
+    * (doc_id, text, source, …).
+    */
+  def documents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/documents.parquet")
+
+  /** The gate vectors: `<dir>/embeddings.parquet`, (vec_id, embedding). */
+  def embeddings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/embeddings.parquet")
 
   /** Spread-read for gate-scale inputs: the driver's sf0.1 parquet
     * tables are ONE row group each, so every tokenization/shingle map

@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object LmOps {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** q51 — Zipf-law fit per language: OLS of log10(freq) on log10(rank)
     * over each language's top-`topK` terms. The classic corpus sanity
     * check (natural text slopes ≈ −1; synthetic or boilerplate-heavy
@@ -36,7 +33,7 @@ object LmOps {
     * per group, never text.
     */
   def q51ZipfFit(spark: SparkSession, dir: String, topK: Int = 100): DataFrame = {
-    val tf = docs(spark, dir)
+    val tf = GateInputs.documents(spark, dir)
       .select(col("lang"),
         explode(graft.expressions.WordShingles.shingles(col("text"), 1))
           .as("term"))
@@ -111,7 +108,7 @@ object LmOps {
     // counts are row-local state, so the native ElementCounts kernel
     // computes them in the map stage and explode(map) hands the same
     // relation downstream. 2 consumers (model build + scoring join).
-    val bg = docs(spark, dir)
+    val bg = GateInputs.documents(spark, dir)
       .select(col("doc_id"),
         explode(graft.expressions.ElementCounts.elementCounts(
           graft.expressions.WordShingles.shingles(col("text"), 2)))
@@ -164,7 +161,7 @@ object LmOps {
       .select((1 to 9).map(k => element_at(col("bs"), k).as(s"b$k")): _*)
 
   def q55LengthCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = GateInputs.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"),
         TextOps.bpeTokenCount(col("text")).as("n_tokens"))
     val bounds = d
@@ -196,7 +193,7 @@ object LmOps {
     * fallback is grouped `approx_percentile`, dataflow unchanged).
     */
   def q56StratumQuantiles(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(col("lang"), col("source"), col("n_chars").cast("double").as("v"))
       .groupBy("lang", "source")
       .agg(sort_array(collect_list("v")).as("vs"),

@@ -287,7 +287,7 @@ object Multimodal {
     */
   def qImageDhashPairs(spark: SparkSession, dir: String): DataFrame = {
     val d = GateInputs.spread(
-        spark.read.parquet(s"$dir/documents.parquet"))
+        GateInputs.documents(spark, dir))
       .select(col("doc_id"), tokenRaster(col("text")).as("px"),
         size(graft.expressions.WordShingles.shingles(col("text"), 1))
           .as("ntok"))
@@ -304,7 +304,7 @@ object Multimodal {
     * derived from `documents.text`.
     */
   def qMultimodalMeta(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    GateInputs.documents(spark, dir)
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
       .select(
         col("doc_id"),

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.WordShingles
+import GateInputs.{documents, embeddings}
+
 /** Hybrid retrieval: a term channel and a vector channel fused with
   * reciprocal-rank fusion (RRF, Cormack+ 2009) — the standard shape of
   * a modern retrieval stack (BM25-ish lexical + dense embedding, fused
@@ -97,15 +100,62 @@ object Retrieval {
   // are light or single-branch (phrase/gram one-shots, the fusion and
   // sharded gates q107/q119/q133/q134/q136) measured NET-worse by
   // 0.4-1.5 s — the one-partition scan pipelines into their map
-  // stages better than a shuffle+cache-fill — and take [[docsRaw]]
+  // stages better than a shuffle+cache-fill — and take the raw
+  // [[GateInputs.documents]]
   private def docs(spark: SparkSession, dir: String): DataFrame =
-    GateInputs.spread(docsRaw(spark, dir))
+    GateInputs.spread(documents(spark, dir))
 
-  private def docsRaw(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+  /** The retrieval workload every gate runs, stated once: each 100th
+    * document (doc_id ≡ 0 mod 100) is a query, the rest is the corpus.
+    * `d` is the gate's document read, [[docs]] or the raw
+    * [[GateInputs.documents]] (the per-gate choice above). A gate makes
+    * one split and reads each frame through it, so a frame is built
+    * once per gate, as the gate's own val would be.
+    */
+  private final case class Split(d: DataFrame) {
+    private val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
+    /** Query and corpus documents with every column of the table. */
+    lazy val queryDocs: DataFrame = d.filter(isQuery)
+    lazy val corpusDocs: DataFrame = d.filter(!isQuery)
+    /** (qid, text) and (did, text). */
+    lazy val queries: DataFrame =
+      queryDocs.select(col("doc_id").as("qid"), col("text"))
+    lazy val corpus: DataFrame =
+      corpusDocs.select(col("doc_id").as("did"), col("text"))
+    /** (qid, phrase): each query's LEADING bigram (the q115 phrase). */
+    def phrases: DataFrame = queryDocs.select(col("doc_id").as("qid"),
+      element_at(WordShingles.shingles(col("text"), 2), 1).as("phrase"))
+    /** (qid, tok_a, tok_b): each query's first and last token (q116). */
+    def pairs: DataFrame = {
+      val toks = Dedup.tokens(col("text"))
+      queryDocs.select(col("doc_id").as("qid"),
+        element_at(toks, 1).as("tok_a"),
+        element_at(toks, size(toks)).as("tok_b"))
+    }
+    /** (qid, did) relevance: the corpus documents that share the query
+      * document's `source` (q109, q113).
+      */
+    def sameSource: DataFrame =
+      queryDocs.select(col("doc_id").as("qid"), col("source").as("q_source"))
+        .join(corpusDocs.select(col("doc_id").as("did"),
+          col("source").as("d_source")), col("q_source") === col("d_source"))
+        .select("qid", "did")
+  }
 
-  private def emb(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+  /** The ingest gates' index (q110, q117, q118, q121, q122, q123): the
+    * landed corpus (did ≢ 7 mod 10) built as `kind`, and the late batch
+    * (did ≡ 7 mod 10) [[DocIndex.append]]ed to it. The gate persists
+    * what it probes.
+    */
+  private def grown(kind: DocIndex, corpus: DataFrame): DataFrame = {
+    val late = pmod(col("did"), lit(10L)) === 7L
+    val landed = kind.build(corpus.filter(!late))
+    kind.append(corpus.filter(late), landed)
+  }
+
+  /** The BM25 gates' output columns, in gate order. */
+  private val bm25Columns =
+    Seq(col("qid"), col("did"), col("bm25_micro"), col("n_match"), col("rk"))
 
   /** Integer RRF points for a 1-based rank: floor(1e9 / (k + rank)),
     * computed as an EXACT-MULTIPLE division — (n − n mod d) / d divides
@@ -325,18 +375,13 @@ object Retrieval {
     * weighted sum as integers, so the fused ranking gates hash-exact.
     */
   def qMinMaxFusion(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val e = emb(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val term = bm25Channel(queries, corpus, topN = 20)
+    val s = Split(documents(spark, dir))
+    val e = embeddings(spark, dir)
+    val term = bm25Channel(s.queries, s.corpus, topN = 20)
       .select(col("qid"), col("did"), col("bm25_micro").as("score"))
-    val qv = queries.join(e, col("qid") === col("vec_id"))
+    val qv = s.queries.join(e, col("qid") === col("vec_id"))
       .select(col("qid"), col("embedding").as("qe"))
-    val cv = corpus.join(e, col("did") === col("vec_id"))
+    val cv = s.corpus.join(e, col("did") === col("vec_id"))
       .select(col("did"), col("embedding").as("ce"))
     val wV = Window.partitionBy("qid")
       .orderBy(col("cos6").desc, col("did"))
@@ -674,13 +719,8 @@ object Retrieval {
     * pruning path).
     */
   def qBm25MaxScore(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val index = postingsIndex(corpus).persist()
+    val s = Split(docs(spark, dir))
+    val index = postingsIndex(s.corpus).persist()
     // on this dense tiny-vocab corpus the essential terms' df mass
     // covers the corpus for every query, so the round-13 bound-
     // viability pre-check routes the whole batch straight to the
@@ -688,7 +728,7 @@ object Retrieval {
     // here (it runs, and wins, in the sparse `Soak bm25-100x`); the
     // hash is route-independent because both paths score the same
     // pre-quantized impacts
-    bm25ProbeMaxScore(queryTerms(queries), index, topN = 10,
+    bm25ProbeMaxScore(queryTerms(s.queries), index, topN = 10,
         essential = 40)
       .orderBy("qid", "rk")
   }
@@ -754,16 +794,10 @@ object Retrieval {
     * replays both rounds from the shared CTE chain.
     */
   def qPrfExpansion(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val index = postingsIndex(corpus).persist()
-    prfExpand(queries, index, fbDocs = 5, fbTerms = 3, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
+    val s = Split(docs(spark, dir))
+    val index = postingsIndex(s.corpus).persist()
+    prfExpand(s.queries, index, fbDocs = 5, fbTerms = 3, topN = 10)
+      .select(bm25Columns: _*)
       .orderBy("qid", "rk")
   }
 
@@ -811,18 +845,15 @@ object Retrieval {
     * passage-retrieval behavior.
     */
   def qPassageRetrieval(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery).select("doc_id", "text")
-    val passages = TextOps.chunkDocuments(corpus, 32, 8)
-      .select(packPassageId(col("doc_id"), col("chunk_idx"), 1000L)
-          .as("did"),
-        col("chunk_text").as("text"))
+    val s = Split(docs(spark, dir))
+    val passages =
+      TextOps.chunkDocuments(s.corpusDocs.select("doc_id", "text"), 32, 8)
+        .select(packPassageId(col("doc_id"), col("chunk_idx"), 1000L)
+            .as("did"),
+          col("chunk_text").as("text"))
     val index = postingsIndex(passages).persist()
     val pid = col("did")
-    bm25Probe(queries, index, topN = 10)
+    bm25Probe(s.queries, index, topN = 10)
       .select(col("qid"),
         ((pid - pmod(pid, lit(1000L))) / 1000L).cast("long")
           .as("doc_id"),
@@ -856,7 +887,7 @@ object Retrieval {
       topN: Int): DataFrame =
     gramProbe(phrases,
       corpus.select(col("did"),
-        explode(graft.expressions.WordShingles.shingles(col("text"), n))
+        explode(WordShingles.shingles(col("text"), n))
           .as("gram")),
       topN)
 
@@ -868,15 +899,8 @@ object Retrieval {
     * formulation of the same counting.
     */
   def qPhraseSearch(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val phrases = d.filter(isQuery)
-      .select(col("doc_id").as("qid"),
-        element_at(graft.expressions.WordShingles
-          .shingles(col("text"), 2), 1).as("phrase"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    phraseSearch(phrases, corpus, n = 2, topN = 10)
+    val s = Split(documents(spark, dir))
+    phraseSearch(s.phrases, s.corpus, n = 2, topN = 10)
       .orderBy("qid", "rk")
   }
 
@@ -1038,16 +1062,8 @@ object Retrieval {
     * last token) as the pair, window 3, top-10 by co-occurrence count.
     */
   def qProximitySearch(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val toks = Dedup.tokens(col("text"))
-    val pairs = d.filter(isQuery)
-      .select(col("doc_id").as("qid"),
-        element_at(toks, 1).as("tok_a"),
-        element_at(toks, size(toks)).as("tok_b"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    proximitySearch(pairs, corpus, window = 3, topN = 10)
+    val s = Split(documents(spark, dir))
+    proximitySearch(s.pairs, s.corpus, window = 3, topN = 10)
       .orderBy("qid", "rk")
   }
 
@@ -1059,20 +1075,9 @@ object Retrieval {
     * append ≡ rebuild AND probe ≡ one-shot in one row.
     */
   def qPhraseIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val phrases = d.filter(isQuery)
-      .select(col("doc_id").as("qid"),
-        element_at(graft.expressions.WordShingles
-          .shingles(col("text"), 2), 1).as("phrase"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val landed = tokenPositions(
-      corpus.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val index = DocIndex.Positional.append(
-      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
-      .persist()
-    phraseProbe(phrases, index, topN = 10).orderBy("qid", "rk")
+    val s = Split(documents(spark, dir))
+    val index = grown(DocIndex.Positional, s.corpus).persist()
+    phraseProbe(s.phrases, index, topN = 10).orderBy("qid", "rk")
   }
 
   /** q118 — the positional-index certificate, NEAR/w side: the SAME
@@ -1080,21 +1085,9 @@ object Retrieval {
     * pairs; the oracle IS the q116 statement VERBATIM.
     */
   def qProximityIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val toks = Dedup.tokens(col("text"))
-    val pairs = d.filter(isQuery)
-      .select(col("doc_id").as("qid"),
-        element_at(toks, 1).as("tok_a"),
-        element_at(toks, size(toks)).as("tok_b"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val landed = tokenPositions(
-      corpus.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val index = DocIndex.Positional.append(
-      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
-      .persist()
-    proximityProbe(pairs, index, window = 3, topN = 10)
+    val s = Split(documents(spark, dir))
+    val index = grown(DocIndex.Positional, s.corpus).persist()
+    proximityProbe(s.pairs, index, window = 3, topN = 10)
       .orderBy("qid", "rk")
   }
 
@@ -1110,18 +1103,13 @@ object Retrieval {
     * nProbe < nCells is measured by RetrievalSpec).
     */
   def qHybridRrfIvf(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val e = emb(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val term = termChannel(queries, corpus, topN = 20)
-    val cv = corpus.join(e, col("did") === col("vec_id"))
+    val s = Split(documents(spark, dir))
+    val e = embeddings(spark, dir)
+    val term = termChannel(s.queries, s.corpus, topN = 20)
+    val cv = s.corpus.join(e, col("did") === col("vec_id"))
       .select(col("did").as("vec_id"), col("embedding"))
       .withColumn("nrm", Similarity.norm(col("embedding")))
-    val qv = queries.join(e, col("qid") === col("vec_id"))
+    val qv = s.queries.join(e, col("qid") === col("vec_id"))
       .select(col("qid").as("vec_id"), col("embedding"))
       .withColumn("nrm", Similarity.norm(col("embedding")))
     val seeds = Similarity.ivfSeeds(cv)
@@ -1206,13 +1194,12 @@ object Retrieval {
     * hash-gates, not just the final set.
     */
   def qMmrDiversify(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val e = emb(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val qv = d.filter(isQuery)
+    val s = Split(docs(spark, dir))
+    val e = embeddings(spark, dir)
+    val qv = s.queryDocs
       .join(e, col("doc_id") === col("vec_id"))
       .select(col("doc_id").as("qid"), col("embedding").as("qe"))
-    val cv = d.filter(!isQuery)
+    val cv = s.corpusDocs
       .join(e, col("doc_id") === col("vec_id"))
       .select(col("doc_id").as("did"), col("embedding").as("ce"))
     val wC = Window.partitionBy("qid").orderBy(col("cos6").desc, col("did"))
@@ -1271,21 +1258,10 @@ object Retrieval {
     * top-5 per query. Gate certifies the anti-join + dense re-rank.
     */
   def qHardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val run = bm25Channel(queries, corpus, topN = 10)
+    val s = Split(docs(spark, dir))
+    val run = bm25Channel(s.queries, s.corpus, topN = 10)
       .select("qid", "did", "rk")
-    val rel = d.filter(isQuery).select(col("doc_id").as("qid"),
-        col("source").as("q_source"))
-      .join(d.filter(!isQuery).select(col("doc_id").as("did"),
-        col("source").as("d_source")),
-        col("q_source") === col("d_source"))
-      .select("qid", "did")
-    hardNegatives(run, rel, k = 5).orderBy("qid", "neg_rank")
+    hardNegatives(run, s.sameSource, k = 5).orderBy("qid", "neg_rank")
   }
 
   /** BM25-scored term retrieval (Robertson–Spärck Jones k1/b family),
@@ -1332,18 +1308,10 @@ object Retrieval {
     * index.
     */
   def qBm25Indexed(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val landed = postingsIndex(corpus.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val index = DocIndex.Postings.append(
-      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed).persist()
-    bm25Probe(queries, index, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
+    val s = Split(docs(spark, dir))
+    val index = grown(DocIndex.Postings, s.corpus).persist()
+    bm25Probe(s.queries, index, topN = 10)
+      .select(bm25Columns: _*)
       .orderBy("qid", "rk")
   }
 
@@ -1353,15 +1321,9 @@ object Retrieval {
     * hash-exact; `.select` fixes the gate column order.
     */
   def qBm25(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    bm25Channel(queries, corpus, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
+    val s = Split(docs(spark, dir))
+    bm25Channel(s.queries, s.corpus, topN = 10)
+      .select(bm25Columns: _*)
       .orderBy("qid", "rk")
   }
 
@@ -1521,21 +1483,16 @@ object Retrieval {
     * hash-exact.
     */
   def qRboRuns(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
+    val s = Split(documents(spark, dir))
     // ONE corpus tokenization feeds BOTH runs: the BM25 probe and the
     // overlap channel share the persisted postings (r14 — the before
     // plan tokenized the corpus once per run; the postings' (did, tok)
     // projection is exactly termChannel's distinct-token relation, so
     // the run rows are identical)
-    val index = postingsIndex(corpus).persist()
-    val runA = bm25Probe(queries, index, topN = 10)
+    val index = postingsIndex(s.corpus).persist()
+    val runA = bm25Probe(s.queries, index, topN = 10)
       .select("qid", "did", "rk")
-    val runB = termProbeTerms(queryTerms(queries), index, topN = 10)
+    val runB = termProbeTerms(queryTerms(s.queries), index, topN = 10)
     rankedOverlap(runA, runB, k = 10).orderBy("qid")
   }
 
@@ -1545,21 +1502,10 @@ object Retrieval {
     * the metric arithmetic end-to-end on a real ranked run.
     */
   def qRetrievalMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val run = bm25Channel(queries, corpus, topN = 10)
+    val s = Split(docs(spark, dir))
+    val run = bm25Channel(s.queries, s.corpus, topN = 10)
       .select("qid", "did", "rk")
-    val rel = d.filter(isQuery).select(col("doc_id").as("qid"),
-        col("source").as("q_source"))
-      .join(d.filter(!isQuery).select(col("doc_id").as("did"),
-        col("source").as("d_source")),
-        col("q_source") === col("d_source"))
-      .select("qid", "did")
-    retrievalMetrics(run, rel).orderBy("qid")
+    retrievalMetrics(run, s.sameSource).orderBy("qid")
   }
 
   /** q107 — hybrid retrieval report: every 100th document is a query;
@@ -1570,17 +1516,12 @@ object Retrieval {
     * hash-exact across engines.
     */
   def qHybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val e = emb(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val term = termChannel(queries, corpus, topN = 20)
-    val qv = queries.join(e, col("qid") === col("vec_id"))
+    val s = Split(documents(spark, dir))
+    val e = embeddings(spark, dir)
+    val term = termChannel(s.queries, s.corpus, topN = 20)
+    val qv = s.queries.join(e, col("qid") === col("vec_id"))
       .select(col("qid"), col("embedding").as("qe"))
-    val cv = corpus.join(e, col("did") === col("vec_id"))
+    val cv = s.corpus.join(e, col("did") === col("vec_id"))
       .select(col("did"), col("embedding").as("ce"))
     val vec = vectorChannel(qv, cv, topN = 20)
     rrfFuse(Seq("term" -> term, "vec" -> vec), topK = 10)
@@ -1610,7 +1551,7 @@ object Retrieval {
     */
   def gramPositions(corpus: DataFrame, n: Int): DataFrame =
     corpus.select(col("did"),
-      posexplode(graft.expressions.WordShingles.shingles(col("text"), n))
+      posexplode(WordShingles.shingles(col("text"), n))
         .as(Seq("pos", "gram")))
 
   /** Phrase-occurrence counting over a gram relation with (did, gram)
@@ -1649,20 +1590,9 @@ object Retrieval {
     * append ≡ rebuild AND probe ≡ one-shot.
     */
   def qPhraseGramIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val phrases = d.filter(isQuery)
-      .select(col("doc_id").as("qid"),
-        element_at(graft.expressions.WordShingles
-          .shingles(col("text"), 2), 1).as("phrase"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val landed = gramPositions(
-      corpus.filter(pmod(col("did"), lit(10L)) =!= 7L), n = 2)
-    val index = DocIndex.Gram(2).append(
-      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
-      .persist()
-    gramProbe(phrases, index, topN = 10).orderBy("qid", "rk")
+    val s = Split(documents(spark, dir))
+    val index = grown(DocIndex.Gram(2), s.corpus).persist()
+    gramProbe(s.phrases, index, topN = 10).orderBy("qid", "rk")
   }
 
   /** KWIC snippet extraction — the serving surface a phrase hit needs
@@ -1735,15 +1665,8 @@ object Retrieval {
     * lowercased token arrays, so the snippet STRINGS gate hash-exact.
     */
   def qPhraseSnippets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val phrases = d.filter(isQuery)
-      .select(col("doc_id").as("qid"),
-        element_at(graft.expressions.WordShingles
-          .shingles(col("text"), 2), 1).as("phrase"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    phraseSnippets(phrases, corpus, n = 2, topN = 5, ctx = 3)
+    val s = Split(documents(spark, dir))
+    phraseSnippets(s.phrases, s.corpus, n = 2, topN = 5, ctx = 3)
       .orderBy("qid", "rk")
   }
 
@@ -1755,20 +1678,9 @@ object Retrieval {
     * snippet strings — identically to the one-shot.
     */
   def qSnippetsGramIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val phrases = d.filter(isQuery)
-      .select(col("doc_id").as("qid"),
-        element_at(graft.expressions.WordShingles
-          .shingles(col("text"), 2), 1).as("phrase"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val landed = gramPositions(
-      corpus.filter(pmod(col("did"), lit(10L)) =!= 7L), n = 2)
-    val index = DocIndex.Gram(2).append(
-      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
-      .persist()
-    snippetProbe(phrases, index, corpus, n = 2, topN = 5, ctx = 3)
+    val s = Split(documents(spark, dir))
+    val index = grown(DocIndex.Gram(2), s.corpus).persist()
+    snippetProbe(s.phrases, index, s.corpus, n = 2, topN = 5, ctx = 3)
       .orderBy("qid", "rk")
   }
 
@@ -1849,16 +1761,8 @@ object Retrieval {
     * direct full scoring.
     */
   def qBm25Impact(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val landed = postingsIndex(
-      corpus.filter(pmod(col("did"), lit(10L)) =!= 7L))
-    val postings = DocIndex.Postings.append(
-      corpus.filter(pmod(col("did"), lit(10L)) === 7L), landed)
+    val s = Split(docs(spark, dir))
+    val postings = grown(DocIndex.Postings, s.corpus)
     // A/B-REJECTED (r15): semi-filtering the quantization to the
     // query's token set (the qPost treatment) — measured in THREE
     // shapes, none a keep. Un-materialized qPost: wins the 100× sparse
@@ -1872,9 +1776,8 @@ object Retrieval {
     // join and the probe were already slim, and q114's identical
     // verdict (r14 pruning reverted this round) is the same lesson.
     val impacts = impactIndex(postings).persist()
-    impactProbe(queryTerms(queries), impacts, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
+    impactProbe(queryTerms(s.queries), impacts, topN = 10)
+      .select(bm25Columns: _*)
       .orderBy("qid", "rk")
   }
 
@@ -1965,18 +1868,13 @@ object Retrieval {
     * RetrievalSpec on a fixture built to starve tier 1.
     */
   def qBm25Tiered(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
+    val s = Split(docs(spark, dir))
     // A/B-REJECTED (r15): query-term-pruned tier builds — the q123
     // verdict verbatim (same mechanism, same three measured shapes,
     // same estimate-trap at dense sf1); see qBm25Impact.
-    val impacts = impactIndex(postingsIndex(corpus)).persist()
+    val impacts = impactIndex(postingsIndex(s.corpus)).persist()
     val pruned = prunedImpactIndex(impacts, keepTop = 24).persist()
-    tieredImpactProbe(queryTerms(queries), impacts, pruned, topN = 10)
+    tieredImpactProbe(queryTerms(s.queries), impacts, pruned, topN = 10)
       .select(col("qid"), col("did"), col("bm25_micro"),
         col("n_match"), col("rk"), col("tier"))
       .orderBy("qid", "rk")
@@ -1991,12 +1889,7 @@ object Retrieval {
     * full-width case is RetrievalSpec's).
     */
   def qBm25Pruned(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
+    val s = Split(docs(spark, dir))
     // A/B-REJECTED (r15): semi-filtering the quantization + champion
     // window to the query's terms (the q114/q123 qPost treatment).
     // Measured neutral at sf0.1 (p50 1.98 → 1.95) and WORSE at the
@@ -2008,10 +1901,9 @@ object Retrieval {
     // over 21.5M postings buy nothing. The treatment pays only where
     // the FULL impact relation would otherwise materialize (q123/q135).
     val pruned = prunedImpactIndex(
-      impactIndex(postingsIndex(corpus)), keepTop = 24).persist()
-    impactProbe(queryTerms(queries), pruned, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
+      impactIndex(postingsIndex(s.corpus)), keepTop = 24).persist()
+    impactProbe(queryTerms(s.queries), pruned, topN = 10)
+      .select(bm25Columns: _*)
       .orderBy("qid", "rk")
   }
 
@@ -2086,20 +1978,16 @@ object Retrieval {
     * all reflecting the update with no separate maintenance.
     */
   def qBm25Upserted(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
+    val s = Split(docs(spark, dir))
+    val corpus = s.corpusDocs
       .select(col("doc_id").as("did"), col("text"), col("source"))
     val full = postingsIndex(corpus.select("did", "text"))
     val updated = corpus.filter(pmod(col("did"), lit(10L)) === 3L)
       .select(col("did"),
         concat(col("text"), lit(" "), col("source")).as("text"))
     val index = DocIndex.Postings.upsert(updated, full).persist()
-    bm25Probe(queries, index, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
+    bm25Probe(s.queries, index, topN = 10)
+      .select(bm25Columns: _*)
       .orderBy("qid", "rk")
   }
 
@@ -2111,19 +1999,13 @@ object Retrieval {
     * the deletion with no separate maintenance.
     */
   def qBm25Deleted(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val full = postingsIndex(corpus)
+    val s = Split(docs(spark, dir))
+    val full = postingsIndex(s.corpus)
     val index = indexDelete(
-      corpus.filter(pmod(col("did"), lit(10L)) === 3L).select("did"),
+      s.corpus.filter(pmod(col("did"), lit(10L)) === 3L).select("did"),
       full).persist()
-    bm25Probe(queries, index, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
+    bm25Probe(s.queries, index, topN = 10)
+      .select(bm25Columns: _*)
       .orderBy("qid", "rk")
   }
 
@@ -2198,18 +2080,12 @@ object Retrieval {
     * document-partitioned serving topology is score-lossless.
     */
   def qBm25Sharded(spark: SparkSession, dir: String): DataFrame = {
-    val d = docsRaw(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val index = postingsIndex(corpus).persist()
-    val shards = (0L until 3L).map(s =>
-      index.filter(pmod(col("did"), lit(3L)) === s))
-    bm25ShardedProbe(queries, shards, topN = 10)
-      .select(col("qid"), col("did"), col("bm25_micro"),
-        col("n_match"), col("rk"))
+    val s = Split(documents(spark, dir))
+    val index = postingsIndex(s.corpus).persist()
+    val shards = (0L until 3L).map(k =>
+      index.filter(pmod(col("did"), lit(3L)) === k))
+    bm25ShardedProbe(s.queries, shards, topN = 10)
+      .select(bm25Columns: _*)
       .orderBy("qid", "rk")
   }
 
@@ -2257,18 +2133,14 @@ object Retrieval {
     * the mirror replays the same picks over list_sort(list_distinct).
     */
   def qBooleanRetrieval(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
+    val s = Split(docs(spark, dir))
     val dt = array_sort(array_distinct(Dedup.tokens(col("text"))))
-    val qd = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), dt.as("dt"))
+    val qd = s.queryDocs.select(col("doc_id").as("qid"), dt.as("dt"))
     val required = qd.select(col("qid"),
       explode(slice(col("dt"), 1, 2)).as("tok"))
     val excluded = qd.select(col("qid"),
       element_at(col("dt"), size(col("dt"))).as("tok"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    booleanProbe(required, excluded, postingsIndex(corpus), topN = 10)
+    booleanProbe(required, excluded, postingsIndex(s.corpus), topN = 10)
       .orderBy("qid", "rk")
   }
 
@@ -2496,14 +2368,9 @@ object Retrieval {
     * scores gate hash-exact.
     */
   def qBm25F(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val index = bm25fIndex(corpus, titleLen = 6).persist()
-    bm25fProbe(queries, index, topN = 10)
+    val s = Split(docs(spark, dir))
+    val index = bm25fIndex(s.corpus, titleLen = 6).persist()
+    bm25fProbe(s.queries, index, topN = 10)
       .select(col("qid"), col("did"), col("bm25f_micro"),
         col("n_match"), col("rk"))
       .orderBy("qid", "rk")
@@ -2515,14 +2382,9 @@ object Retrieval {
     * HUGEINT, so the hash pins the LM ranking end-to-end.
     */
   def qQlDirichlet(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(100L)) === 0L
-    val queries = d.filter(isQuery)
-      .select(col("doc_id").as("qid"), col("text"))
-    val corpus = d.filter(!isQuery)
-      .select(col("doc_id").as("did"), col("text"))
-    val postings = postingsIndex(corpus).persist()
-    qlDirichletProbe(indexedQueryTerms(queries, m = 3), postings,
+    val s = Split(docs(spark, dir))
+    val postings = postingsIndex(s.corpus).persist()
+    qlDirichletProbe(indexedQueryTerms(s.queries, m = 3), postings,
       topN = 10)
       .orderBy("qid", "rk")
   }

@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  private def emb(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
-
   /** Σ aᵢ·bᵢ — the native [[graft.expressions.DotProduct]] kernel
     * (double accumulation, sequential ascending fold — the same
     * deterministic order as the HOF `aggregate(zip_with(...))`
@@ -84,7 +81,7 @@ object Similarity {
 
   /** Per-vector norm + mean (array HOF baseline; deterministic fold). */
   def qVectorStats(spark: SparkSession, dir: String): DataFrame =
-    emb(spark, dir)
+    GateInputs.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         round(norm(col("embedding")), 6).as("l2_norm"),
         round(aggregate(col("embedding"), lit(0.0),
@@ -97,7 +94,7 @@ object Similarity {
     * ranking is top-k, not a global sort.
     */
   def qKnnBrute(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = GateInputs.embeddings(spark, dir)
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_embedding"))
     e.filter(col("vec_id") =!= 0)
@@ -114,7 +111,7 @@ object Similarity {
     * aggregation — the IVF coarse-quantizer building block.
     */
   def qLabelCentroids(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = GateInputs.embeddings(spark, dir)
     val dim = 64
     // elementwise decimal sums keep the reduce order-independent
     val sums = (0 until dim).map { j =>
@@ -203,7 +200,8 @@ object Similarity {
     * buckets instead of the corpus (SimilaritySpec pins the pruning).
     */
   def qIvfKnn(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).withColumn("nrm", norm(col("embedding")))
+    val e = GateInputs.embeddings(spark, dir)
+      .withColumn("nrm", norm(col("embedding")))
     val seeds = ivfSeeds(e)
     val assign = ivfAssign(e, seeds)
     val qvec = e.filter(col("vec_id") === 0)
@@ -301,7 +299,8 @@ object Similarity {
     * query set (per-query probe rank, per-query result rank).
     */
   def qKnnJoin(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).withColumn("nrm", norm(col("embedding")))
+    val e = GateInputs.embeddings(spark, dir)
+      .withColumn("nrm", norm(col("embedding")))
     knnJoin(e, e.filter(pmod(col("vec_id"), lit(53)) === 0), k = 3)
   }
 
@@ -313,7 +312,8 @@ object Similarity {
     * driver's artifact (SimilaritySpec pins it locally).
     */
   def qIvfAppend(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).withColumn("nrm", norm(col("embedding")))
+    val e = GateInputs.embeddings(spark, dir)
+      .withColumn("nrm", norm(col("embedding")))
     val seeds = ivfSeeds(e)
     ivfAppend(
       ivfAssign(e.filter(pmod(col("vec_id"), lit(5)) =!= 0), seeds),
@@ -332,7 +332,8 @@ object Similarity {
     * the trained-quantizer path end-to-end against DuckDB.
     */
   def qIvfKmeansCells(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).withColumn("nrm", norm(col("embedding")))
+    val e = GateInputs.embeddings(spark, dir)
+      .withColumn("nrm", norm(col("embedding")))
     val seeds = ivfSeedsKmeans(e, nCells = 8, iters = 3)
     ivfAssign(e, seeds)
       .groupBy("seed_id")
@@ -356,7 +357,7 @@ object Similarity {
     */
   def qQuantizeInt8(spark: SparkSession, dir: String): DataFrame = {
     val xd = (x: Column) => x.cast("double")
-    emb(spark, dir)
+    GateInputs.embeddings(spark, dir)
       .withColumn("absmax",
         aggregate(col("embedding"), lit(0.0),
           (a, x) => greatest(a, abs(xd(x)))))
@@ -445,7 +446,7 @@ object Similarity {
     * signed sum over the unnested embedding.
     */
   def qRandomProjection(spark: SparkSession, dir: String): DataFrame =
-    randomProject(emb(spark, dir)).orderBy("vec_id", "k")
+    randomProject(GateInputs.embeddings(spark, dir)).orderBy("vec_id", "k")
 
   /** LSH-bucketed ANN: same-bucket candidate pairs with exact cosine
     * re-rank — the scale path (equi-join on bucket key; no cross join).
@@ -454,7 +455,7 @@ object Similarity {
   def qAnnLshPairs(spark: SparkSession, dir: String): DataFrame = {
     // bucket AND norm are per-vector map-stage work, computed before the
     // pair join; the per-pair loop is one codegen'd dot product
-    val e = emb(spark, dir)
+    val e = GateInputs.embeddings(spark, dir)
       .withColumn("bucket", lshKey(col("embedding"), 64, 8))
       .withColumn("nrm", norm(col("embedding")))
     val a = e.select(col("bucket"), col("vec_id").as("id_a"),

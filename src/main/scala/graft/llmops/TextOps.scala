@@ -151,17 +151,15 @@ object TextOps {
     transform(shingleArr, s => substring(md5(s), 1, 16))
 
   // ---- queries over the `documents` table ----
-
-  // plain read: the light text gates tokenize once in a single branch —
-  // the spread's shuffle+cache-fill was measured a net +0.35 s median
-  // tax on them (window-equal r13 A/B); the one heavy multi-branch
-  // consumer (qDuplicatedSpans) spreads at its own call site
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+  // They read [[GateInputs.documents]] plain: the light text gates
+  // tokenize once in a single branch — the spread's shuffle+cache-fill
+  // was measured a net +0.35 s median tax on them (window-equal r13
+  // A/B); the one heavy multi-branch consumer (qDuplicatedSpans)
+  // spreads at its own call site.
 
   /** Per-document text statistics (flagship text-analysis query). */
   def qTextStats(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(col("doc_id"), col("text"),
         qualityStruct(col("text")).as("q"))
       .select(col("doc_id"), col("q.n_chars").as("n_chars"),
@@ -176,7 +174,7 @@ object TextOps {
     * "how much data per language" pipeline report.
     */
   def qCorpusProfile(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .groupBy("lang", "source")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -190,7 +188,7 @@ object TextOps {
     * non-cheap producer in its own project).
     */
   def qLangId(spark: SparkSession, dir: String): DataFrame = {
-    val withDbl = docs(spark, dir)
+    val withDbl = GateInputs.documents(spark, dir)
       .withColumn("dbl", doubledText(col("text")))
     val withScores = LangStopwords.foldLeft(withDbl) { case (d, (code, ws)) =>
       d.withColumn(s"s_$code", stopwordHits(col("dbl"), ws))
@@ -247,7 +245,7 @@ object TextOps {
       .otherwise("ok")
 
   def qQualityFilter(spark: SparkSession, dir: String): DataFrame = {
-    val d = withQualityStats(docs(spark, dir))
+    val d = withQualityStats(GateInputs.documents(spark, dir))
     d.withColumn("reason", qualityReason(col("n_tokens"), col("mwl"),
         col("digit_ratio"), col("sw_hits")))
       .select(col("doc_id"), col("n_tokens"),
@@ -269,7 +267,7 @@ object TextOps {
     * (measured 0.98 s → map-stage floor at sf0.1).
     */
   def qRepetition(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(col("doc_id"),
         graft.expressions.ModeCount.modeCount(
           graft.expressions.WordShingles.shingles(col("text"), 2)).as("mc"))
@@ -295,7 +293,7 @@ object TextOps {
     * partials were already combined map-side.
     */
   def qTopTerms(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(col("doc_id"),
         explode(graft.expressions.ElementCounts.elementCounts(
           graft.expressions.WordShingles.shingles(col("text"), 1)))
@@ -528,7 +526,8 @@ object TextOps {
     * the hash match certifies two-level ≡ naive.
     */
   def qSequencePacking(spark: SparkSession, dir: String): DataFrame =
-    concatAndChunk(docs(spark, dir).select("doc_id", "text"),
+    concatAndChunk(
+      GateInputs.documents(spark, dir).select("doc_id", "text"),
       ctxLen = 512, sepTokens = 1)
       .orderBy("doc_id")
 
@@ -602,8 +601,9 @@ object TextOps {
     * decorrelation inspectable in the gate itself.
     */
   def qEpochShuffle(spark: SparkSession, dir: String): DataFrame = {
-    val seqs = concatAndChunk(docs(spark, dir).select("doc_id", "text"),
-      ctxLen = 512, sepTokens = 1)
+    val seqs = concatAndChunk(
+        GateInputs.documents(spark, dir).select("doc_id", "text"),
+        ctxLen = 512, sepTokens = 1)
       .select("seq_id").distinct()
     epochShuffle(seqs, epoch = 1L)
       .withColumn("shuffle_key_e2", epochShuffleKey(col("seq_id"), 2L))
@@ -618,7 +618,8 @@ object TextOps {
     * comprehension and replays the quantization literally.
     */
   def qCollocations(spark: SparkSession, dir: String): DataFrame =
-    collocations(docs(spark, dir).select("doc_id", "text"),
+    collocations(
+      GateInputs.documents(spark, dir).select("doc_id", "text"),
       minCount = 5L, topK = 100)
 
   /** q74 — BPE merge-pair statistics: corpus-weighted adjacent
@@ -640,7 +641,7 @@ object TextOps {
     * descending len=1 edge case).
     */
   def qBpePairs(spark: SparkSession, dir: String): DataFrame = {
-    val tf = docs(spark, dir)
+    val tf = GateInputs.documents(spark, dir)
       .select(explode(
         graft.expressions.WordShingles.shingles(col("text"), 1)).as("tok"))
       .groupBy("tok")
@@ -721,7 +722,7 @@ object TextOps {
     */
   private def q41DocVecs(spark: SparkSession, dir: String,
       withBands: Boolean = true): DataFrame = {
-    val vecs = tfidfWeights(docs(spark, dir))
+    val vecs = tfidfWeights(GateInputs.documents(spark, dir))
       .groupBy("lang", "source", "doc_id")
       .agg(
         array_sort(collect_list(struct(
@@ -859,7 +860,7 @@ object TextOps {
   def qTopKeywords(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("doc_id")
       .orderBy(col("w").desc, col("term"))
-    tfidfWeights(docs(spark, dir))
+    tfidfWeights(GateInputs.documents(spark, dir))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select(col("doc_id"), col("rank"), col("term"),
@@ -875,7 +876,7 @@ object TextOps {
     * labels keep the result null-free and totally ordered.
     */
   def qCubeProfile(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .select(col("lang"), col("source"),
         tokenCount(col("text")).as("n_tokens"))
       .cube("lang", "source")
@@ -910,7 +911,7 @@ object TextOps {
     * rows of test scaffolding, not operator dataflow.
     */
   def qCodeSwitch(spark: SparkSession, dir: String): DataFrame = {
-    val d0 = docs(spark, dir)
+    val d0 = GateInputs.documents(spark, dir)
     // the 30 smallest English doc_ids, as TakeOrderedAndProject (no
     // global window — the one WindowExec-on-one-partition pattern this
     // file used to carry); fresh ids derive from doc_id directly
@@ -973,7 +974,7 @@ object TextOps {
     */
   def qOovRate(spark: SparkSession, dir: String,
       minDf: Int = 3, maxDf: Int = 400): DataFrame = {
-    val tf = docs(spark, dir)
+    val tf = GateInputs.documents(spark, dir)
       .select(col("doc_id"),
         explode(graft.expressions.ElementCounts.elementCounts(
           graft.expressions.WordShingles.shingles(col("text"), 1)))
@@ -1004,7 +1005,7 @@ object TextOps {
     * null-free and totally ordered.
     */
   def qRollupProfile(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    GateInputs.documents(spark, dir)
       .rollup("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
         sum(tokenCount(col("text"))).as("total_tokens"))
@@ -1026,7 +1027,7 @@ object TextOps {
     // fingerprints via the native kernel — same values as
     // array_distinct(winnowFingerprints(shingleHashes(sh), w)), one
     // digest pass, no per-window slice allocation (DedupSpec parity)
-    val d = docs(spark, dir)
+    val d = GateInputs.documents(spark, dir)
       .select(col("doc_id"),
         graft.expressions.WordShingles.shingles(col("text")).as("sh"))
       .select(col("doc_id"),
@@ -1148,7 +1149,7 @@ object TextOps {
     * CONTENT, not just the counts.
     */
   def qSpanDedup(spark: SparkSession, dir: String): DataFrame =
-    spanDedup(docs(spark, dir), 3)
+    spanDedup(GateInputs.documents(spark, dir), 3)
 
   /** Corpus-global ARBITRARY-OFFSET duplicated-span report — the
     * exact-substring-dedup shape of "Deduplicating Training Data Makes
@@ -1253,7 +1254,7 @@ object TextOps {
   def qDuplicatedSpans(spark: SparkSession, dir: String): DataFrame = {
     // spread: the stride-1 gram hashing is the heaviest map stage in
     // this file and feeds two consumers (−2.1 s measured at sf0.1)
-    val d0 = GateInputs.spread(docs(spark, dir))
+    val d0 = GateInputs.spread(GateInputs.documents(spark, dir))
     val toks = split(col("text"), " ")
     val shifted = d0.filter(col("doc_id") < 100)
       .select((col("doc_id") + 30000L).as("doc_id"),
@@ -1311,7 +1312,7 @@ object TextOps {
     * CONTENT, not just counts).
     */
   def qChunkDocuments(spark: SparkSession, dir: String): DataFrame =
-    chunkDocuments(docs(spark, dir), 64, 16)
+    chunkDocuments(GateInputs.documents(spark, dir), 64, 16)
       .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
         col("n_tokens"), col("n_chars"), col("chunk_sig"))
       .orderBy("doc_id", "chunk_idx")

@@ -103,7 +103,7 @@ object Unigram {
     * against an independent driver implementation.
     */
   def qUnigramSeed(spark: SparkSession, dir: String): DataFrame =
-    seedCandidates(spark.read.parquet(s"$dir/documents.parquet"))
+    seedCandidates(GateInputs.documents(spark, dir))
       .orderBy(col("weighted_n").desc, col("piece"))
       .limit(50)
 

@@ -263,5 +263,5 @@ object WordPiece {
     */
   def qWordpieceSeed(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    seedPairs(spark.read.parquet(s"$dir/documents.parquet"))
+    seedPairs(GateInputs.documents(spark, dir))
 }

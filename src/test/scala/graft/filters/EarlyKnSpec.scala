@@ -59,4 +59,21 @@ class EarlyKnSpec extends SparkSpec {
     // methodology)
     assert(df.filter(EarlyKnFilter.preCuts).count() === 3L)
   }
+
+  // no fixture: one alert that passes the cuts, over a Range the
+  // optimizer cannot evaluate, so only an empty catalog can fold the join
+  test("default binding's empty catalog folds the semi-join away") {
+    val alerts = spark.range(1).selectExpr(
+      "named_struct('drb', 0.9D, 'classtar', 0.9D, 'jd', 2460000.1D, " +
+        "'jdstarthist', 2460000.0D, 'ra', 150.0D, 'dec', 30.0D, " +
+        "'magpsf', 18.0F) AS candidate",
+      "'Galaxy' AS cdsxmatch", "0 AS roid")
+    val out = FilterRegistry.applyFilter(alerts,
+      "ztf.livestream.early_kn_candidates")
+    val plan = out.queryExecution.optimizedPlan
+    assert(plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isEmpty, plan.toString)
+    assert(out.count() === 0L)
+  }
 }

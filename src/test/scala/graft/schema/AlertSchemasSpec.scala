@@ -55,13 +55,6 @@ class AlertSchemasSpec extends SparkSpec {
       StructField("threshold", DoubleType)))
   }
 
-  // production-stream columns a filter reads that its FIXTURE lacks —
-  // each entry is backed by the reference's own doctest adding the
-  // column manually (in_tns: filter.py:44 `withColumn("tns_fullname",
-  // lit(None))`)
-  private val productionOnly: Map[String, Set[String]] = Map(
-    "rubin.livestream.in_tns" -> Set("xm.tns_fullname"))
-
   test("every registered filter binds against its survey's fixture schema") {
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     FilterRegistry.all.foreach { case (name, _) =>
@@ -71,7 +64,6 @@ class AlertSchemasSpec extends SparkSpec {
         else if (name.startsWith("rubin.")) rubinSchema
         else ztfAugmented
       val missing = AlertSchemas.missingColumns(schema, name)
-        .filterNot(productionOnly.getOrElse(name, Set.empty))
       assert(missing.isEmpty,
         s"$name declares unresolvable columns: ${missing.mkString(", ")}")
       if (FilterRegistry.get(name).requiredColumns.isEmpty)
@@ -91,5 +83,26 @@ class AlertSchemasSpec extends SparkSpec {
       AlertSchemas.validate(thin, "ztf.livestream.sn_candidates")
     }
     assert(e.getMessage.contains("cannot bind"))
+  }
+
+  // hand-built frames, no fixture: the binding matches what the mask
+  // handles (a missing `xm.tns_fullname` degrades to no match)
+  test("in_tns binds on any xm struct and rejects a frame without xm") {
+    val name = "rubin.livestream.in_tns"
+    val noField = spark.sql("SELECT named_struct('ra', 1.0D) AS xm")
+    AlertSchemas.validate(noField, name)
+    assert(FilterRegistry.applyFilter(noField, name).count() === 0L)
+
+    val withField = spark.sql(
+      "SELECT named_struct('tns_fullname', 'SN 2024abc') AS xm UNION ALL " +
+        "SELECT named_struct('tns_fullname', CAST(NULL AS STRING))")
+    AlertSchemas.validate(withField, name)
+    assert(FilterRegistry.applyFilter(withField, name).count() === 1L)
+
+    val noXm = spark.sql("SELECT 1L AS diaSourceId")
+    val e = intercept[IllegalArgumentException] {
+      AlertSchemas.validate(noXm, name)
+    }
+    assert(e.getMessage.endsWith("missing columns xm"), e.getMessage)
   }
 }

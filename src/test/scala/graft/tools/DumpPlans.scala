@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import graft.filters.FilterRegistry
+import org.apache.spark.sql.graftbridge.ExpressionTree
 
 /** Diagnostic plan dumps. Two modes:
   *
@@ -12,10 +13,13 @@ import graft.filters.FilterRegistry
   *  - `filters [alertsDir]`: for every catalog filter, its unresolved mask
   *    expression and, when a directory of alert parquet is given, the
   *    optimized plan of `FilterRegistry.applyFilter` over it (or the error
-  *    it fails with), to plans/filters/<filter>.txt. Expression ids, plan
-  *    ids and lambda variable numbers are normalised, so two builds that
-  *    make the same masks and plans write the same bytes; a refactor of
-  *    the catalog is checked with `diff -r` of two dumps.
+  *    it fails with), to plans/filters/<filter>.txt.
+  *
+  * Both modes write normalised text: expression ids, plan ids, RDD ids,
+  * lambda variable numbers, identity hashes and the `File.scala:line` of
+  * a checkpoint's call site, so two builds that make the same masks and plans write the
+  * same bytes, and a refactor is checked with `diff -r` of two dumps
+  * (the same suffix on both sides, one tag each).
   *
   * Run:
   * {{{
@@ -35,11 +39,17 @@ object DumpPlans {
       StandardOpenOption.CREATE, StandardOpenOption.WRITE,
       StandardOpenOption.TRUNCATE_EXISTING)
 
-  /** Expression and plan ids, and the counters of lambda variables. */
+  /** Per-JVM counters (expression, plan and RDD ids, lambda variables),
+    * identity hashes (an array literal prints as `[J@1b2c3d4e`) and the
+    * source line an RDD was created at.
+    */
   private def normalise(s: String): String =
     s.replaceAll("#\\d+", "#N")
       .replaceAll("plan_id=\\d+", "plan_id=N")
-      .replaceAll("\\b(x|y|acc|left|right|key|value)_\\d+\\b", "$1_N")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+      .replaceAll("(?<=[\\w;])@[0-9a-f]{1,8}\\b", "@N")
+      .replaceAll("\\b(\\w+\\.scala):\\d+\\b", "$1:L")
+      .replaceAll("\\b(x|y|z|acc|left|right|key|value)_\\d+\\b", "$1_N")
 
   private def dumpFilters(alertsDir: Option[String]): Unit = {
     val spark = graft.Sessions.get()
@@ -52,7 +62,10 @@ object DumpPlans {
       catch { case e: Exception =>
         s"FAILED: ${e.getClass.getName}: ${e.getMessage}" }
     FilterRegistry.all.toSeq.sortBy(_._1).foreach { case (name, f) =>
-      val mask = orError(f.mask(input).toString)
+      // the Catalyst tree, not `Column.toString`: that prints the
+      // engine's own expressions as `columnnodeexpression()` without
+      // their children
+      val mask = orError(ExpressionTree.of(f.mask(input)).toString)
       val plan = alerts.fold("") { df =>
         val text = orError(FilterRegistry.applyFilter(df, name)
           .queryExecution.optimizedPlan.toString)
@@ -80,7 +93,7 @@ object DumpPlans {
           val df = fn(spark, sf)
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-          write(dir.resolve(s"${name}_$suffix.txt"), plan)
+          write(dir.resolve(s"${name}_$suffix.txt"), normalise(plan))
           val nExch = "Exchange".r.findAllIn(plan).size
           println(f"$name%-32s exchanges=$nExch%3d chars=${plan.length}")
         } catch { case e: Throwable =>
